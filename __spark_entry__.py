@@ -39,20 +39,9 @@ def entry(spark: SparkSession) -> DataFrame:
 def _udds_global_sketch(spark: SparkSession, sf_dir: str):
     """JVM fill path (Tungsten hash-agg histogram); bit-identical to the
     Arrow engine — see tests/test_spark_agg.py::test_jvm_engine_bit_parity."""
-    import numpy as np
+    from puddsketch_spark.spark.agg import udds_sketch_global_jvm
 
-    from puddsketch_spark.core import UDDSketch
-    from puddsketch_spark.spark.agg import udds_bucket_counts
-
-    li = _t(spark, sf_dir, "lineitem")
-    buckets = udds_bucket_counts(li, "l_extendedprice", (), _A).collect()
-    zero = sum(r["_bcnt"] for r in buckets if r["_bkey"] is None)
-    live = sorted((r["_bkey"], r["_bcnt"]) for r in buckets if r["_bkey"] is not None)
-    return UDDSketch(
-        initial_alpha=_A, m=0, zero_count=int(zero),
-        keys=np.array([k for k, _ in live], dtype=np.int64),
-        counts=np.array([c for _, c in live], dtype=np.int64),
-    )
+    return udds_sketch_global_jvm(_t(spark, sf_dir, "lineitem"), "l_extendedprice", _A, 0)
 
 
 def _udds_global(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,22 +369,12 @@ def _ks_drift_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.05 — an order of magnitude above the control). m=0 keys make the
     statistic a pure function of the bucket histograms, so DuckDB replays
     it bit-exactly."""
-    import numpy as np
-
-    from puddsketch_spark.core import UDDSketch
-    from puddsketch_spark.spark.agg import udds_bucket_counts
+    from puddsketch_spark.spark.agg import udds_sketch_global_jvm
 
     li = _t(spark, sf_dir, "lineitem")
 
-    def sketch_of(df) -> UDDSketch:
-        buckets = udds_bucket_counts(df, "l_extendedprice", (), _A).collect()
-        zero = sum(r["_bcnt"] for r in buckets if r["_bkey"] is None)
-        live = sorted((r["_bkey"], r["_bcnt"]) for r in buckets if r["_bkey"] is not None)
-        return UDDSketch(
-            initial_alpha=_A, m=0, zero_count=int(zero),
-            keys=np.array([k for k, _ in live], dtype=np.int64),
-            counts=np.array([c for _, c in live], dtype=np.int64),
-        )
+    def sketch_of(df):
+        return udds_sketch_global_jvm(df, "l_extendedprice", _A, 0)
 
     pairs = {
         "flag_A_vs_R": (
@@ -1029,20 +1008,9 @@ FROM kq
 
 def _events_global_sketch(spark: SparkSession, sf_dir: str) -> "UDDSketch":
     """Batch global UDD over events.value via the JVM fill path."""
-    import numpy as np
+    from puddsketch_spark.spark.agg import udds_sketch_global_jvm
 
-    from puddsketch_spark.core import UDDSketch
-    from puddsketch_spark.spark.agg import udds_bucket_counts
-
-    ev = _t(spark, sf_dir, "events")
-    buckets = udds_bucket_counts(ev, "value", (), _A).collect()
-    zero = sum(r["_bcnt"] for r in buckets if r["_bkey"] is None)
-    live = sorted((r["_bkey"], r["_bcnt"]) for r in buckets if r["_bkey"] is not None)
-    return UDDSketch(
-        initial_alpha=_A, m=0, zero_count=int(zero),
-        keys=np.array([k for k, _ in live], dtype=np.int64),
-        counts=np.array([c for _, c in live], dtype=np.int64),
-    )
+    return udds_sketch_global_jvm(_t(spark, sf_dir, "events"), "value", _A, 0)
 
 
 _STREAM_ROLLUP_SQL = f"""
@@ -2107,24 +2075,17 @@ def _ddsketch_ddog_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold to the bound per mode, then quantiles + the [q0, q1] accurate-range
     report (ParallelSketcher.cc:920-1028). The oracle replays the edge fold
     (excess bins merge into the boundary bin) and the rank walk bit-for-bit."""
-    import numpy as np
-
     from puddsketch_spark.core.ddsketch import DDSketchPair
-    from puddsketch_spark.spark.agg import udds_bucket_counts
+    from puddsketch_spark.spark.agg import udds_sketch_global_jvm
 
-    li = _t(spark, sf_dir, "lineitem")
-    buckets = udds_bucket_counts(li, "l_extendedprice", (), _A).collect()
-    live = sorted((r["_bkey"], r["_bcnt"]) for r in buckets if r["_bkey"] is not None)
-    keys = np.array([k for k, _ in live], dtype=np.int64)
-    counts = np.array([c for _, c in live], dtype=np.int64)
+    # prices are positive: the m=0 UDD histogram is the pair's positive store
+    hist = udds_sketch_global_jvm(_t(spark, sf_dir, "lineitem"), "l_extendedprice", _A, 0)
     rows = []
     qs = (0.01, 0.5, 0.9, 0.99)
     for mode in ("ddog_low", "ddog_high"):
-        sk = DDSketchPair(
-            initial_alpha=_A, m=_DDOG_BOUND, collapse_mode=mode,
-            pos_keys=keys.copy(), pos_counts=counts.copy(),
+        sk = DDSketchPair.from_bucket_table(
+            _A, _DDOG_BOUND, 0, hist.keys, hist.counts, collapse_mode=mode
         )
-        sk._enforce_bound()
         q0, q1 = sk.accurate_range()
         fence = sk.fence_pos
         for q in qs:

@@ -21,7 +21,7 @@ from dataclasses import dataclass, field, replace
 
 import numpy as np
 
-from .uddsketch import MIN_ADDRESSABLE, _ceil_div
+from .uddsketch import MIN_ADDRESSABLE, _ceil_div, _sorted_store
 
 __all__ = ["DDSketchPair"]
 
@@ -151,6 +151,37 @@ class DDSketchPair:
     @property
     def num_buckets(self) -> int:
         return int(self.pos_keys.size + self.neg_keys.size)
+
+    @classmethod
+    def from_bucket_table(
+        cls,
+        initial_alpha: float,
+        m: int,
+        zero_count: int,
+        pos_keys,
+        pos_counts,
+        neg_keys=_EMPTY,
+        neg_counts=_EMPTY,
+        min_value: float = float("nan"),
+        max_value: float = float("nan"),
+        collapse_mode: str = "uniform",
+    ) -> "DDSketchPair":
+        """Pair from bucket tables: the (key, count) rows of each store in
+        any order, the B* count and the value range. The bound is enforced
+        once on the assembled stores (a one-shot fold: the minimal-collapse
+        result for uniform mode, the single-batch ``update`` result for the
+        ddog modes)."""
+        pos_keys, pos_counts = _sorted_store(pos_keys, pos_counts)
+        neg_keys, neg_counts = _sorted_store(neg_keys, neg_counts)
+        sk = cls(
+            initial_alpha=initial_alpha, m=m, collapse_mode=collapse_mode,
+            zero_count=int(zero_count),
+            pos_keys=pos_keys, pos_counts=pos_counts,
+            neg_keys=neg_keys, neg_counts=neg_counts,
+            min_value=float(min_value), max_value=float(max_value),
+        )
+        sk._enforce_bound()
+        return sk
 
     # -- update --------------------------------------------------------------
     def update(self, values) -> "DDSketchPair":

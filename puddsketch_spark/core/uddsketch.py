@@ -51,6 +51,14 @@ def _ceil_div(keys: np.ndarray, twopow: int) -> np.ndarray:
     return -((-keys) // twopow)
 
 
+def _sorted_store(keys, counts) -> tuple[np.ndarray, np.ndarray]:
+    """Sorted int64 store from a (key, count) table with one row per key,
+    in any order."""
+    keys = np.asarray(keys, dtype=np.int64)
+    order = np.argsort(keys, kind="stable")
+    return keys[order], np.asarray(counts, dtype=np.int64)[order]
+
+
 def fast_log32(values: np.ndarray) -> np.ndarray:
     """The reference's approximate float32 natural log, vectorized
     (uddsketch.cpp:14-78): IEEE-754 exponent/mantissa split by bit ops, then
@@ -127,6 +135,21 @@ class UDDSketch:
     @property
     def num_buckets(self) -> int:
         return int(self.keys.size)
+
+    @classmethod
+    def from_bucket_table(
+        cls, initial_alpha: float, m: int, zero_count: int, keys, counts
+    ) -> "UDDSketch":
+        """Sketch from a bucket table — the (key, count) rows, one per key,
+        of a histogram fill such as the Spark JVM path's
+        ``groupBy(ceil(ln v / ln gamma)).count()``. ``keys`` may come in any
+        order; the m bound is enforced once on the assembled store, so the
+        result equals a single-batch ``update`` over the same values."""
+        keys, counts = _sorted_store(keys, counts)
+        sk = cls(initial_alpha=initial_alpha, m=m, zero_count=int(zero_count),
+                 keys=keys, counts=counts)
+        sk._enforce_bound()
+        return sk
 
     # -- update ------------------------------------------------------------
     def update(self, values: np.ndarray) -> "UDDSketch":

@@ -28,7 +28,7 @@ from typing import Callable, Iterable, Sequence
 import numpy as np
 import pandas as pd
 from pyspark import TaskContext
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -39,7 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..core.uddsketch import UDDSketch
+from ..core.ddsketch import DDSketchPair
+from ..core.uddsketch import MIN_ADDRESSABLE, UDDSketch
 
 __all__ = [
     "dd_bucket_counts",
@@ -55,6 +56,7 @@ __all__ = [
     "sketch_global",
     "quantile_table",
     "udds_quantiles",
+    "udds_sketch_global_jvm",
 ]
 
 # A sketch kernel is anything with: update(np.ndarray)->self, merge(other)->self,
@@ -62,26 +64,35 @@ __all__ = [
 # num_buckets / num_collapses (companion sketches report 0 collapses).
 SketchFactory = Callable[[], object]
 
-_METRIC_FIELDS = [
-    StructField("state", BinaryType(), False),
-    StructField("n", LongType(), False),
-    StructField("buckets", IntegerType(), False),
-    StructField("collapses", IntegerType(), False),
-    StructField("partition_id", IntegerType(), False),
-]
+def _state_fields(tail: str) -> list[StructField]:
+    """The state-row columns after the group keys: the blob, its metrics,
+    and ``tail`` (partition_id on partials, num_partials on merged states)."""
+    return [
+        StructField("state", BinaryType(), False),
+        StructField("n", LongType(), False),
+        StructField("buckets", IntegerType(), False),
+        StructField("collapses", IntegerType(), False),
+        StructField(tail, IntegerType(), False),
+    ]
+
+
+def _state_schema(
+    df: DataFrame, group_cols: Sequence[str], tail: str = "num_partials"
+) -> StructType:
+    """State-row schema: ``df``'s group-key fields in ``group_cols`` order,
+    then _state_fields(tail)."""
+    by_name = {f.name: f for f in df.schema.fields}
+    return StructType([by_name[c] for c in group_cols] + _state_fields(tail))
 
 
 def _metrics_of(sk) -> tuple[int, int, int]:
+    # DD pair-store folds count as collapses too: they widen the error
+    # window just as a uniform collapse widens alpha
     return (
         int(getattr(sk, "count", 0)),
         int(getattr(sk, "num_buckets", 0)),
-        int(getattr(sk, "num_collapses", 0)),
+        int(getattr(sk, "num_collapses", 0)) + int(getattr(sk, "pair_collapses", 0)),
     )
-
-
-def _partial_schema(df: DataFrame, group_cols: Sequence[str]) -> StructType:
-    by_name = {f.name: f for f in df.schema.fields}
-    return StructType([by_name[c] for c in group_cols] + _METRIC_FIELDS)
 
 
 def _kernel_update_weighted(sk, vals: np.ndarray, w: np.ndarray):
@@ -126,7 +137,7 @@ def partial_sketches(
     (/root/reference/ParallelDDSketch/src/ParallelSketcher.cc:662-708).
     """
     group_cols = list(group_cols)
-    schema = _partial_schema(df, group_cols)
+    schema = _state_schema(df, group_cols, "partition_id")
     sel = [*group_cols, value_col] + ([weight_col] if weight_col else [])
     pruned = df.select(*sel)
     tname = pruned.schema[value_col].dataType.typeName()
@@ -247,6 +258,20 @@ def _null_safe(k):
     return k
 
 
+def _state_row(
+    pdf: pd.DataFrame, group_cols: Sequence[str], schema: StructType, sk,
+    num_partials: int,
+) -> pd.DataFrame:
+    """The one state row of the group held in ``pdf``. _null_safe: pandas
+    encodes a NULL group key as NaN/NaT; emitting that into a non-float
+    Arrow field fails the stage."""
+    key_vals = tuple(_null_safe(pdf[g].iloc[0]) for g in group_cols)
+    return pd.DataFrame(
+        [key_vals + (sk.to_bytes(), *_metrics_of(sk), num_partials)],
+        columns=schema.fieldNames(),
+    )
+
+
 def merge_grouped(
     partials: DataFrame,
     group_cols: Sequence[str],
@@ -258,34 +283,17 @@ def merge_grouped(
     valid because kernel merge is commutative/associative (property-tested).
     """
     group_cols = list(group_cols)
-    out_fields = [f for f in partials.schema.fields if f.name in group_cols]
-    schema = StructType(
-        out_fields
-        + [
-            StructField("state", BinaryType(), False),
-            StructField("n", LongType(), False),
-            StructField("buckets", IntegerType(), False),
-            StructField("collapses", IntegerType(), False),
-            StructField("num_partials", IntegerType(), False),
-        ]
-    )
+    if not group_cols:
+        raise ValueError("merge_grouped needs group_cols; use sketch_global for global")
+    schema = _state_schema(partials, group_cols)
 
     def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         states = pdf["state"]
         sk = from_bytes(states.iloc[0])
         for blob in states.iloc[1:]:
             sk = sk.merge(from_bytes(blob))
-        n, b, c = _metrics_of(sk)
-        # _null_safe: pandas encodes a NULL group key as NaN/NaT; emitting
-        # that into a non-float Arrow field fails the stage
-        key_vals = [_null_safe(pdf[c_].iloc[0]) for c_ in group_cols]
-        return pd.DataFrame(
-            [tuple(key_vals) + (sk.to_bytes(), n, b, c, len(pdf))],
-            columns=[f.name for f in schema.fields],
-        )
+        return _state_row(pdf, group_cols, schema, sk, len(pdf))
 
-    if not group_cols:
-        raise ValueError("merge_grouped needs group_cols; use sketch_global for global")
     return partials.groupBy(*group_cols).applyInPandas(merge_fn, schema=schema)
 
 
@@ -380,12 +388,18 @@ def rollup_grouping_sets(
     if not sets:
         raise ValueError("rollup_grouping_sets: no grouping sets")
     all_cols: list[str] = []
+    seen: set[frozenset] = set()
     for s in sets:
         for c in s:
             if c not in all_cols:
                 all_cols.append(c)
         if len(set(s)) != len(s):
             raise ValueError(f"duplicate column in grouping set {s}")
+        # a repeated set (in any column order) would share one grouping_id
+        # and merge its cells twice over
+        if frozenset(s) in seen:
+            raise ValueError(f"duplicate grouping set {s}")
+        seen.add(frozenset(s))
     missing = [c for c in all_cols if c not in states.columns]
     if missing:
         raise ValueError(f"states table lacks grouping columns {missing}")
@@ -476,6 +490,13 @@ def sketch_grouped(
     (their compression/shrink sees different intermediate states, so
     centroids/counters can differ while the published error bounds still
     hold); rank-compaction kernels (KLL, REQ) reject it loudly.
+
+    When collapses happen: a bounded UDD kernel (m > 0) may collapse
+    *during* this fill, per partition and again at each merge, while the
+    JVM fill (sketch_grouped_jvm) assembles each group's bucket table and
+    collapses once. Both satisfy the alpha bound, but with collapses the
+    bucket sets can differ; with none (m=0 or a large m) the two are
+    bit-identical.
     """
     fb = from_bytes or _default_from_bytes(factory)
     if pre_aggregate:
@@ -571,6 +592,18 @@ def quantile_table(
 # per-rank fill loop (pudds.cpp:150-153) and is the scale path: per-row work
 # never leaves the JVM; shuffle moves bucket counts, not rows.
 # --------------------------------------------------------------------------
+def _log_bucket_key(mag: Column, alpha: float) -> Column:
+    """BIGINT ceil(ln(mag) / ln gamma), gamma = (1+alpha)/(1-alpha), and NULL
+    below MIN_ADDRESSABLE (the zero bucket, uddsketch.cpp:176-179): the
+    kernels' non-compat key function as a Catalyst expression. The SQL
+    oracles replay this exact expression, so keep it byte-for-byte."""
+    gamma0 = (1.0 + alpha) / (1.0 - alpha)
+    log_gamma = float(np.log(gamma0))
+    return F.when(
+        mag >= MIN_ADDRESSABLE, F.ceil(F.log(mag) / F.lit(log_gamma)).cast("long")
+    )
+
+
 def udds_bucket_counts(
     df: DataFrame, value_col: str, group_cols: Sequence[str], alpha: float
 ) -> DataFrame:
@@ -579,72 +612,59 @@ def udds_bucket_counts(
     _bkey NULL encodes the zero bucket (v < MIN_ADDRESSABLE, incl. 0 and
     negatives, matching uddsketch.cpp:176-179); NaNs are dropped.
     """
-    from ..core.uddsketch import MIN_ADDRESSABLE
-
-    gamma0 = (1.0 + alpha) / (1.0 - alpha)
-    log_gamma = float(np.log(gamma0))
     v = F.col(value_col)
-    key = F.when(
-        v >= MIN_ADDRESSABLE, F.ceil(F.log(v) / F.lit(log_gamma)).cast("long")
-    )  # NULL -> zero bucket
     return (
         df.select(*group_cols, v.alias(value_col))
         .where(~F.isnan(v.cast("double")) & v.isNotNull())
-        .groupBy(*group_cols, key.alias("_bkey"))
+        .groupBy(*group_cols, _log_bucket_key(v, alpha).alias("_bkey"))
         .agg(F.count(F.lit(1)).alias("_bcnt"))
     )
 
 
-def udds_states_from_buckets(
-    buckets: DataFrame, group_cols: Sequence[str], alpha: float, m: int
-) -> DataFrame:
-    """Assemble UDDSketch states from the JVM bucket table (per group).
-
-    Input per group is <= |distinct keys| rows (a few thousand); collapse to
-    the m bound happens here, in one vectorized pass.
-    """
-    group_cols = list(group_cols)
-    out_fields = [f for f in buckets.schema.fields if f.name in group_cols]
-    schema = StructType(
-        out_fields
-        + [
-            StructField("state", BinaryType(), False),
-            StructField("n", LongType(), False),
-            StructField("buckets", IntegerType(), False),
-            StructField("collapses", IntegerType(), False),
-            StructField("num_partials", IntegerType(), False),
-        ]
+def _udds_of(table: pd.DataFrame, alpha: float, m: int) -> UDDSketch:
+    """UDDSketch from a (_bkey, _bcnt) bucket table; NULL _bkey is the zero
+    bucket. Every JVM UDD fill, grouped or global, assembles here."""
+    zero = table["_bkey"].isna()
+    live = table[~zero]
+    return UDDSketch.from_bucket_table(
+        alpha, m, int(table.loc[zero, "_bcnt"].sum()),
+        live["_bkey"].to_numpy(dtype=np.int64),
+        live["_bcnt"].to_numpy(dtype=np.int64),
     )
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf["_bkey"]
-        zero = int(pdf.loc[keys.isna(), "_bcnt"].sum())
-        live = pdf.loc[keys.notna()]
-        k = live["_bkey"].to_numpy(dtype=np.int64)
-        c = live["_bcnt"].to_numpy(dtype=np.int64)
-        order = np.argsort(k, kind="stable")
-        sk = UDDSketch(
-            initial_alpha=alpha, m=m, zero_count=zero, keys=k[order], counts=c[order]
-        )
-        sk._enforce_bound()
-        key_vals = [_null_safe(pdf[g].iloc[0]) for g in group_cols]
-        return pd.DataFrame(
-            [tuple(key_vals) + (sk.to_bytes(), sk.count, sk.num_buckets, sk.num_collapses, len(pdf))],
-            columns=[f.name for f in schema.fields],
-        )
-
-    if not group_cols:
-        raise ValueError("udds_states_from_buckets needs group_cols; "
-                         "the global path collects the bucket table directly")
-    return buckets.groupBy(*group_cols).applyInPandas(assemble, schema=schema)
 
 
 def sketch_grouped_jvm(
     df: DataFrame, value_col: str, group_cols: Sequence[str], alpha: float, m: int
 ) -> DataFrame:
-    """UDDSketch states via the JVM fill path (Tungsten hash agg fill)."""
-    b = udds_bucket_counts(df, value_col, group_cols, alpha)
-    return udds_states_from_buckets(b, group_cols, alpha, m)
+    """UDDSketch states via the JVM fill path: DataFrame[group..., state, n,
+    buckets, collapses, num_partials].
+
+    The fill is a Tungsten hash aggregation (udds_bucket_counts); one
+    applyInPandas stage then assembles each group's <= |distinct keys|-row
+    bucket table and collapses it to the m bound once. ``num_partials`` is
+    the group's bucket-row count.
+    """
+    group_cols = list(group_cols)
+    if not group_cols:
+        raise ValueError("sketch_grouped_jvm needs group_cols; "
+                         "use udds_sketch_global_jvm for global")
+    buckets = udds_bucket_counts(df, value_col, group_cols, alpha)
+    schema = _state_schema(buckets, group_cols)
+
+    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _state_row(pdf, group_cols, schema, _udds_of(pdf, alpha, m), len(pdf))
+
+    return buckets.groupBy(*group_cols).applyInPandas(assemble, schema=schema)
+
+
+def udds_sketch_global_jvm(
+    df: DataFrame, value_col: str, alpha: float, m: int
+) -> UDDSketch:
+    """Global UDDSketch via the JVM fill (driver-side object): the Tungsten
+    histogram's <= |distinct keys| rows are collected and assembled once.
+    With m=0 it is bucket-identical to sketch_global's Arrow fill."""
+    rows = udds_bucket_counts(df, value_col, (), alpha).collect()
+    return _udds_of(pd.DataFrame(rows, columns=["_bkey", "_bcnt"]), alpha, m)
 
 
 def udds_quantile_table_jvm(
@@ -655,16 +675,16 @@ def udds_quantile_table_jvm(
     alpha: float,
     m: int,
 ) -> DataFrame:
-    """Fused JVM path: bucket histogram (Tungsten) -> ONE applyInPandas stage
-    assembling the sketch AND finalizing quantiles — a single Python stage
-    over the tiny bucket table (half the Python round-trips of
-    sketch_grouped_jvm + quantile_table; same results)."""
+    """Fused JVM path: DataFrame[group..., q, est, n]. Bucket histogram
+    (Tungsten) -> ONE applyInPandas stage assembling each group's sketch AND
+    finalizing its quantiles — a single Python stage over the tiny bucket
+    table (half the Python round-trips of sketch_grouped_jvm +
+    quantile_table; same results)."""
     group_cols = list(group_cols)
     qs = [float(q) for q in qs]
     buckets = udds_bucket_counts(df, value_col, group_cols, alpha)
-    out_fields = [f for f in buckets.schema.fields if f.name in group_cols]
     schema = StructType(
-        out_fields
+        [buckets.schema[g] for g in group_cols]
         + [
             StructField("q", DoubleType(), False),
             StructField("est", DoubleType(), False),
@@ -673,18 +693,10 @@ def udds_quantile_table_jvm(
     )
 
     def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf["_bkey"]
-        zero = int(pdf.loc[keys.isna(), "_bcnt"].sum())
-        live = pdf.loc[keys.notna()]
-        k = live["_bkey"].to_numpy(dtype=np.int64)
-        c = live["_bcnt"].to_numpy(dtype=np.int64)
-        order = np.argsort(k, kind="stable")
-        sk = UDDSketch(initial_alpha=alpha, m=m, zero_count=zero,
-                       keys=k[order], counts=c[order])
-        sk._enforce_bound()
+        sk = _udds_of(pdf, alpha, m)
         key_vals = tuple(_null_safe(pdf[g].iloc[0]) for g in group_cols)
         rows = [key_vals + (q, float(sk.quantile(q)), sk.count) for q in qs]
-        return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+        return pd.DataFrame(rows, columns=schema.fieldNames())
 
     return buckets.groupBy(*group_cols).applyInPandas(finalize, schema=schema)
 
@@ -725,10 +737,8 @@ def udds_quantiles_multi(
         ).alias("_fv"),
     ).select(*group_cols, F.col("_fv.feature").alias("feature"),
              F.col("_fv._value").alias("_value"))
-    gcols = ["feature", *group_cols]
-    merged = sketch_grouped_jvm(stacked, "_value", gcols, alpha, m)
-    return quantile_table(merged, gcols, list(qs), UDDSketch.from_bytes,
-                          extra_cols=["n"])
+    return udds_quantile_table_jvm(stacked, "_value", ["feature", *group_cols],
+                                   list(qs), alpha, m)
 
 
 def udds_quantiles(
@@ -738,56 +748,29 @@ def udds_quantiles(
     qs: Iterable[float] = (0.5, 0.9, 0.99, 0.999),
     alpha: float = 0.01,
     m: int = 200,
-    engine: str = "jvm",
-    pre_aggregate: bool = False,
 ) -> DataFrame:
-    """One-call UDDSketch quantile summary, grouped or global.
-
-    ``pre_aggregate`` applies to engine="python" only (the JVM engine IS a
-    pre-aggregation — its Tungsten histogram already ships distinct bucket
-    keys); see sketch_grouped.
+    """One-call UDDSketch quantile summary: DataFrame[group..., q, est]
+    (DataFrame[q, est] when global).
 
     Flagship API: p50/p90/p99/p999 of a numeric feature grouped by e.g.
     role/tool, at relative-error alpha with memory bounded by m buckets.
 
-    engine="jvm" (default): fill = Tungsten hash aggregation on the Catalyst
-    bucket-key expression; Python touches only the bucket table. Identical
-    results to engine="python" (the Arrow mapInPandas/treeReduce path, which
-    also generalizes to the non-SQL-expressible companion sketches).
-
-    Note: with m small enough to trigger collapses, the python path may
-    collapse *during* the fill (per partition), while the jvm path collapses
-    once globally — both satisfy the alpha bound, but bucket sets can differ;
-    with no collapse (m=0 or large m) the two are bit-identical.
+    The fill is a Tungsten hash aggregation on the Catalyst bucket-key
+    expression; Python touches only the bucket table. Grouped, one
+    applyInPandas stage assembles and finalizes each group
+    (udds_quantile_table_jvm); global, the bucket table is assembled on the
+    driver (udds_sketch_global_jvm). For a state table to save, merge or
+    roll up, use sketch_grouped_jvm; for compat=True keys or the other
+    kernels, the Arrow fill sketch_grouped / sketch_global.
     """
     qs = list(qs)
-    if engine == "jvm":
-        if group_cols:
-            merged = sketch_grouped_jvm(df, value_col, group_cols, alpha, m)
-            return quantile_table(merged, group_cols, qs, UDDSketch.from_bytes)
-        buckets = udds_bucket_counts(df, value_col, (), alpha).collect()
-        zero = sum(r["_bcnt"] for r in buckets if r["_bkey"] is None)
-        live = sorted((r["_bkey"], r["_bcnt"]) for r in buckets if r["_bkey"] is not None)
-        sk = UDDSketch(
-            initial_alpha=alpha,
-            m=m,
-            zero_count=int(zero),
-            keys=np.array([k for k, _ in live], dtype=np.int64),
-            counts=np.array([c for _, c in live], dtype=np.int64),
-        )
-        sk._enforce_bound()
-        return df.sparkSession.createDataFrame(
-            [(float(q), float(sk.quantile(q))) for q in qs], schema="q double, est double"
-        )
-    factory = lambda: UDDSketch(initial_alpha=alpha, m=m)  # noqa: E731
     if group_cols:
-        merged = sketch_grouped(df, value_col, group_cols, factory,
-                                UDDSketch.from_bytes, pre_aggregate=pre_aggregate)
-        return quantile_table(merged, group_cols, qs, UDDSketch.from_bytes)
-    sk = sketch_global(df, value_col, factory, UDDSketch.from_bytes,
-                       pre_aggregate=pre_aggregate)
-    spark = df.sparkSession
-    return spark.createDataFrame(
+        group_cols = list(group_cols)
+        return udds_quantile_table_jvm(
+            df, value_col, group_cols, qs, alpha, m
+        ).select(*group_cols, "q", "est")
+    sk = udds_sketch_global_jvm(df, value_col, alpha, m)
+    return df.sparkSession.createDataFrame(
         [(float(q), float(sk.quantile(q))) for q in qs], schema="q double, est double"
     )
 
@@ -801,25 +784,34 @@ def dd_bucket_counts(
     bucket: |v| < MIN_ADDRESSABLE); keys are ceil(ln(|v|)/ln gamma), the
     same libm expression the numpy kernel uses (non-compat path), so the
     assembled pair is bucket-identical to an Arrow fill at m=0."""
-    from ..core.uddsketch import MIN_ADDRESSABLE
-
-    gamma0 = (1.0 + alpha) / (1.0 - alpha)
-    log_gamma = float(np.log(gamma0))
     v = F.col(value_col).cast("double")
     sign = (
         F.when(F.abs(v) < MIN_ADDRESSABLE, F.lit(0))
         .when(v > 0, F.lit(1))
         .otherwise(F.lit(-1))
     )
-    key = F.when(
-        F.abs(v) >= MIN_ADDRESSABLE,
-        F.ceil(F.log(F.abs(v)) / F.lit(log_gamma)).cast("long"),
-    ).otherwise(F.lit(0))
+    key = _log_bucket_key(F.abs(v), alpha).otherwise(F.lit(0))
     return (
         df.select(*group_cols, v.alias(value_col))
         .where(~F.isnan(v) & v.isNotNull())
         .groupBy(*group_cols, sign.alias("_sign"), key.alias("_bkey"))
         .agg(F.count(F.lit(1)).alias("_bcnt"))
+    )
+
+
+def _dd_of(
+    table: pd.DataFrame, alpha: float, m: int, collapse_mode: str,
+    lo: float, hi: float,
+) -> DDSketchPair:
+    """DDSketchPair from a signed (_sign, _bkey, _bcnt) bucket table and the
+    value range [lo, hi]; _sign 0 is B*. Every JVM DD fill assembles here."""
+    def store(sign: int):
+        part = table[table["_sign"] == sign]
+        return part["_bkey"].to_numpy(dtype=np.int64), part["_bcnt"].to_numpy(dtype=np.int64)
+
+    return DDSketchPair.from_bucket_table(
+        alpha, m, int(table.loc[table["_sign"] == 0, "_bcnt"].sum()),
+        *store(1), *store(-1), lo, hi, collapse_mode,
     )
 
 
@@ -841,12 +833,7 @@ def dd_sketch_global_jvm(
     incremental fill's, so use the Arrow engine when reference fold-order
     parity matters. Not available for compat=True (glibc fast-log keys are
     Python-side)."""
-    from ..core.ddsketch import DDSketchPair
-
     rows = dd_bucket_counts(df, value_col, (), alpha).collect()
-    zero = sum(r["_bcnt"] for r in rows if r["_sign"] == 0)
-    pos = sorted((r["_bkey"], r["_bcnt"]) for r in rows if r["_sign"] == 1)
-    neg = sorted((r["_bkey"], r["_bcnt"]) for r in rows if r["_sign"] == -1)
     v = F.col(value_col).cast("double")
     mm = (
         df.select(v.alias("v"))
@@ -854,20 +841,9 @@ def dd_sketch_global_jvm(
         .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
         .first()
     )
-    sk = DDSketchPair(
-        initial_alpha=alpha,
-        m=m,
-        collapse_mode=collapse_mode,
-        zero_count=int(zero),
-        pos_keys=np.array([k for k, _ in pos], dtype=np.int64),
-        pos_counts=np.array([c for _, c in pos], dtype=np.int64),
-        neg_keys=np.array([k for k, _ in neg], dtype=np.int64),
-        neg_counts=np.array([c for _, c in neg], dtype=np.int64),
-        min_value=float(mm["lo"]) if mm["lo"] is not None else float("nan"),
-        max_value=float(mm["hi"]) if mm["hi"] is not None else float("nan"),
-    )
-    sk._enforce_bound()
-    return sk
+    lo, hi = (float("nan") if x is None else x for x in mm)
+    return _dd_of(pd.DataFrame(rows, columns=["_sign", "_bkey", "_bcnt"]),
+                  alpha, m, collapse_mode, lo, hi)
 
 
 def dd_states_grouped_jvm(
@@ -885,8 +861,6 @@ def dd_states_grouped_jvm(
     signed bucket table plus a min/max row, assembled and bound-enforced in
     one vectorized pass (see dd_sketch_global_jvm for the one-shot-fold
     caveat on ddog modes with m > 0)."""
-    from ..core.ddsketch import DDSketchPair
-
     group_cols = list(group_cols)
     if not group_cols:
         raise ValueError("dd_states_grouped_jvm needs group_cols; "
@@ -908,40 +882,11 @@ def dd_states_grouped_jvm(
         clause = buckets[c].eqNullSafe(F.col(f"__mm_{c}"))
         cond = clause if cond is None else (cond & clause)
     joined = buckets.join(mm_r, cond).drop(*[f"__mm_{c}" for c in group_cols])
-    out_fields = [f for f in joined.schema.fields if f.name in group_cols]
-    schema = StructType(
-        out_fields
-        + [
-            StructField("state", BinaryType(), False),
-            StructField("n", LongType(), False),
-            StructField("buckets", IntegerType(), False),
-            StructField("collapses", IntegerType(), False),
-            StructField("num_partials", IntegerType(), False),
-        ]
-    )
+    schema = _state_schema(joined, group_cols)
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        zero = int(pdf.loc[pdf["_sign"] == 0, "_bcnt"].sum())
-        pos = pdf[pdf["_sign"] == 1].sort_values("_bkey")
-        neg = pdf[pdf["_sign"] == -1].sort_values("_bkey")
-        sk = DDSketchPair(
-            initial_alpha=alpha,
-            m=m,
-            collapse_mode=collapse_mode,
-            zero_count=zero,
-            pos_keys=pos["_bkey"].to_numpy(dtype=np.int64),
-            pos_counts=pos["_bcnt"].to_numpy(dtype=np.int64),
-            neg_keys=neg["_bkey"].to_numpy(dtype=np.int64),
-            neg_counts=neg["_bcnt"].to_numpy(dtype=np.int64),
-            min_value=float(pdf["_lo"].iloc[0]),
-            max_value=float(pdf["_hi"].iloc[0]),
-        )
-        sk._enforce_bound()
-        key_vals = [_null_safe(pdf[c].iloc[0]) for c in group_cols]
-        return pd.DataFrame(
-            [tuple(key_vals) + (sk.to_bytes(), sk.count, sk.num_buckets,
-                                sk.num_collapses + sk.pair_collapses, 1)],
-            columns=[f.name for f in schema.fields],
-        )
+        sk = _dd_of(pdf, alpha, m, collapse_mode,
+                    pdf["_lo"].iloc[0], pdf["_hi"].iloc[0])
+        return _state_row(pdf, group_cols, schema, sk, 1)
 
     return joined.groupBy(*group_cols).applyInPandas(assemble, schema=schema)

@@ -189,7 +189,7 @@ def filter_above_quantile(
     the deterministic bucket-walk value, so the whole operator is
     SQL-replayable bit-exactly.
     """
-    from .agg import quantile_table, sketch_grouped_jvm, udds_quantiles
+    from .agg import udds_quantile_table_jvm, udds_sketch_global_jvm
 
     group_cols = list(group_cols)
     # Spark sorts NaN ABOVE every number, so `NaN > threshold` is TRUE —
@@ -201,15 +201,11 @@ def filter_above_quantile(
         else (lambda c, t: not_nan & (c >= t))
     )
     if not group_cols:
-        est = udds_quantiles(df, value_col, (), [q], alpha, m, engine="jvm")
-        thr = float(est.first()["est"])
+        thr = float(udds_sketch_global_jvm(df, value_col, alpha, m).quantile(q))
         return df.where(cmp(F.col(value_col), F.lit(thr)))
-    merged = sketch_grouped_jvm(df, value_col, group_cols, alpha, m)
-    from ..core.uddsketch import UDDSketch
-
-    thresholds = quantile_table(merged, group_cols, [q], UDDSketch.from_bytes).select(
-        *group_cols, F.col("est").alias("_thr")
-    )
+    thresholds = udds_quantile_table_jvm(
+        df, value_col, group_cols, [q], alpha, m
+    ).select(*group_cols, F.col("est").alias("_thr"))
     return (
         _null_safe_broadcast_join(df, thresholds, group_cols)
         .where(cmp(F.col(value_col), F.col("_thr")))
@@ -237,10 +233,7 @@ def with_quantile_rank(
     MIN_ADDRESSABLE, incl. negatives) get zero_mass / n; NaN/NULL values
     get NULL rank.
     """
-    import numpy as np
-
-    from ..core.uddsketch import MIN_ADDRESSABLE
-    from .agg import udds_bucket_counts
+    from .agg import _log_bucket_key, udds_bucket_counts
 
     group_cols = list(group_cols)
     hist = udds_bucket_counts(df, value_col, group_cols, alpha)
@@ -261,14 +254,9 @@ def with_quantile_rank(
         (F.sum("_bcnt").over(wk) / F.sum("_bcnt").over(wn)).alias("_qrank"),
     )
 
-    gamma0 = (1.0 + alpha) / (1.0 - alpha)
-    log_gamma = float(np.log(gamma0))
     v = F.col(value_col).cast("double")
-    key = F.when(
-        v >= MIN_ADDRESSABLE, F.ceil(F.log(v) / F.lit(log_gamma)).cast("long")
-    )
     joined = _null_safe_broadcast_join(
-        df.withColumn("_bkey", F.coalesce(key, F.lit(_ZSENT))),
+        df.withColumn("_bkey", F.coalesce(_log_bucket_key(v, alpha), F.lit(_ZSENT))),
         cdf_tbl,
         group_cols + ["_bkey"],
         "left",

@@ -30,9 +30,10 @@ Scale note (documented, deliberate): a grouped-agg pandas UDAF has NO
 partial aggregation — Spark shuffles the group's RAW rows to one task
 and materializes them in memory (pyspark.sql.functions.pandas_udf docs).
 ``{name}_sketch`` over a raw 10^12-row table is therefore the
-convenience path only; the two-stage fills (``sketch_grouped_jvm`` /
-``sketch_grouped`` with map-side partials, spark/agg.py) remain the
-100 TB fill path. Measured (r7, 2M turns x 12 groups, local[32],
+convenience path only; the fills with map-side partial aggregation
+(spark/agg.py: the Tungsten bucket histogram behind ``udds_quantiles`` /
+``sketch_grouped_jvm``, the Arrow partials of ``sketch_grouped``) remain
+the 100 TB fill path. Measured (r7, 2M turns x 12 groups, local[32],
 alternating arms, median of 5): SQL grouped-agg fill 0.68 s vs
 two-stage Arrow 1.05 s vs fused JVM ``udds_quantile_table_jvm`` 0.61 s —
 locally the raw-row shuffle is ~60 MB and the UDAF's single Python
@@ -41,7 +42,7 @@ about local wall time: it is about shuffle bytes. The grouped-agg fill
 ships n raw rows across the exchange where the two-stage path ships one
 KB-scale partial per (group x partition); at cluster scale that ratio,
 not per-stage overhead, is the cost. The intended big-data SQL idiom
-is: fill states with the two-stage API (or a previous ``{name}_sketch``
+is: fill states with those agg.py fills (or a previous ``{name}_sketch``
 at finer grain), save the state table, then do all SQL-side regrouping
 with ``{name}_merge`` + extractors — blobs only, never raw rows.
 

@@ -145,6 +145,7 @@ def main(argv=None) -> int:
     from puddsketch_spark.spark.agg import (
         merge_grouped,
         quantile_table,
+        sketch_global,
         sketch_grouped,
         sketch_grouped_jvm,
         udds_quantiles,
@@ -301,8 +302,10 @@ def main(argv=None) -> int:
         elif args.engine == "jvm" and group:
             merged = sketch_grouped_jvm(df, args.feature, group, args.alpha, args.max_buckets)
             out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
-        elif sets is not None and group:
-            # the arrow-engine rollup path also needs the state table
+        elif args.engine == "jvm":
+            out = udds_quantiles(df, args.feature, (), args.quantiles,
+                                 args.alpha, args.max_buckets)
+        elif group:
             merged = sketch_grouped(
                 df, args.feature, group,
                 lambda: UDDSketch(initial_alpha=args.alpha, m=args.max_buckets),
@@ -310,13 +313,17 @@ def main(argv=None) -> int:
             )
             out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
         else:
-            out = udds_quantiles(df, args.feature, group, args.quantiles,
-                                 args.alpha, args.max_buckets,
-                                 engine="jvm" if args.engine == "jvm" else "python",
-                                 pre_aggregate=args.pre_aggregate)
+            sk = sketch_global(
+                df, args.feature,
+                lambda: UDDSketch(initial_alpha=args.alpha, m=args.max_buckets),
+                UDDSketch.from_bytes, pre_aggregate=args.pre_aggregate,
+            )
+            out = spark.createDataFrame(
+                [(float(q), float(sk.quantile(q))) for q in args.quantiles],
+                "q double, est double",
+            )
     elif args.sketch in ("hll", "theta"):
         from puddsketch_spark.core import HLLSketch, ThetaSketch
-        from puddsketch_spark.spark.agg import sketch_global
 
         kernel = HLLSketch if args.sketch == "hll" else ThetaSketch
         if group:
@@ -337,7 +344,6 @@ def main(argv=None) -> int:
                 [(int(round(sk.estimate())),)], "distinct_est long")
     elif args.sketch == "moments":
         from puddsketch_spark.core import MomentsSketch
-        from puddsketch_spark.spark.agg import sketch_global
         from puddsketch_spark.spark.sketches import moments_stats, moments_table
 
         if group:

@@ -243,6 +243,27 @@ def test_ddog_minmax_tracking_and_serde():
     assert m.min_value == v.min() and m.max_value == (v + 100).max()
 
 
+@pytest.mark.parametrize("mode", ["uniform", "ddog_low", "ddog_high"])
+def test_from_bucket_table_equals_single_batch_update(mode):
+    """Unsorted signed bucket tables + B* + min/max assemble to the
+    single-batch update() state, for every collapse mode at a folding m."""
+    rng = np.random.default_rng(21)
+    v = np.concatenate([rng.normal(0, 50, 4000), np.zeros(7)])
+    table = DDSketchPair(0.01, m=0).update(v)
+    pp = rng.permutation(table.pos_keys.size)
+    pn = rng.permutation(table.neg_keys.size)
+    sk = DDSketchPair.from_bucket_table(
+        0.01, 8, table.zero_count,
+        table.pos_keys[pp], table.pos_counts[pp],
+        table.neg_keys[pn], table.neg_counts[pn],
+        v.min(), v.max(), mode,
+    )
+    want = DDSketchPair(0.01, m=8, collapse_mode=mode).update(v)
+    assert want.num_collapses + want.pair_collapses > 0 and want.zero_count == 7
+    # the blob carries stores, B*, folds, fences and min/max
+    assert sk.to_bytes() == want.to_bytes()
+
+
 def test_ddog_mode_mismatch_raises():
     with pytest.raises(ValueError, match="collapse modes"):
         DDSketchPair(0.01).merge(DDSketchPair(0.01, collapse_mode="ddog_low"))

@@ -2,8 +2,9 @@
 job calls spark.stop(), so it must not share the test session).
 
 Covers: --rollup on a fresh fill (+ --save-states), --grouping-sets on
---from-states (no rescan) with bit-identical global estimates, and the
-bad-column refusal.
+--from-states (no rescan) with bit-identical global estimates, the
+bad-column refusal, and --sketch udds estimates equal under --engine jvm
+and --engine arrow.
 """
 
 import json
@@ -67,3 +68,23 @@ def test_sketch_job_rollup_and_from_states_grouping_sets(tmp_path):
     ], timeout=120)
     assert proc3.returncode != 0
     assert "not in --group-by" in proc3.stderr
+
+
+def test_sketch_job_udds_engines_agree():
+    """--sketch udds at --max-buckets 0: the JVM fill and the Arrow fill
+    give identical estimates, grouped and global."""
+    def estimates(engine, group):
+        proc = _run([
+            "--generate", "20000", "--seed", "5", "--feature", "text_len",
+            "--sketch", "udds", "--engine", engine, "--max-buckets", "0",
+            "--quantiles", "0.1", "0.5", "0.99", "--group-by", *group,
+        ])
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        rows = [json.loads(ln) for ln in proc.stdout.strip().splitlines()
+                if ln.startswith("{")]
+        return {(tuple(r[g] for g in group), r["q"]): r["est"] for r in rows}
+
+    for group in (["role"], []):
+        jvm = estimates("jvm", group)
+        assert len(jvm) >= 3  # every quantile of at least one group
+        assert jvm == estimates("arrow", group), group

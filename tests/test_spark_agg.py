@@ -9,6 +9,7 @@ from puddsketch_spark.core import UDDSketch
 from puddsketch_spark.datagen import transcripts
 from puddsketch_spark.spark.agg import (
     partial_sketches,
+    quantile_table,
     sketch_global,
     sketch_grouped,
     udds_quantiles,
@@ -177,6 +178,12 @@ def test_rollup_states_parquet_roundtrip(spark, tdf):
             assert sk.same_buckets(by_role[role]), role
             assert sk.count == by_role[role].count
 
+        # group keys listed in another order than the table's columns: each
+        # key value must stay under its own column
+        swapped = rollup_states(stored, ["tool", "role"], UDDSketch.from_bytes)
+        assert {(r.role, r.tool) for r in swapped.collect()} == {
+            (r.role, r.tool) for r in stored.collect()}
+
         # rollup to global
         g = rollup_states(stored, (), UDDSketch.from_bytes)
         from puddsketch_spark.spark.agg import sketch_global
@@ -283,16 +290,20 @@ def test_checkpoint_resume_equals_uninterrupted(spark, tdf, tmp_path):
 
 
 def test_jvm_engine_bit_parity(spark, tdf):
-    """JVM Tungsten fill vs Arrow/numpy fill: identical estimates (m=0)."""
+    """JVM Tungsten fill (udds_quantiles) vs Arrow/numpy fill
+    (sketch_grouped + quantile_table): identical estimates (m=0)."""
+    qs = [0.5, 0.9, 0.99]
     a = {
         (r.role, r.q): r.est
-        for r in udds_quantiles(tdf, "text_len", ["role"], [0.5, 0.9, 0.99],
-                                alpha=0.005, m=0, engine="jvm").collect()
+        for r in udds_quantiles(tdf, "text_len", ["role"], qs,
+                                alpha=0.005, m=0).collect()
     }
+    merged = sketch_grouped(tdf, "text_len", ["role"],
+                            lambda: UDDSketch(initial_alpha=0.005, m=0),
+                            UDDSketch.from_bytes)
     b = {
         (r.role, r.q): r.est
-        for r in udds_quantiles(tdf, "text_len", ["role"], [0.5, 0.9, 0.99],
-                                alpha=0.005, m=0, engine="python").collect()
+        for r in quantile_table(merged, ["role"], qs, UDDSketch.from_bytes).collect()
     }
     assert a == b
 
@@ -302,7 +313,7 @@ def test_jvm_engine_zero_bucket_and_global(spark):
         [(0.0,), (-5.0,), (1.0,), (2.0,), (float("nan"),)], "v double"
     )
     out = {r.q: r.est for r in
-           udds_quantiles(df, "v", (), [0.0, 0.5, 1.0], alpha=0.01, m=0, engine="jvm").collect()}
+           udds_quantiles(df, "v", (), [0.0, 0.5, 1.0], alpha=0.01, m=0).collect()}
     # population 4 (NaN dropped): {zero, zero, ~1, ~2}
     assert out[0.0] == 0.0
     assert out[1.0] == pytest.approx(2.0, rel=0.02)
@@ -777,11 +788,25 @@ def test_grouping_sets_guards_and_one_scan_plan(spark):
     states.unpersist()
 
 
+def test_grouping_sets_reject_duplicate_sets(spark):
+    """A repeated grouping set — in any column order — would share one
+    grouping_id and merge every cell twice; it must raise instead."""
+    from puddsketch_spark.spark.agg import rollup_grouping_sets
+
+    states = spark.createDataFrame(
+        [("user", "code", b"")], "role string, tool string, state binary")
+    for sets in ([("role",), ("role",)], [("role", "tool"), ("tool", "role")],
+                 [(), ("role",), ()]):
+        with pytest.raises(ValueError, match="duplicate grouping set"):
+            rollup_grouping_sets(states, sets, UDDSketch.from_bytes)
+
+
 def test_fused_jvm_quantile_table_bit_parity(spark):
     """udds_quantile_table_jvm (one fused Python stage) must reproduce
     sketch_grouped_jvm + quantile_table(extra_cols=['n']) bit-for-bit —
     the r7 gate queries ride the fused path. Covers m=0 and a collapsing
-    m=8 bound, with zero/negative/NaN/NULL values in the mix."""
+    m=8 bound, with zero/negative/NaN/NULL values and a NULL group key in
+    the mix."""
     from puddsketch_spark.spark.agg import (
         quantile_table,
         sketch_grouped_jvm,
@@ -791,7 +816,7 @@ def test_fused_jvm_quantile_table_bit_parity(spark):
     rows = []
     for i in range(2000):
         rows.append(("g%d" % (i % 3), float(i % 97) * 1.37 - 5.0))
-    rows += [("g0", 0.0), ("g1", float("nan")), ("g2", None)]
+    rows += [("g0", 0.0), ("g1", float("nan")), ("g2", None), (None, 4.2)]
     df = spark.createDataFrame(rows, "grp string, v double")
     qs = [0.5, 0.9, 0.99]
     for m in (0, 8):
@@ -806,3 +831,4 @@ def test_fused_jvm_quantile_table_bit_parity(spark):
                                     extra_cols=["n"]).collect()
         }
         assert fused == two_stage, m
+        assert {g for g, _ in fused} == {"g0", "g1", "g2", None}

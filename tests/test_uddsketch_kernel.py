@@ -85,6 +85,22 @@ def test_m_bound_enforced():
     assert s.count == 5000
 
 
+
+@pytest.mark.parametrize("m", [0, 8])
+def test_from_bucket_table_equals_single_batch_update(m):
+    """A JVM-style bucket table (keys in any order, a zero bucket)
+    assembles to the single-batch update() state."""
+    rng = np.random.default_rng(17)
+    v = np.concatenate([rng.lognormal(3, 2, 5000), np.zeros(9), -rng.uniform(1, 5, 4)])
+    table = UDDSketch(initial_alpha=0.01, m=0).update(v)
+    assert table.zero_count == 13
+    perm = rng.permutation(table.keys.size)
+    sk = UDDSketch.from_bucket_table(0.01, m, table.zero_count,
+                                     table.keys[perm], table.counts[perm])
+    assert sk.same_buckets(UDDSketch(initial_alpha=0.01, m=m).update(v))
+    assert (sk.num_collapses > 0) == (m > 0)
+
+
 # ---------------------------------------------------------------- remove
 def test_remove_batch():
     """Deletion support (uddsketch.cpp:189-208): decrement, erase empties,
