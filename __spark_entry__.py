@@ -1959,11 +1959,11 @@ FROM qs CROSS JOIN nn
 
 
 def _dd_quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPED signed DDSketch quantiles (dd_quantiles keyed path: Arrow
-    partial fill per (group x partition) -> applyInPandas merge) over the
-    same mixed-sign feature, by event_type. m=0 (no collapse) makes the
-    merged store independent of merge order, so the oracle replays the
-    per-group sign-split rank walk bit-for-bit."""
+    """GROUPED signed DDSketch quantiles (dd_quantiles: Tungsten signed
+    histogram per (group, sign, key) -> one applyInPandas assembly per
+    group) over the same mixed-sign feature, by event_type. m=0 (no
+    collapse) keeps every bucket, so the oracle replays the per-group
+    sign-split rank walk bit-for-bit."""
     from puddsketch_spark.spark.sketches import dd_quantiles
 
     ev = _t(spark, sf_dir, "events").select(
@@ -2006,15 +2006,16 @@ FROM qs CROSS JOIN nn
 
 
 def _ddog_grouped_window_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPED DDOG trash-bin collapse through the distributed keyed merge
-    (arbitrary merge order): a small bound forces pair collapses per group,
-    then a second EXACT pass verifies the reference contract — every
+    """GROUPED DDOG trash-bin collapse through dd_quantiles (one fold of
+    each group's bucket table): a small bound forces pair collapses per
+    group, then a second EXACT pass verifies the reference contract — every
     estimate at a quantile INSIDE the reported accurate window [q0, q1] is
     within alpha_now relative error of the exact order statistic
     (ParallelSketcher.cc:920-1028 bookkeeping). Quantiles outside the
-    window carry no guarantee and pass trivially. The window itself is
-    merge-order-dependent, so the oracle checks the guaranteed FACTS
-    (exact n, bound holds) rather than the window bounds."""
+    window carry no guarantee and pass trivially. The window itself depends
+    on the fold history (an incremental fill folds differently), so the
+    oracle checks the guaranteed FACTS (exact n, bound holds) rather than
+    the window bounds."""
     from pyspark.sql import Window
 
     from puddsketch_spark.spark.sketches import dd_quantiles
@@ -2377,10 +2378,10 @@ def _moments_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from puddsketch_spark.spark.sketches import moments_stats
 
     li = _t(spark, sf_dir, "lineitem")
-    # jvm engine: Tungsten per-(group, partition) stable central moments,
-    # Pébay-merged by the kernel — no row crosses the Python boundary
-    # (guide §4.1 "prefer built-ins"); ~1e-13 agreement with the arrow fill
-    mom = moments_stats(li, "l_extendedprice", ["l_returnflag"], engine="jvm")
+    # one Catalyst aggregation: Spark's central-moment aggregates merge
+    # partials with the same Pébay formulas as MomentsSketch — no row
+    # crosses the Python boundary; ~1e-13 agreement with the kernel fill
+    mom = moments_stats(li, "l_extendedprice", ["l_returnflag"])
 
     # two-pass exact arm. Pass 1: per-flag means via a Tungsten aggregation
     # (3 tiny rows); pass 2: broadcast the means back and accumulate the

@@ -99,9 +99,9 @@ def _kernel_update_weighted(sk, vals: np.ndarray, w: np.ndarray):
     """Weighted-update dispatch: kernels expose either update_weighted
     (UDD, t-digest, HLL, Bloom) or update(values, counts) (CMS,
     Misra-Gries). Rank-based kernels (KLL, REQ) have no exact weighted
-    form — their compaction samples ITEMS, so they reject the
-    pre-aggregate path. The capability check is by SIGNATURE, not by
-    catching TypeError from the call — a genuine TypeError inside a
+    form — their compaction samples ITEMS, so they reject weighted fills
+    (pre_aggregate or weight_col). The capability check is by SIGNATURE,
+    not by catching TypeError from the call — a genuine TypeError inside a
     weight-capable kernel must surface as itself, not as a false
     'unsupported' diagnosis."""
     import inspect
@@ -113,8 +113,8 @@ def _kernel_update_weighted(sk, vals: np.ndarray, w: np.ndarray):
     if len(params) >= 2:  # update(values, counts)
         return sk.update(vals, w)
     raise TypeError(
-        f"{type(sk).__name__} does not support weighted update; "
-        "use pre_aggregate=False for this kernel"
+        f"{type(sk).__name__} does not support weighted update; weighted "
+        "fills (pre_aggregate or weight_col) need a weight-capable kernel"
     )
 
 
@@ -778,12 +778,14 @@ def udds_quantiles(
 def dd_bucket_counts(
     df: DataFrame, value_col: str, group_cols: Sequence[str], alpha: float
 ) -> DataFrame:
-    """(group..., _sign, _bkey, _bcnt): JVM-side signed log-bucket histogram
-    for the DDSketch pair — the flagship Tungsten-fill architecture extended
-    to the second kernel family. _sign in {-1, 0, 1} (0 = B*, the near-zero
-    bucket: |v| < MIN_ADDRESSABLE); keys are ceil(ln(|v|)/ln gamma), the
-    same libm expression the numpy kernel uses (non-compat path), so the
-    assembled pair is bucket-identical to an Arrow fill at m=0."""
+    """(group..., _sign, _bkey, _bcnt, _lo, _hi): JVM-side signed log-bucket
+    histogram for the DDSketch pair — the flagship Tungsten-fill
+    architecture extended to the second kernel family. _sign in {-1, 0, 1}
+    (0 = B*, the near-zero bucket: |v| < MIN_ADDRESSABLE); keys are
+    ceil(ln(|v|)/ln gamma), the same libm expression the numpy kernel uses
+    (non-compat path), so the assembled pair is bucket-identical to an Arrow
+    fill at m=0. _lo/_hi are each bucket's value range, so the same
+    aggregation also yields the group's min/max."""
     v = F.col(value_col).cast("double")
     sign = (
         F.when(F.abs(v) < MIN_ADDRESSABLE, F.lit(0))
@@ -795,23 +797,28 @@ def dd_bucket_counts(
         df.select(*group_cols, v.alias(value_col))
         .where(~F.isnan(v) & v.isNotNull())
         .groupBy(*group_cols, sign.alias("_sign"), key.alias("_bkey"))
-        .agg(F.count(F.lit(1)).alias("_bcnt"))
+        .agg(
+            F.count(F.lit(1)).alias("_bcnt"),
+            F.min(value_col).alias("_lo"),
+            F.max(value_col).alias("_hi"),
+        )
     )
 
 
 def _dd_of(
-    table: pd.DataFrame, alpha: float, m: int, collapse_mode: str,
-    lo: float, hi: float,
+    table: pd.DataFrame, alpha: float, m: int, collapse_mode: str
 ) -> DDSketchPair:
-    """DDSketchPair from a signed (_sign, _bkey, _bcnt) bucket table and the
-    value range [lo, hi]; _sign 0 is B*. Every JVM DD fill assembles here."""
+    """DDSketchPair from a signed (_sign, _bkey, _bcnt, _lo, _hi) bucket
+    table; _sign 0 is B*, and the value range is the min/max over the rows
+    (NaN when there are none). Every JVM DD fill assembles here."""
     def store(sign: int):
         part = table[table["_sign"] == sign]
         return part["_bkey"].to_numpy(dtype=np.int64), part["_bcnt"].to_numpy(dtype=np.int64)
 
     return DDSketchPair.from_bucket_table(
         alpha, m, int(table.loc[table["_sign"] == 0, "_bcnt"].sum()),
-        *store(1), *store(-1), lo, hi, collapse_mode,
+        *store(1), *store(-1), table["_lo"].min(), table["_hi"].max(),
+        collapse_mode,
     )
 
 
@@ -824,26 +831,18 @@ def dd_sketch_global_jvm(
 ):
     """Global DDSketchPair via the JVM histogram fill (driver-side object).
 
-    Python sees only the <=10^3-row (sign, key, count) table plus one
-    min/max row; the heavy per-row work is Tungsten hash aggregation. With
-    m=0 the result is bucket-identical to the Arrow-engine fill (pinned in
-    tests). With m>0 the bound is enforced ONCE on the assembled store (a
-    one-shot fold): for uniform mode that is the minimal-collapse result;
-    for the ddog trash-bin modes the fold history differs from an
-    incremental fill's, so use the Arrow engine when reference fold-order
-    parity matters. Not available for compat=True (glibc fast-log keys are
-    Python-side)."""
-    rows = dd_bucket_counts(df, value_col, (), alpha).collect()
-    v = F.col(value_col).cast("double")
-    mm = (
-        df.select(v.alias("v"))
-        .where(~F.isnan(F.col("v")) & F.col("v").isNotNull())
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .first()
-    )
-    lo, hi = (float("nan") if x is None else x for x in mm)
-    return _dd_of(pd.DataFrame(rows, columns=["_sign", "_bkey", "_bcnt"]),
-                  alpha, m, collapse_mode, lo, hi)
+    One aggregation; Python sees only its <=10^3-row (sign, key, count,
+    min, max) table, and the heavy per-row work is Tungsten hash
+    aggregation. With m=0 the result is bucket-identical to the Arrow fill
+    (sketch_global with a DDSketchPair factory; pinned in tests). With m>0
+    the bound is enforced ONCE on the assembled store (a one-shot fold):
+    for uniform mode that is the minimal-collapse result; for the ddog
+    trash-bin modes the fold history differs from an incremental fill's,
+    so use the Arrow fill when reference fold-order parity matters. Not
+    available for compat=True (glibc fast-log keys are Python-side)."""
+    buckets = dd_bucket_counts(df, value_col, (), alpha)
+    return _dd_of(pd.DataFrame(buckets.collect(), columns=buckets.columns),
+                  alpha, m, collapse_mode)
 
 
 def dd_states_grouped_jvm(
@@ -858,7 +857,7 @@ def dd_states_grouped_jvm(
     DataFrame[group..., state, n, buckets, collapses, num_partials].
 
     Same contract as sketch_grouped; per group the input is the <=10^3-row
-    signed bucket table plus a min/max row, assembled and bound-enforced in
+    signed bucket table (min/max included), assembled and bound-enforced in
     one vectorized pass (see dd_sketch_global_jvm for the one-shot-fold
     caveat on ddog modes with m > 0)."""
     group_cols = list(group_cols)
@@ -866,27 +865,10 @@ def dd_states_grouped_jvm(
         raise ValueError("dd_states_grouped_jvm needs group_cols; "
                          "use dd_sketch_global_jvm for global")
     buckets = dd_bucket_counts(df, value_col, group_cols, alpha)
-    v = F.col(value_col).cast("double")
-    mm = (
-        df.select(*group_cols, v.alias("_v"))
-        .where(~F.isnan(F.col("_v")) & F.col("_v").isNotNull())
-        .groupBy(*group_cols)
-        .agg(F.min("_v").alias("_lo"), F.max("_v").alias("_hi"))
-    )
-    # null-SAFE join: a NULL group key must keep its state row (null-unsafe
-    # equality would silently drop the NULL group, diverging from the Arrow
-    # engine's _null_safe handling)
-    mm_r = mm.select(*[F.col(c).alias(f"__mm_{c}") for c in group_cols], "_lo", "_hi")
-    cond = None
-    for c in group_cols:
-        clause = buckets[c].eqNullSafe(F.col(f"__mm_{c}"))
-        cond = clause if cond is None else (cond & clause)
-    joined = buckets.join(mm_r, cond).drop(*[f"__mm_{c}" for c in group_cols])
-    schema = _state_schema(joined, group_cols)
+    schema = _state_schema(buckets, group_cols)
 
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _dd_of(pdf, alpha, m, collapse_mode,
-                    pdf["_lo"].iloc[0], pdf["_hi"].iloc[0])
-        return _state_row(pdf, group_cols, schema, sk, 1)
+        return _state_row(pdf, group_cols, schema,
+                          _dd_of(pdf, alpha, m, collapse_mode), 1)
 
-    return joined.groupBy(*group_cols).applyInPandas(assemble, schema=schema)
+    return buckets.groupBy(*group_cols).applyInPandas(assemble, schema=schema)

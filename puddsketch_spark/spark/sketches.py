@@ -1,16 +1,17 @@
 """High-level sketch aggregation APIs over the generic partial/merge plumbing.
 
-One function per sketch, all built on agg.partial_sketches / merge_grouped /
-sketch_global — identical distributed shape to the UDDSketch flagship:
-Arrow-vectorized per-partition partials, blob-only shuffles, commutative
-merges. (North_rule companion set: HLL, count-min, t-digest, KLL, Bloom —
-plus theta set algebra, exact moments, and the sketch-powered analytics:
+One function per sketch. The companion kernels are built on
+agg.partial_sketches / merge_grouped / sketch_global: Arrow-vectorized
+per-partition partials, blob-only shuffles, commutative merges. The DDSketch
+pair, the quantile filters and the rank transform fill through Tungsten
+bucket histograms instead, and the moments are one Catalyst aggregation.
+(North_rule companion set: HLL, count-min, t-digest, KLL, Bloom — plus theta
+set algebra, exact moments, and the sketch-powered analytics:
 quantile-threshold filtering and the quantile-rank transform.)
 """
 
 from __future__ import annotations
 
-import math
 from typing import Iterable, Sequence
 
 import pandas as pd
@@ -52,8 +53,7 @@ def _null_safe_broadcast_join(
     """Broadcast-join a small keyed table onto ``df`` with null-SAFE key
     equality. A plain column-name equi-join silently drops every row whose
     key is NULL even when the small table carries a NULL-key row (the agg
-    paths produce one via _null_safe) — same contract as the JVM fill's
-    join in agg.dd_states_grouped_jvm."""
+    paths produce one via _null_safe)."""
     renamed = small.select(
         *[F.col(c).alias(f"__ns_{c}") for c in keys],
         *[c for c in small.columns if c not in keys],
@@ -268,96 +268,37 @@ def with_quantile_rank(
 
 # ---------------------------------------------------------------- Moments
 def moments_stats(
-    df: DataFrame, value_col: str, group_cols: Sequence[str] = (),
-    engine: str = "arrow",
+    df: DataFrame, value_col: str, group_cols: Sequence[str] = ()
 ) -> DataFrame:
     """Exact one-pass distribution-shape statistics per group:
     DataFrame[group..., n, mean, variance, stddev, skewness, kurtosis,
-    vmin, vmax] via the mergeable MomentsSketch (Pébay pairwise combine).
-    Global (no groups) returns a single-row DataFrame.
+    vmin, vmax] (population variance, excess kurtosis). Global (no groups)
+    returns one row, also for empty input (n=0).
 
-    ``engine="arrow"``: the generic kernel fill (mapInArrow partials, keyed
-    merge) — rows cross into Python once.
-    ``engine="jvm"``: same split as the UDD flagship's Tungsten path — the
-    per-(group, input-partition) chunk moments come from Spark's builtin
-    stable central-moment aggregates (whole-stage codegen, map-side partial
-    agg; NO row ever crosses into Python), the chunk states are inverted to
-    (n, mean, M2, M3, M4) and merged by the kernel's own Pébay combine.
-    Merge-order float agreement with the arrow engine is the usual ~1e-12
-    relative, same as any re-partitioning of the fill (module docstring of
-    core.moments). NaN rows are dropped up front, mirroring the kernel's
-    _drop_nan."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    from ..core.moments import MomentsSketch
-
-    def rows_of(sk: MomentsSketch) -> tuple:
-        return (
-            int(sk.n), float(sk.mean), float(sk.variance()), float(sk.stddev()),
-            float(sk.skewness()), float(sk.kurtosis()), float(sk.vmin),
-            float(sk.vmax),
+    One Catalyst aggregation: Spark's central-moment aggregates merge their
+    partial buffers with the same Pébay pairwise formulas as
+    MomentsSketch._combine, so no row crosses into Python and nothing is
+    collected to the driver. Agreement with a MomentsSketch fill
+    (moments_table) is the usual merge-order ~1e-12 relative (module
+    docstring of core.moments). NULL and NaN values are dropped; a
+    statistic that is undefined for its group (skewness/kurtosis of a
+    constant group, anything of an empty one) is NULL, as in
+    moments_table."""
+    v = F.col(value_col).cast("double")
+    return (
+        df.where(v.isNotNull() & ~F.isnan(v))
+        .groupBy(*group_cols)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.avg(v).alias("mean"),
+            F.var_pop(v).alias("variance"),
+            F.stddev_pop(v).alias("stddev"),
+            F.skewness(v).alias("skewness"),
+            F.kurtosis(v).alias("kurtosis"),
+            F.min(v).alias("vmin"),
+            F.max(v).alias("vmax"),
         )
-
-    stat_fields = [
-        StructField("n", LongType(), False),
-        StructField("mean", DoubleType(), True),
-        StructField("variance", DoubleType(), True),
-        StructField("stddev", DoubleType(), True),
-        StructField("skewness", DoubleType(), True),
-        StructField("kurtosis", DoubleType(), True),
-        StructField("vmin", DoubleType(), True),
-        StructField("vmax", DoubleType(), True),
-    ]
-    if engine not in ("arrow", "jvm"):
-        raise ValueError("engine must be 'arrow' or 'jvm'")
-    if engine == "jvm":
-        v = F.col(value_col).cast("double")
-        chunked = (
-            df.where(v.isNotNull() & ~F.isnan(v))
-            .groupBy(*group_cols, F.spark_partition_id().alias("_pid"))
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.avg(v).alias("_mean"),
-                F.var_pop(v).alias("_varp"),
-                F.skewness(v).alias("_skew"),
-                F.kurtosis(v).alias("_kurt"),
-                F.min(v).alias("_min"),
-                F.max(v).alias("_max"),
-            )
-            .collect()
-        )
-        merged: dict[tuple, MomentsSketch] = {}
-        # deterministic merge order: by partition id within each group
-        for r in sorted(chunked, key=lambda r: (r["_pid"],)):
-            n = float(r["_n"])
-            m2 = 0.0 if r["_varp"] is None else float(r["_varp"]) * n
-            # invert Spark's population skew/kurt back to central sums;
-            # both are NaN/NULL for constant chunks (m2 == 0) -> sums are 0
-            sk_ = r["_skew"]
-            ku_ = r["_kurt"]
-            m3 = (
-                0.0 if m2 == 0.0 or sk_ is None or math.isnan(sk_)
-                else float(sk_) * m2 ** 1.5 / math.sqrt(n)
-            )
-            m4 = (
-                0.0 if m2 == 0.0 or ku_ is None or math.isnan(ku_)
-                else (float(ku_) + 3.0) * m2 * m2 / n
-            )
-            key = tuple(r[g] for g in group_cols)
-            sk = merged.setdefault(key, MomentsSketch())
-            sk._combine(n, float(r["_mean"]), m2, m3, m4,
-                        float(r["_min"]), float(r["_max"]))
-        group_fields = [f for f in df.schema.fields if f.name in group_cols]
-        schema = StructType(group_fields + stat_fields)
-        rows = [key + rows_of(sk) for key, sk in merged.items()]
-        return df.sparkSession.createDataFrame(rows, schema)
-    if not group_cols:
-        sk = sketch_global(df, value_col, MomentsSketch, MomentsSketch.from_bytes)
-        return df.sparkSession.createDataFrame([rows_of(sk)], StructType(stat_fields))
-    merged = sketch_grouped(
-        df, value_col, group_cols, MomentsSketch, MomentsSketch.from_bytes
     )
-    return moments_table(merged, group_cols)
 
 
 def moments_table(merged: DataFrame, group_cols: Sequence[str]) -> DataFrame:
@@ -477,7 +418,6 @@ def dd_quantiles(
     alpha: float = 0.01,
     bound: int = 512,
     collapse_mode: str = "uniform",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Signed-value quantiles via the DDSketch pair (pos/neg stores + B*),
     any collapse flavor: "uniform" (gamma widens, alpha' grows),
@@ -488,15 +428,17 @@ def dd_quantiles(
     and alpha_now the post-collapse error bound, so callers can tell which
     estimates carry which guarantee.
 
-    ``engine="jvm"``: Tungsten signed-histogram fill (bucket-identical to
-    arrow at bound=0; ONE-SHOT bound fold otherwise — see
-    agg.dd_sketch_global_jvm). The heavy per-row work never leaves the JVM.
+    The fill is the Tungsten signed histogram (agg.dd_bucket_counts): the
+    heavy per-row work never leaves the JVM, and each group's bucket table
+    is folded to ``bound`` once (see agg.dd_sketch_global_jvm). For
+    reference fold-order parity in the ddog modes, fill with
+    sketch_grouped / sketch_global and a DDSketchPair factory instead.
     """
-    from ..core.ddsketch import DDSketchPair
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    factory = lambda: DDSketchPair(  # noqa: E731
-        initial_alpha=alpha, m=bound, collapse_mode=collapse_mode
-    )
+    from ..core.ddsketch import DDSketchPair
+    from .agg import dd_sketch_global_jvm, dd_states_grouped_jvm
+
     qs = [float(q) for q in qs]
 
     def rows_of(sk) -> list[tuple]:
@@ -507,27 +449,14 @@ def dd_quantiles(
         ]
 
     if not group_cols:
-        if engine == "jvm":
-            from .agg import dd_sketch_global_jvm
-
-            sk = dd_sketch_global_jvm(df, value_col, alpha, m=bound,
-                                      collapse_mode=collapse_mode)
-        else:
-            sk = sketch_global(df, value_col, factory, DDSketchPair.from_bytes)
+        sk = dd_sketch_global_jvm(df, value_col, alpha, m=bound,
+                                  collapse_mode=collapse_mode)
         return df.sparkSession.createDataFrame(
             rows_of(sk), "q double, est double, q0 double, q1 double, alpha_now double"
         )
-    if engine == "jvm":
-        from .agg import dd_states_grouped_jvm
-
-        merged = dd_states_grouped_jvm(df, value_col, group_cols, alpha,
-                                       m=bound, collapse_mode=collapse_mode)
-    else:
-        merged = sketch_grouped(df, value_col, group_cols, factory,
-                                DDSketchPair.from_bytes)
+    merged = dd_states_grouped_jvm(df, value_col, group_cols, alpha,
+                                   m=bound, collapse_mode=collapse_mode)
     group_fields = [f for f in merged.schema.fields if f.name in group_cols]
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     schema = StructType(
         group_fields
         + [

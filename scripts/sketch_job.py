@@ -4,7 +4,7 @@ Usage (cluster):
     spark-submit --py-files puddsketch_spark.zip scripts/sketch_job.py \
         --input s3://bucket/transcripts --feature text_len \
         --group-by role tool --quantiles 0.5 0.9 0.99 0.999 \
-        --alpha 0.01 --max-buckets 200 --engine jvm \
+        --alpha 0.01 --max-buckets 200 \
         --checkpoint s3://bucket/ckpt/run1 --output s3://bucket/out/run1
 
 Usage (local smoke):
@@ -39,7 +39,6 @@ def parse_args(argv=None):
     p.add_argument("--quantiles", nargs="*", type=float, default=[0.5, 0.9, 0.99, 0.999])
     p.add_argument("--alpha", type=float, default=0.01)
     p.add_argument("--max-buckets", type=int, default=200)
-    p.add_argument("--engine", choices=["jvm", "arrow"], default="jvm")
     p.add_argument("--sketch",
                    choices=["udds", "dd", "kll", "tdigest", "moments", "hll", "theta"],
                    default="udds",
@@ -54,19 +53,24 @@ def parse_args(argv=None):
     # the reference's float32 fast-log (uddsketch.cpp:14-78) -> --compat
     p.add_argument("--compat", action="store_true",
                    help="udds: reference fast-log bucket keys (bucket-for-bucket "
-                        "golden parity; forces the arrow engine)")
+                        "golden parity; computed in Python, so the fill runs "
+                        "on Arrow partials)")
     p.add_argument("--salt-buckets", type=int, default=0,
                    help=">0: salted repartition on conv_id before sketching")
     p.add_argument("--pre-aggregate", action="store_true",
-                   help="Arrow engine: Tungsten groupBy(value).count() first, "
-                        "weighted kernel fill after — exchange carries distinct "
-                        "values, not rows (duplicate-heavy columns). "
-                        "State-identical for udds; bound-preserving for "
-                        "tdigest; rejected for kll/dd and with --checkpoint")
+                   help="Arrow-filled kernels: Tungsten groupBy(value).count() "
+                        "first, weighted kernel fill after — exchange carries "
+                        "distinct values, not rows (duplicate-heavy columns). "
+                        "State-identical for udds --compat; bound-preserving "
+                        "for tdigest; rejected for kll/dd and with "
+                        "--checkpoint. No effect on udds without --compat, "
+                        "whose Tungsten bucket fill already counts per key")
     p.add_argument("--length-dist", choices=["uniform", "lognormal", "beta"],
                    default="uniform",
                    help="--generate: text length distribution (reference set)")
-    p.add_argument("--checkpoint", help="dir for resumable per-partition state (arrow engine)")
+    p.add_argument("--checkpoint",
+                   help="dir for resumable per-partition state (the fill "
+                        "then runs on Arrow partials)")
     p.add_argument("--save-states",
                    help="also write the merged per-group sketch STATE table "
                         "(parquet, binary state column) — the incremental-"
@@ -143,7 +147,6 @@ def main(argv=None) -> int:
     from puddsketch_spark.core import KLLSketch, TDigest, UDDSketch
     from puddsketch_spark.datagen import transcripts
     from puddsketch_spark.spark.agg import (
-        merge_grouped,
         quantile_table,
         sketch_global,
         sketch_grouped,
@@ -269,7 +272,7 @@ def main(argv=None) -> int:
     merged = None  # grouped state table, when the chosen path produces one
     if args.sketch == "udds" and args.compat:
         # compat keys come from the reference fast-log — a Python kernel
-        # computation, so the fill must run on the Arrow engine
+        # computation, so the fill must run on Arrow partials
         merged = sketch_grouped(
             df, args.feature, group,
             lambda: UDDSketch(initial_alpha=args.alpha, m=args.max_buckets, compat=True),
@@ -284,13 +287,12 @@ def main(argv=None) -> int:
         # carry which guarantee
         out = dd_quantiles(df, args.feature, group, args.quantiles,
                            alpha=args.alpha, bound=args.max_buckets,
-                           collapse_mode=args.collapse_mode,
-                           engine=args.engine)
+                           collapse_mode=args.collapse_mode)
     elif args.sketch == "udds":
         if args.checkpoint and group:
-            # resumable per-partition state requires the Arrow engine's
+            # resumable per-partition state requires the Arrow fill's
             # materialized partials (the JVM fill has no partition-level
-            # state to checkpoint); honor --checkpoint over --engine
+            # state to checkpoint)
             from puddsketch_spark.spark.checkpoint import checkpointed_sketch_grouped
 
             merged = checkpointed_sketch_grouped(
@@ -299,29 +301,12 @@ def main(argv=None) -> int:
                 UDDSketch.from_bytes,
             )
             out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
-        elif args.engine == "jvm" and group:
+        elif group:
             merged = sketch_grouped_jvm(df, args.feature, group, args.alpha, args.max_buckets)
             out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
-        elif args.engine == "jvm":
+        else:
             out = udds_quantiles(df, args.feature, (), args.quantiles,
                                  args.alpha, args.max_buckets)
-        elif group:
-            merged = sketch_grouped(
-                df, args.feature, group,
-                lambda: UDDSketch(initial_alpha=args.alpha, m=args.max_buckets),
-                UDDSketch.from_bytes, pre_aggregate=args.pre_aggregate,
-            )
-            out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
-        else:
-            sk = sketch_global(
-                df, args.feature,
-                lambda: UDDSketch(initial_alpha=args.alpha, m=args.max_buckets),
-                UDDSketch.from_bytes, pre_aggregate=args.pre_aggregate,
-            )
-            out = spark.createDataFrame(
-                [(float(q), float(sk.quantile(q))) for q in args.quantiles],
-                "q double, est double",
-            )
     elif args.sketch in ("hll", "theta"):
         from puddsketch_spark.core import HLLSketch, ThetaSketch
 

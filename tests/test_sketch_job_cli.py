@@ -3,8 +3,8 @@ job calls spark.stop(), so it must not share the test session).
 
 Covers: --rollup on a fresh fill (+ --save-states), --grouping-sets on
 --from-states (no rescan) with bit-identical global estimates, the
-bad-column refusal, and --sketch udds estimates equal under --engine jvm
-and --engine arrow.
+bad-column refusal, and --sketch udds estimates equal to an in-process
+Arrow fill of the same generated input.
 """
 
 import json
@@ -29,7 +29,7 @@ def test_sketch_job_rollup_and_from_states_grouping_sets(tmp_path):
     # merges are bucket-exact and estimates must match bit-for-bit
     proc = _run([
         "--generate", "20000", "--seed", "11", "--feature", "text_len",
-        "--group-by", "role", "tool", "--rollup", "--engine", "jvm",
+        "--group-by", "role", "tool", "--rollup",
         "--max-buckets", "0", "--quantiles", "0.5", "0.99",
         "--save-states", states,
     ])
@@ -70,21 +70,37 @@ def test_sketch_job_rollup_and_from_states_grouping_sets(tmp_path):
     assert "not in --group-by" in proc3.stderr
 
 
-def test_sketch_job_udds_engines_agree():
-    """--sketch udds at --max-buckets 0: the JVM fill and the Arrow fill
-    give identical estimates, grouped and global."""
-    def estimates(engine, group):
+def test_sketch_job_udds_engines_agree(spark):
+    """--sketch udds at --max-buckets 0 (the JVM fill) gives the same
+    estimates as an Arrow fill (sketch_grouped / sketch_global with
+    UDDSketch(m=0)) over the same generated input, grouped and global."""
+    from puddsketch_spark.core import UDDSketch
+    from puddsketch_spark.datagen import transcripts
+    from puddsketch_spark.spark.agg import sketch_global, sketch_grouped
+    from puddsketch_spark.spark.features import with_text_len
+
+    qs = [0.1, 0.5, 0.99]
+    # the CLI's --generate 20000 input: transcripts(n_conv=20000 // 8)
+    df = with_text_len(transcripts(spark, n_conv=20000 // 8, seed=5))
+    factory = lambda: UDDSketch(initial_alpha=0.01, m=0)  # noqa: E731
+    for group in (["role"], []):
         proc = _run([
             "--generate", "20000", "--seed", "5", "--feature", "text_len",
-            "--sketch", "udds", "--engine", engine, "--max-buckets", "0",
-            "--quantiles", "0.1", "0.5", "0.99", "--group-by", *group,
+            "--sketch", "udds", "--max-buckets", "0",
+            "--quantiles", *map(str, qs), "--group-by", *group,
         ])
         assert proc.returncode == 0, proc.stderr[-2000:]
         rows = [json.loads(ln) for ln in proc.stdout.strip().splitlines()
                 if ln.startswith("{")]
-        return {(tuple(r[g] for g in group), r["q"]): r["est"] for r in rows}
-
-    for group in (["role"], []):
-        jvm = estimates("jvm", group)
-        assert len(jvm) >= 3  # every quantile of at least one group
-        assert jvm == estimates("arrow", group), group
+        cli = {(tuple(r[g] for g in group), r["q"]): r["est"] for r in rows}
+        if group:
+            sks = {
+                tuple(r[g] for g in group): UDDSketch.from_bytes(r.state)
+                for r in sketch_grouped(df, "text_len", group, factory).collect()
+            }
+        else:
+            sks = {(): sketch_global(df, "text_len", factory)}
+        arrow = {(key, q): float(sk.quantile(q))
+                 for key, sk in sks.items() for q in qs}
+        assert len(cli) >= 3  # every quantile of at least one group
+        assert cli == arrow, group

@@ -148,6 +148,10 @@ def test_pre_aggregate_rejects_rank_kernels(spark, tdf):
     with pytest.raises(Exception, match="does not support weighted update"):
         sketch_grouped(tdf, "text_len", ["role"], lambda: KLLSketch(k=128),
                        pre_aggregate=True).collect()
+    counts = tdf.groupBy("text_len").count()
+    with pytest.raises(Exception, match="KLLSketch does not support weighted"):
+        sketch_global(counts, "text_len", lambda: KLLSketch(k=128),
+                      weight_col="count")
 
 
 def test_rollup_states_parquet_roundtrip(spark, tdf):
@@ -605,6 +609,8 @@ def test_dd_jvm_fill_bit_parity_with_arrow(spark):
     assert np.array_equal(jvm.pos_counts, arrow.pos_counts)
     assert np.array_equal(jvm.neg_keys, arrow.neg_keys)
     assert np.array_equal(jvm.neg_counts, arrow.neg_counts)
+    # the value range is read from the bucket rows' per-bucket min/max
+    assert (jvm.min_value, jvm.max_value) == (arrow.min_value, arrow.max_value)
     for q in (0.01, 0.1, 0.5, 0.9, 0.99):
         assert jvm.quantile(q) == arrow.quantile(q), q
 
@@ -647,14 +653,15 @@ def test_dd_grouped_jvm_matches_arrow(spark):
         assert np.array_equal(j.pos_counts, a.pos_counts)
         assert np.array_equal(j.neg_keys, a.neg_keys)
         assert np.array_equal(j.neg_counts, a.neg_counts)
+        assert (j.min_value, j.max_value) == (a.min_value, a.max_value), g
         for q in (0.1, 0.5, 0.9):
             assert j.quantile(q) == a.quantile(q), (g, q)
     assert jvm["a"].zero_count == 3
 
 
 def test_dd_grouped_jvm_keeps_null_group(spark):
-    """Review regression: a NULL group key keeps its state row (null-safe
-    min/max join), matching the Arrow engine's result set."""
+    """Review regression: a NULL group key keeps its state row, matching
+    the Arrow fill's result set."""
     from puddsketch_spark.core import DDSketchPair
     from puddsketch_spark.spark.agg import dd_states_grouped_jvm
 

@@ -289,10 +289,13 @@ def test_quantile_filter_and_rank_keep_null_groups(spark):
 
 
 def test_dd_quantiles_jvm_engine(spark):
-    """dd_quantiles(engine='jvm'): grouped + global results match the
-    arrow engine at bound=0."""
+    """dd_quantiles (JVM histogram fill): grouped + global results match an
+    Arrow fill (sketch_grouped / sketch_global with a DDSketchPair factory)
+    at bound=0."""
     import numpy as np
 
+    from puddsketch_spark.core import DDSketchPair
+    from puddsketch_spark.spark.agg import sketch_global, sketch_grouped
     from puddsketch_spark.spark.sketches import dd_quantiles
 
     rng = np.random.default_rng(35)
@@ -300,12 +303,79 @@ def test_dd_quantiles_jvm_engine(spark):
         ("b", float(v)) for v in rng.lognormal(3, 1, 20_000)
     ]
     df = spark.createDataFrame(rows, "grp string, v double").repartition(8)
+    qs = [0.1, 0.5, 0.9]
+    factory = lambda: DDSketchPair(initial_alpha=0.01, m=0)  # noqa: E731
     for group in (["grp"], ()):
-        j = sorted(dd_quantiles(df, "v", group, qs=[0.1, 0.5, 0.9], alpha=0.01,
-                                bound=0, engine="jvm").collect())
-        a = sorted(dd_quantiles(df, "v", group, qs=[0.1, 0.5, 0.9], alpha=0.01,
-                                bound=0, engine="arrow").collect())
+        j = sorted(
+            (*(r[g] for g in group), r.q, r.est, r.q0, r.q1, r.alpha_now)
+            for r in dd_quantiles(df, "v", group, qs=qs, alpha=0.01,
+                                  bound=0).collect()
+        )
+        if group:
+            sks = {
+                (r.grp,): DDSketchPair.from_bytes(r.state)
+                for r in sketch_grouped(df, "v", group, factory,
+                                        DDSketchPair.from_bytes).collect()
+            }
+        else:
+            sks = {(): sketch_global(df, "v", factory, DDSketchPair.from_bytes)}
+        a = sorted(
+            (*key, q, float(sk.quantile(q)), *sk.accurate_range(), sk.alpha)
+            for key, sk in sks.items() for q in qs
+        )
         assert j == a and len(j) > 0
+
+
+def test_moments_stats_matches_kernel_fill(spark):
+    """moments_stats (one Catalyst aggregation) equals the MomentsSketch
+    fill finalized by moments_table, grouped and global, to 1e-9 relative:
+    NULL-bearing string and bigint keys, a single-value group (skewness and
+    kurtosis NULL on both sides), NaN values dropped. Empty global input
+    gives exactly one row with n=0 and NULL statistics."""
+    import math
+
+    from puddsketch_spark.core import MomentsSketch
+    from puddsketch_spark.spark.agg import sketch_grouped
+    from puddsketch_spark.spark.sketches import moments_stats, moments_table
+
+    rng = np.random.default_rng(41)
+    rows = [("a", 1, float(v)) for v in rng.lognormal(2, 1, 3000)]
+    rows += [(None, 2, float(v)) for v in rng.normal(5, 3, 2000)]
+    rows += [("b", None, float(v)) for v in rng.exponential(4, 1000)]
+    rows += [("solo", 7, 3.5)]  # single-value group
+    rows += [("a", 1, float("nan")), ("solo", 7, float("nan")), ("b", None, None)]
+    df = spark.createDataFrame(rows, "s string, k bigint, v double").repartition(4)
+    stats = ["n", "mean", "variance", "stddev", "skewness", "kurtosis", "vmin", "vmax"]
+
+    def close(x, y):
+        if x is None or y is None:
+            return x is None and y is None
+        return math.isclose(x, y, rel_tol=1e-9, abs_tol=0.0)
+
+    # the global kernel fill groups by a constant so moments_table applies
+    keyed = df.withColumn("_all", F.lit(0))
+    for group in ([], ["s", "k"]):
+        kcols = group or ["_all"]
+        want = {
+            tuple(r[g] for g in group): r
+            for r in moments_table(
+                sketch_grouped(keyed, "v", kcols, MomentsSketch,
+                               MomentsSketch.from_bytes), kcols
+            ).collect()
+        }
+        got = {tuple(r[g] for g in group): r
+               for r in moments_stats(df, "v", group).collect()}
+        assert set(got) == set(want) and len(got) == (4 if group else 1)
+        for key, r in got.items():
+            for c in stats:
+                assert close(r[c], want[key][c]), (key, c, r[c], want[key][c])
+    solo = got[("solo", 7)]
+    assert solo.n == 1 and solo.variance == 0.0
+    assert solo.skewness is None and solo.kurtosis is None
+
+    empty = moments_stats(df.where("v > 1e300"), "v").collect()
+    assert len(empty) == 1 and empty[0].n == 0
+    assert all(empty[0][c] is None for c in stats[1:])
 
 
 def test_theta_set_ops_mixed_key_types_raises(spark):
