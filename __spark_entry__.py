@@ -32,7 +32,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # --------------------------------------------------------------------------
 def entry(spark: SparkSession) -> DataFrame:
     """p50/p90/p99/p999 of l_extendedprice by l_returnflag via distributed
-    UDDSketch (mapInPandas partials -> applyInPandas merge)."""
+    UDDSketch (Tungsten bucket fill -> one key-run assembly + finalize)."""
     return _udds_by_flag(spark, SF001)
 
 
@@ -483,7 +483,7 @@ def _udds_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from puddsketch_spark.spark.agg import udds_quantile_table_jvm
 
     li = _t(spark, sf_dir, "lineitem")
-    # fused JVM path: Tungsten bucket histogram -> ONE applyInPandas stage
+    # fused JVM path: Tungsten bucket histogram -> ONE key-run stage
     # assembling the sketch AND finalizing quantiles (+ n). The previous
     # form paid two Python stages (state assembly, then a quantile UDF)
     # plus a join of the state table back to its own quantile table for n
@@ -1960,10 +1960,10 @@ FROM qs CROSS JOIN nn
 
 def _dd_quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED signed DDSketch quantiles (dd_quantiles: Tungsten signed
-    histogram per (group, sign, key) -> one applyInPandas assembly per
-    group) over the same mixed-sign feature, by event_type. m=0 (no
-    collapse) keeps every bucket, so the oracle replays the per-group
-    sign-split rank walk bit-for-bit."""
+    histogram per (group, sign, key) -> one key-run stage assembling and
+    finalizing each group) over the same mixed-sign feature, by
+    event_type. m=0 (no collapse) keeps every bucket, so the oracle replays
+    the per-group sign-split rank walk bit-for-bit."""
     from puddsketch_spark.spark.sketches import dd_quantiles
 
     ev = _t(spark, sf_dir, "events").select(

@@ -27,7 +27,10 @@ def _k1(q: np.ndarray, delta: float) -> np.ndarray:
 
 
 def _compress(means: np.ndarray, weights: np.ndarray, delta: float):
-    order = np.argsort(means, kind="stable")
+    # ties on the mean are ordered by weight, so the order (and thus the
+    # k-space grouping) depends only on the (mean, weight) multiset, not on
+    # which operand of a merge a centroid came from
+    order = np.lexsort((weights, means))
     means, weights = means[order], weights[order]
     total = weights.sum()
     if total == 0:

@@ -5,12 +5,19 @@ The Spark equivalent of the reference's MPI pipeline
 custom commutative MPI_Reduce -> root-rank quantile query becomes
 
     df.select(cols)                      # column pruning reaches the scan
-      .mapInPandas(partial_fn)           # per-partition sketch, Arrow batches,
-                                         #   pandas-groupby map-side combine
-      .groupBy(group).applyInPandas(...) # keyed merge: shuffles ~KB sketch
-                                         #   blobs, never raw rows
+      .mapInArrow(partial_fn)            # per-partition sketch, Arrow batches,
+                                         #   dictionary-code map-side combine
+      .repartition(group)                # keyed merge (_map_key_runs):
+      .sortWithinPartitions(group)       #   shuffles ~KB sketch blobs, never
+      .mapInArrow(merge_runs)            #   raw rows; one Python call per
+                                         #   partition walks its key runs
       -- or --
-      .rdd.treeReduce(merge, depth=2)    # global merge, two-level tree
+      .rdd.treeAggregate(merge, depth=2) # global merge, two-level tree
+
+The JVM fills (sketch_grouped_jvm, udds_quantile_table_jvm,
+dd_states_grouped_jvm) end in the same key-run stage over the Tungsten
+bucket table, and a grouped finalize (quantiles, estimates) runs inside
+it rather than as a second stage.
 
 Scale notes (100 TB / 1000 executors):
   * the only shuffle moves (n_groups x n_partitions) sketch blobs of
@@ -22,7 +29,6 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-import math
 from typing import Callable, Iterable, Sequence
 
 import numpy as np
@@ -76,13 +82,11 @@ def _state_fields(tail: str) -> list[StructField]:
     ]
 
 
-def _state_schema(
-    df: DataFrame, group_cols: Sequence[str], tail: str = "num_partials"
-) -> StructType:
-    """State-row schema: ``df``'s group-key fields in ``group_cols`` order,
-    then _state_fields(tail)."""
-    by_name = {f.name: f for f in df.schema.fields}
-    return StructType([by_name[c] for c in group_cols] + _state_fields(tail))
+# the columns a quantile finalize emits after the group keys
+_QUANTILE_FIELDS = [
+    StructField("q", DoubleType(), False),
+    StructField("est", DoubleType(), True),
+]
 
 
 def _metrics_of(sk) -> tuple[int, int, int]:
@@ -137,7 +141,8 @@ def partial_sketches(
     (/root/reference/ParallelDDSketch/src/ParallelSketcher.cc:662-708).
     """
     group_cols = list(group_cols)
-    schema = _state_schema(df, group_cols, "partition_id")
+    schema = StructType([df.schema[c] for c in group_cols]
+                        + _state_fields("partition_id"))
     sel = [*group_cols, value_col] + ([weight_col] if weight_col else [])
     pruned = df.select(*sel)
     tname = pruned.schema[value_col].dataType.typeName()
@@ -251,25 +256,130 @@ def partial_sketches(
     return pruned.mapInArrow(build, schema=schema)
 
 
-def _null_safe(k):
-    # pandas uses NaN/NaT for missing group keys; Arrow wants None
-    if k is None or (isinstance(k, float) and math.isnan(k)) or k is pd.NaT:
-        return None
-    return k
+def _state_values(sk, num_partials: int) -> tuple:
+    """The state-row columns after the group keys (_state_fields order)."""
+    return (sk.to_bytes(), *_metrics_of(sk), num_partials)
 
 
-def _state_row(
-    pdf: pd.DataFrame, group_cols: Sequence[str], schema: StructType, sk,
-    num_partials: int,
-) -> pd.DataFrame:
-    """The one state row of the group held in ``pdf``. _null_safe: pandas
-    encodes a NULL group key as NaN/NaT; emitting that into a non-float
-    Arrow field fails the stage."""
-    key_vals = tuple(_null_safe(pdf[g].iloc[0]) for g in group_cols)
-    return pd.DataFrame(
-        [key_vals + (sk.to_bytes(), *_metrics_of(sk), num_partials)],
-        columns=schema.fieldNames(),
+def _run_starts(keys) -> np.ndarray:
+    """Offsets at which a run of equal key tuples begins in ``keys`` (a
+    pyarrow Table sorted by those columns). Equality is groupBy's: NULL
+    matches NULL and NaN matches NaN (dictionary codes, not ``==``)."""
+    change = np.zeros(keys.num_rows, dtype=bool)
+    change[:1] = True
+    for col in keys.itercolumns():
+        codes = col.combine_chunks().dictionary_encode().indices
+        codes = codes.fill_null(-1).to_numpy()
+        change[1:] |= codes[1:] != codes[:-1]
+    return np.flatnonzero(change)
+
+
+def _map_key_runs(
+    df: DataFrame,
+    keys: Sequence[str],
+    value_fields: Sequence[StructField],
+    per_run: Callable[[object], list],
+) -> DataFrame:
+    """DataFrame[keys..., value_fields...] with the rows ``per_run`` returns
+    for each group: one shuffle by ``keys``, a sort within partitions, and
+    ONE mapInArrow Python call per partition walking its contiguous key
+    runs — not a Python call and a pandas frame in and out per group.
+
+    ``per_run`` gets a pyarrow Table holding one whole group (every column
+    of ``df``) and returns a list of value tuples, one per output row. A
+    group that straddles Arrow batches is carried into the next batch, so
+    memory stays bounded by one group plus one batch. Key columns are
+    emitted with Arrow ``take`` on the run starts, so they keep their
+    Arrow type and NULLs. Float keys are normalized before the shuffle
+    (-0.0 -> 0.0, one NaN), the equality groupBy uses.
+    """
+    keys = list(keys)
+
+    def normalized(k: str) -> Column:
+        t = df.schema[k].dataType
+        if t.typeName() not in ("float", "double"):
+            return F.col(k)
+        return (F.when(F.isnan(k), F.lit(float("nan")).cast(t))
+                .when(F.col(k) == 0, F.lit(0.0).cast(t))
+                .otherwise(F.col(k)).alias(k))
+
+    src = df.select(*map(normalized, keys), *[c for c in df.columns if c not in keys])
+    schema = StructType([src.schema[k] for k in keys] + list(value_fields))
+
+    def stage(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        value_types = [f.type for f in to_arrow_schema(StructType(list(value_fields)))]
+        names = keys + [f.name for f in value_fields]
+        pending: list = []  # slices of the open run (the last run seen)
+        open_key = None  # its key, a one-row Table
+
+        def emit(key_src, runs):
+            """One batch of per_run's rows for ``runs``, (key row of
+            ``key_src``, slices of one group) pairs."""
+            idx, rows = [], []
+            for key_row, parts in runs:
+                got = per_run(pa.Table.from_batches(parts))
+                idx += [key_row] * len(got)
+                rows += got
+            if rows:
+                cols = [key_src.column(k).take(idx).combine_chunks() for k in keys]
+                cols += [pa.array(c, type=t) for c, t in zip(zip(*rows), value_types)]
+                yield pa.RecordBatch.from_arrays(cols, names=names)
+
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            batch_keys = pa.Table.from_batches([batch]).select(keys)
+            # the open run's key leads the probe, so a run that continues
+            # into this batch shows no start at probe row 1
+            lead = 0 if open_key is None else 1
+            probe = batch_keys if open_key is None else pa.concat_tables([open_key, batch_keys])
+            starts = _run_starts(probe)
+            starts = [int(i) - lead for i in starts if i >= lead]  # in the batch
+            runs = []  # the runs this batch closes
+            if open_key is not None:
+                head = starts[0] if starts else batch.num_rows
+                if head:
+                    pending.append(batch.slice(0, head))
+                if not starts:
+                    continue  # the whole batch continues the open run
+                runs.append((0, pending))
+            runs += [(i + lead, [batch.slice(i, j - i)])
+                     for i, j in zip(starts[:-1], starts[1:])]
+            pending, open_key = [batch.slice(starts[-1])], batch_keys.slice(starts[-1], 1)
+            yield from emit(probe, runs)
+        if pending:
+            yield from emit(open_key, [(0, pending)])
+
+    return (
+        src.repartition(*keys)
+        .sortWithinPartitions(*keys)
+        .mapInArrow(stage, schema=schema)
     )
+
+
+def _merge_runs(
+    partials: DataFrame,
+    group_cols: Sequence[str],
+    from_bytes: Callable[[bytes], object],
+    value_fields: Sequence[StructField],
+    emit: Callable[[object, int], list],
+) -> DataFrame:
+    """One key-run stage that merges each group's state blobs and returns
+    ``emit(merged_sketch, num_blobs)`` rows: merge_grouped's state row, or
+    a finalize (quantiles, estimates) with no second stage."""
+
+    def per_run(run) -> list:
+        blobs = run.column("state").to_pylist()
+        sk = from_bytes(blobs[0])
+        for blob in blobs[1:]:
+            sk = sk.merge(from_bytes(blob))
+        return emit(sk, len(blobs))
+
+    return _map_key_runs(partials.select(*group_cols, "state"), group_cols,
+                         value_fields, per_run)
 
 
 def merge_grouped(
@@ -285,16 +395,9 @@ def merge_grouped(
     group_cols = list(group_cols)
     if not group_cols:
         raise ValueError("merge_grouped needs group_cols; use sketch_global for global")
-    schema = _state_schema(partials, group_cols)
-
-    def merge_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        states = pdf["state"]
-        sk = from_bytes(states.iloc[0])
-        for blob in states.iloc[1:]:
-            sk = sk.merge(from_bytes(blob))
-        return _state_row(pdf, group_cols, schema, sk, len(pdf))
-
-    return partials.groupBy(*group_cols).applyInPandas(merge_fn, schema=schema)
+    return _merge_runs(partials, group_cols, from_bytes,
+                       _state_fields("num_partials"),
+                       lambda sk, k: [_state_values(sk, k)])
 
 
 def _tree_merge_bytes(blobs, fb, depth: int):
@@ -407,7 +510,7 @@ def rollup_grouping_sets(
     # ONE merge stage for every set (r7): project the state table once per
     # set — keys kept for the set's columns, NULL-padded otherwise, plus
     # the set's grouping_id — union the projections, and merge with a
-    # single groupBy(all_cols + grouping_id).applyInPandas. grouping_id
+    # single merge_grouped keyed by (all_cols + grouping_id). grouping_id
     # separates the sets, so cells are merged over exactly the same state
     # rows as the old one-merge-per-set form (bit-identical for the
     # exact-merge kernels; same bounds otherwise), while N sets cost one
@@ -621,15 +724,17 @@ def udds_bucket_counts(
     )
 
 
-def _udds_of(table: pd.DataFrame, alpha: float, m: int) -> UDDSketch:
-    """UDDSketch from a (_bkey, _bcnt) bucket table; NULL _bkey is the zero
-    bucket. Every JVM UDD fill, grouped or global, assembles here."""
-    zero = table["_bkey"].isna()
-    live = table[~zero]
+def _udds_of(table, alpha: float, m: int) -> UDDSketch:
+    """UDDSketch from a (_bkey, _bcnt) bucket table (a pyarrow Table); NULL
+    _bkey is the zero bucket. Every JVM UDD fill, grouped or global,
+    assembles here."""
+    bkey = table.column("_bkey")
+    zero = bkey.is_null().to_numpy()
+    live = ~zero
+    cnt = table.column("_bcnt").to_numpy()
     return UDDSketch.from_bucket_table(
-        alpha, m, int(table.loc[zero, "_bcnt"].sum()),
-        live["_bkey"].to_numpy(dtype=np.int64),
-        live["_bcnt"].to_numpy(dtype=np.int64),
+        alpha, m, int(cnt[zero].sum()),
+        bkey.fill_null(0).to_numpy()[live], cnt[live],
     )
 
 
@@ -640,21 +745,19 @@ def sketch_grouped_jvm(
     buckets, collapses, num_partials].
 
     The fill is a Tungsten hash aggregation (udds_bucket_counts); one
-    applyInPandas stage then assembles each group's <= |distinct keys|-row
-    bucket table and collapses it to the m bound once. ``num_partials`` is
-    the group's bucket-row count.
+    key-run stage (_map_key_runs) then assembles each group's
+    <= |distinct keys|-row bucket table and collapses it to the m bound
+    once. ``num_partials`` is the group's bucket-row count.
     """
     group_cols = list(group_cols)
     if not group_cols:
         raise ValueError("sketch_grouped_jvm needs group_cols; "
                          "use udds_sketch_global_jvm for global")
     buckets = udds_bucket_counts(df, value_col, group_cols, alpha)
-    schema = _state_schema(buckets, group_cols)
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _state_row(pdf, group_cols, schema, _udds_of(pdf, alpha, m), len(pdf))
-
-    return buckets.groupBy(*group_cols).applyInPandas(assemble, schema=schema)
+    return _map_key_runs(
+        buckets, group_cols, _state_fields("num_partials"),
+        lambda run: [_state_values(_udds_of(run, alpha, m), run.num_rows)],
+    )
 
 
 def udds_sketch_global_jvm(
@@ -663,8 +766,7 @@ def udds_sketch_global_jvm(
     """Global UDDSketch via the JVM fill (driver-side object): the Tungsten
     histogram's <= |distinct keys| rows are collected and assembled once.
     With m=0 it is bucket-identical to sketch_global's Arrow fill."""
-    rows = udds_bucket_counts(df, value_col, (), alpha).collect()
-    return _udds_of(pd.DataFrame(rows, columns=["_bkey", "_bcnt"]), alpha, m)
+    return _udds_of(udds_bucket_counts(df, value_col, (), alpha).toArrow(), alpha, m)
 
 
 def udds_quantile_table_jvm(
@@ -676,29 +778,22 @@ def udds_quantile_table_jvm(
     m: int,
 ) -> DataFrame:
     """Fused JVM path: DataFrame[group..., q, est, n]. Bucket histogram
-    (Tungsten) -> ONE applyInPandas stage assembling each group's sketch AND
-    finalizing its quantiles — a single Python stage over the tiny bucket
-    table (half the Python round-trips of sketch_grouped_jvm +
-    quantile_table; same results)."""
+    (Tungsten) -> ONE key-run stage assembling each group's sketch AND
+    reading its quantiles — a single Python stage over the tiny bucket
+    table (half the Python stages of sketch_grouped_jvm + quantile_table;
+    same results)."""
     group_cols = list(group_cols)
     qs = [float(q) for q in qs]
     buckets = udds_bucket_counts(df, value_col, group_cols, alpha)
-    schema = StructType(
-        [buckets.schema[g] for g in group_cols]
-        + [
-            StructField("q", DoubleType(), False),
-            StructField("est", DoubleType(), False),
-            StructField("n", LongType(), False),
-        ]
+
+    def finalize(run) -> list:
+        sk = _udds_of(run, alpha, m)
+        return [(q, float(sk.quantile(q)), sk.count) for q in qs]
+
+    return _map_key_runs(
+        buckets, group_cols,
+        [*_QUANTILE_FIELDS, StructField("n", LongType(), False)], finalize,
     )
-
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _udds_of(pdf, alpha, m)
-        key_vals = tuple(_null_safe(pdf[g].iloc[0]) for g in group_cols)
-        rows = [key_vals + (q, float(sk.quantile(q)), sk.count) for q in qs]
-        return pd.DataFrame(rows, columns=schema.fieldNames())
-
-    return buckets.groupBy(*group_cols).applyInPandas(finalize, schema=schema)
 
 
 def udds_quantiles_multi(
@@ -757,11 +852,13 @@ def udds_quantiles(
 
     The fill is a Tungsten hash aggregation on the Catalyst bucket-key
     expression; Python touches only the bucket table. Grouped, one
-    applyInPandas stage assembles and finalizes each group
-    (udds_quantile_table_jvm); global, the bucket table is assembled on the
-    driver (udds_sketch_global_jvm). For a state table to save, merge or
-    roll up, use sketch_grouped_jvm; for compat=True keys or the other
-    kernels, the Arrow fill sketch_grouped / sketch_global.
+    key-run stage — one Python call per shuffle partition, not per group —
+    assembles each group's sketch and reads its quantiles
+    (udds_quantile_table_jvm); global, the bucket table is collected as
+    Arrow and assembled on the driver (udds_sketch_global_jvm). For a state
+    table to save, merge or roll up, use sketch_grouped_jvm; for
+    compat=True keys or the other kernels, the Arrow fill sketch_grouped /
+    sketch_global.
     """
     qs = list(qs)
     if group_cols:
@@ -805,19 +902,23 @@ def dd_bucket_counts(
     )
 
 
-def _dd_of(
-    table: pd.DataFrame, alpha: float, m: int, collapse_mode: str
-) -> DDSketchPair:
+def _dd_of(table, alpha: float, m: int, collapse_mode: str) -> DDSketchPair:
     """DDSketchPair from a signed (_sign, _bkey, _bcnt, _lo, _hi) bucket
-    table; _sign 0 is B*, and the value range is the min/max over the rows
-    (NaN when there are none). Every JVM DD fill assembles here."""
-    def store(sign: int):
-        part = table[table["_sign"] == sign]
-        return part["_bkey"].to_numpy(dtype=np.int64), part["_bcnt"].to_numpy(dtype=np.int64)
+    table (a pyarrow Table); _sign 0 is B*, and the value range is the
+    min/max over the rows (NaN when there are none). Every JVM DD fill
+    assembles here."""
+    sign = table.column("_sign").to_numpy()
+    key = table.column("_bkey").to_numpy().astype(np.int64)
+    cnt = table.column("_bcnt").to_numpy()
+    lo = table.column("_lo").to_numpy()
+    hi = table.column("_hi").to_numpy()
+
+    def store(s: int):
+        return key[sign == s], cnt[sign == s]
 
     return DDSketchPair.from_bucket_table(
-        alpha, m, int(table.loc[table["_sign"] == 0, "_bcnt"].sum()),
-        *store(1), *store(-1), table["_lo"].min(), table["_hi"].max(),
+        alpha, m, int(cnt[sign == 0].sum()), *store(1), *store(-1),
+        lo.min() if lo.size else np.nan, hi.max() if hi.size else np.nan,
         collapse_mode,
     )
 
@@ -840,8 +941,7 @@ def dd_sketch_global_jvm(
     trash-bin modes the fold history differs from an incremental fill's,
     so use the Arrow fill when reference fold-order parity matters. Not
     available for compat=True (glibc fast-log keys are Python-side)."""
-    buckets = dd_bucket_counts(df, value_col, (), alpha)
-    return _dd_of(pd.DataFrame(buckets.collect(), columns=buckets.columns),
+    return _dd_of(dd_bucket_counts(df, value_col, (), alpha).toArrow(),
                   alpha, m, collapse_mode)
 
 
@@ -864,11 +964,8 @@ def dd_states_grouped_jvm(
     if not group_cols:
         raise ValueError("dd_states_grouped_jvm needs group_cols; "
                          "use dd_sketch_global_jvm for global")
-    buckets = dd_bucket_counts(df, value_col, group_cols, alpha)
-    schema = _state_schema(buckets, group_cols)
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _state_row(pdf, group_cols, schema,
-                          _dd_of(pdf, alpha, m, collapse_mode), 1)
-
-    return buckets.groupBy(*group_cols).applyInPandas(assemble, schema=schema)
+    return _map_key_runs(
+        dd_bucket_counts(df, value_col, group_cols, alpha), group_cols,
+        _state_fields("num_partials"),
+        lambda run: [_state_values(_dd_of(run, alpha, m, collapse_mode), 1)],
+    )

@@ -14,9 +14,8 @@ from __future__ import annotations
 
 from typing import Iterable, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField
 
 from ..core.bloom import BloomFilter
 from ..core.cms import CountMinSketch
@@ -24,7 +23,14 @@ from ..core.hll import HLLSketch
 from ..core.kll import KLLSketch
 from ..core.tdigest import TDigest
 from ..core.theta import ThetaSketch
-from .agg import quantile_table, sketch_global, sketch_grouped
+from .agg import (
+    _QUANTILE_FIELDS,
+    _map_key_runs,
+    _merge_runs,
+    partial_sketches,
+    sketch_global,
+    sketch_grouped,
+)
 
 __all__ = [
     "hll_distinct",
@@ -53,7 +59,7 @@ def _null_safe_broadcast_join(
     """Broadcast-join a small keyed table onto ``df`` with null-SAFE key
     equality. A plain column-name equi-join silently drops every row whose
     key is NULL even when the small table carries a NULL-key row (the agg
-    paths produce one via _null_safe)."""
+    paths emit a NULL-key group as groupBy does)."""
     renamed = small.select(
         *[F.col(c).alias(f"__ns_{c}") for c in keys],
         *[c for c in small.columns if c not in keys],
@@ -73,18 +79,17 @@ def hll_distinct(
 ) -> DataFrame | int:
     """Approximate COUNT(DISTINCT col), grouped or global.
 
-    Grouped -> DataFrame[group..., est:long]; global -> int.
+    Grouped -> DataFrame[group..., est:long], merged and estimated in one
+    key-run stage; global -> int.
     """
     factory = lambda: HLLSketch(p=p)  # noqa: E731
     if not group_cols:
         return int(round(sketch_global(df, col, factory, HLLSketch.from_bytes).estimate()))
-    merged = sketch_grouped(df, col, group_cols, factory, HLLSketch.from_bytes)
-
-    @F.pandas_udf(LongType())
-    def est(states: pd.Series) -> pd.Series:
-        return states.map(lambda b: int(round(HLLSketch.from_bytes(b).estimate())))
-
-    return merged.select(*group_cols, est("state").alias("est"))
+    return _merge_runs(
+        partial_sketches(df, col, group_cols, factory), group_cols,
+        HLLSketch.from_bytes, [StructField("est", LongType(), False)],
+        lambda sk, _: [(int(round(sk.estimate())),)],
+    )
 
 
 # ---------------------------------------------------------------- Theta
@@ -303,35 +308,23 @@ def moments_stats(
 
 def moments_table(merged: DataFrame, group_cols: Sequence[str]) -> DataFrame:
     """Finalize a merged moments STATE table (group..., state) into the
-    stats table — the piece CLI state rollups reuse without rescanning."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
+    stats table — the piece CLI state rollups reuse without rescanning. A
+    statistic that is undefined for its group is NULL."""
     from ..core.moments import MomentsSketch
 
-    stat_fields = [
-        StructField("n", LongType(), False),
-        StructField("mean", DoubleType(), True),
-        StructField("variance", DoubleType(), True),
-        StructField("stddev", DoubleType(), True),
-        StructField("skewness", DoubleType(), True),
-        StructField("kurtosis", DoubleType(), True),
-        StructField("vmin", DoubleType(), True),
-        StructField("vmax", DoubleType(), True),
+    stat_fields = [StructField("n", LongType(), False)] + [
+        StructField(c, DoubleType(), True)
+        for c in ("mean", "variance", "stddev", "skewness", "kurtosis", "vmin", "vmax")
     ]
-    group_fields = [f for f in merged.schema.fields if f.name in group_cols]
-    schema = StructType(group_fields + stat_fields)
 
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = MomentsSketch.from_bytes(pdf["state"].iloc[0])
-        key = tuple(pdf[g].iloc[0] for g in group_cols)
-        row = key + (
-            int(sk.n), float(sk.mean), float(sk.variance()), float(sk.stddev()),
-            float(sk.skewness()), float(sk.kurtosis()), float(sk.vmin),
-            float(sk.vmax),
-        )
-        return pd.DataFrame([row], columns=[f.name for f in schema.fields])
+    def finalize(run) -> list:
+        sk = MomentsSketch.from_bytes(run.column("state")[0].as_py())
+        stats = (sk.mean, sk.variance(), sk.stddev(), sk.skewness(),
+                 sk.kurtosis(), sk.vmin, sk.vmax)
+        return [(int(sk.n), *(None if v != v else float(v) for v in stats))]
 
-    return merged.groupBy(*group_cols).applyInPandas(finalize, schema=schema)
+    return _map_key_runs(merged.select(*group_cols, "state"), group_cols,
+                         stat_fields, finalize)
 
 
 # ---------------------------------------------------------------- CMS
@@ -382,31 +375,24 @@ def heavy_hitters_global(
 def heavy_hitters_grouped(
     df: DataFrame, col: str, group_cols: Sequence[str], k: int = 64, phi: float = 0.01
 ) -> DataFrame:
-    """Per-group frequent items: DataFrame[group..., item, count_lo, err]."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
+    """Per-group frequent items: DataFrame[group..., item, count_lo, err],
+    merged and exploded in one key-run stage."""
     from ..core.heavyhitters import MisraGries
 
-    merged = sketch_grouped(df, col, group_cols, lambda: MisraGries(k=k),
-                            MisraGries.from_bytes)
-    group_fields = [f for f in merged.schema.fields if f.name in group_cols]
-    schema = StructType(
-        group_fields
-        + [
+    def hits(sk, _) -> list:
+        return [(str(item), int(c), int(sk.err))
+                for item, c in sorted(sk.heavy_hitters(phi).items())]
+
+    return _merge_runs(
+        partial_sketches(df, col, group_cols, lambda: MisraGries(k=k)), group_cols,
+        MisraGries.from_bytes,
+        [
             StructField("item", StringType(), True),
             StructField("count_lo", LongType(), False),
             StructField("err", LongType(), False),
-        ]
+        ],
+        hits,
     )
-
-    def explode_hh(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = MisraGries.from_bytes(pdf["state"].iloc[0])
-        key = tuple(pdf[g].iloc[0] for g in group_cols)
-        hits = sk.heavy_hitters(phi)
-        rows = [key + (str(item), int(c), int(sk.err)) for item, c in sorted(hits.items())]
-        return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    return merged.groupBy(*group_cols).applyInPandas(explode_hh, schema=schema)
 
 
 # ---------------------------------------------------------------- DDSketch
@@ -430,14 +416,12 @@ def dd_quantiles(
 
     The fill is the Tungsten signed histogram (agg.dd_bucket_counts): the
     heavy per-row work never leaves the JVM, and each group's bucket table
-    is folded to ``bound`` once (see agg.dd_sketch_global_jvm). For
-    reference fold-order parity in the ddog modes, fill with
+    is folded to ``bound`` once (see agg.dd_sketch_global_jvm). Grouped,
+    one key-run stage assembles each group's pair and reads its quantiles.
+    For reference fold-order parity in the ddog modes, fill with
     sketch_grouped / sketch_global and a DDSketchPair factory instead.
     """
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..core.ddsketch import DDSketchPair
-    from .agg import dd_sketch_global_jvm, dd_states_grouped_jvm
+    from .agg import _dd_of, dd_bucket_counts, dd_sketch_global_jvm
 
     qs = [float(q) for q in qs]
 
@@ -454,31 +438,27 @@ def dd_quantiles(
         return df.sparkSession.createDataFrame(
             rows_of(sk), "q double, est double, q0 double, q1 double, alpha_now double"
         )
-    merged = dd_states_grouped_jvm(df, value_col, group_cols, alpha,
-                                   m=bound, collapse_mode=collapse_mode)
-    group_fields = [f for f in merged.schema.fields if f.name in group_cols]
-    schema = StructType(
-        group_fields
-        + [
-            StructField("q", DoubleType(), False),
-            StructField("est", DoubleType(), True),
-            StructField("q0", DoubleType(), False),
-            StructField("q1", DoubleType(), False),
-            StructField("alpha_now", DoubleType(), False),
-        ]
+    return _map_key_runs(
+        dd_bucket_counts(df, value_col, group_cols, alpha), group_cols,
+        _QUANTILE_FIELDS + [
+            StructField(c, DoubleType(), False) for c in ("q0", "q1", "alpha_now")
+        ],
+        lambda run: rows_of(_dd_of(run, alpha, bound, collapse_mode)),
     )
-
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = DDSketchPair.from_bytes(pdf["state"].iloc[0])
-        key = tuple(pdf[g].iloc[0] for g in group_cols)
-        return pd.DataFrame(
-            [key + r for r in rows_of(sk)], columns=[f.name for f in schema.fields]
-        )
-
-    return merged.groupBy(*group_cols).applyInPandas(finalize, schema=schema)
 
 
 # ---------------------------------------------------------------- quantiles
+def _grouped_quantiles(df, value_col, group_cols, factory, from_bytes, qs):
+    """DataFrame[group..., q, est]: Arrow partials, then one key-run stage
+    that merges each group's blobs and reads its quantiles."""
+    qs = [float(q) for q in qs]
+    return _merge_runs(
+        partial_sketches(df, value_col, group_cols, factory), group_cols,
+        from_bytes, _QUANTILE_FIELDS,
+        lambda sk, _: [(q, float(sk.quantile(q))) for q in qs],
+    )
+
+
 def tdigest_quantiles(
     df: DataFrame,
     value_col: str,
@@ -489,8 +469,8 @@ def tdigest_quantiles(
     factory = lambda: TDigest(delta=delta)  # noqa: E731
     qs = list(qs)
     if group_cols:
-        merged = sketch_grouped(df, value_col, group_cols, factory, TDigest.from_bytes)
-        return quantile_table(merged, group_cols, qs, TDigest.from_bytes)
+        return _grouped_quantiles(df, value_col, group_cols, factory,
+                                  TDigest.from_bytes, qs)
     sk = sketch_global(df, value_col, factory, TDigest.from_bytes)
     return df.sparkSession.createDataFrame(
         [(float(q), float(sk.quantile(q))) for q in qs], "q double, est double"
@@ -507,8 +487,8 @@ def kll_quantiles(
     factory = lambda: KLLSketch(k=k)  # noqa: E731
     qs = list(qs)
     if group_cols:
-        merged = sketch_grouped(df, value_col, group_cols, factory, KLLSketch.from_bytes)
-        return quantile_table(merged, group_cols, qs, KLLSketch.from_bytes)
+        return _grouped_quantiles(df, value_col, group_cols, factory,
+                                  KLLSketch.from_bytes, qs)
     sk = sketch_global(df, value_col, factory, KLLSketch.from_bytes)
     return df.sparkSession.createDataFrame(
         [(float(q), float(sk.quantile(q))) for q in qs], "q double, est double"

@@ -63,8 +63,8 @@ def parse_args(argv=None):
                         "distinct values, not rows (duplicate-heavy columns). "
                         "State-identical for udds --compat; bound-preserving "
                         "for tdigest; rejected for kll/dd and with "
-                        "--checkpoint. No effect on udds without --compat, "
-                        "whose Tungsten bucket fill already counts per key")
+                        "--checkpoint, and for udds without --compat and "
+                        "global moments, which fill on the JVM")
     p.add_argument("--length-dist", choices=["uniform", "lognormal", "beta"],
                    default="uniform",
                    help="--generate: text length distribution (reference set)")
@@ -160,6 +160,12 @@ def main(argv=None) -> int:
     if args.pre_aggregate and args.sketch in ("kll", "dd"):
         raise SystemExit(f"--pre-aggregate is not exact for --sketch {args.sketch} "
                          "(rank compaction / pair stores sample items)")
+    if args.pre_aggregate and args.sketch == "udds" and not args.compat:
+        raise SystemExit("--pre-aggregate has no effect on --sketch udds without "
+                         "--compat: its Tungsten bucket fill already counts per key")
+    if args.pre_aggregate and args.sketch == "moments" and not args.group_by:
+        raise SystemExit("--pre-aggregate has no effect on global --sketch moments, "
+                         "which is one Catalyst aggregation")
     if args.pre_aggregate and args.checkpoint:
         # checkpoint lineage fingerprints input FILES; partials derived from
         # a shuffled counts table have no stable file lineage to resume from

@@ -299,3 +299,33 @@ def test_asof_and_sessionize_no_extra_exchange_on_sf_data(spark):
     plan = executed(sessionize(ev, ts_col="ts", by=["user_id"],
                                gap="INTERVAL 30 MINUTES"))
     assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_grouped_sketch_apis_run_one_key_run_stage(spark):
+    """Every grouped merge and finalize is one mapInArrow key-run stage: no
+    executed plan holds a per-group FlatMapGroupsInPandas, and the grouped
+    quantile/estimate APIs of the Arrow-filled kernels merge and finalize
+    in that stage, with no ArrowEvalPython finalize after it."""
+    from puddsketch_spark.core import UDDSketch
+    from puddsketch_spark.spark.agg import merge_grouped, partial_sketches, udds_quantiles
+    from puddsketch_spark.spark.sketches import (
+        dd_quantiles, hll_distinct, kll_quantiles, tdigest_quantiles)
+
+    df = spark.createDataFrame(
+        [(f"g{i % 2}", float(i + 1)) for i in range(200)], "g string, v double")
+    parts = partial_sketches(df, "v", ["g"], UDDSketch)
+    cases = {
+        "udds_quantiles": (udds_quantiles(df, "v", ["g"]), False),
+        "dd_quantiles": (dd_quantiles(df, "v", ["g"]), False),
+        "merge_grouped": (merge_grouped(parts, ["g"], UDDSketch.from_bytes), False),
+        "kll_quantiles": (kll_quantiles(df, "v", ["g"]), True),
+        "tdigest_quantiles": (tdigest_quantiles(df, "v", ["g"]), True),
+        "hll_distinct": (hll_distinct(df, "v", ["g"]), True),
+    }
+    for name, (out, fused) in cases.items():
+        assert len(out.collect()) >= 2, name
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan, (name, plan)
+        assert "FlatMapGroupsInPandas" not in plan, (name, plan)
+        if fused:
+            assert "ArrowEvalPython" not in plan, (name, plan)

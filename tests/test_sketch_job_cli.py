@@ -3,8 +3,9 @@ job calls spark.stop(), so it must not share the test session).
 
 Covers: --rollup on a fresh fill (+ --save-states), --grouping-sets on
 --from-states (no rescan) with bit-identical global estimates, the
-bad-column refusal, and --sketch udds estimates equal to an in-process
-Arrow fill of the same generated input.
+bad-column refusal, --sketch udds estimates equal to an in-process
+Arrow fill of the same generated input, and --pre-aggregate refused where
+the fill ignores it.
 """
 
 import json
@@ -104,3 +105,15 @@ def test_sketch_job_udds_engines_agree(spark):
                  for key, sk in sks.items() for q in qs}
         assert len(cli) >= 3  # every quantile of at least one group
         assert cli == arrow, group
+
+
+def test_sketch_job_pre_aggregate_rejected_where_ignored():
+    """--pre-aggregate only steers the Arrow-filled kernels: on --sketch udds
+    without --compat (grouped or global) and on global --sketch moments the
+    fill is on the JVM, so the flag is refused instead of ignored."""
+    for extra in (["--sketch", "udds", "--group-by", "role"],
+                  ["--sketch", "udds", "--group-by"],
+                  ["--sketch", "moments", "--group-by"]):
+        proc = _run(["--generate", "2000", "--pre-aggregate", *extra], timeout=120)
+        assert proc.returncode != 0, extra
+        assert "--pre-aggregate has no effect" in proc.stderr, (extra, proc.stderr[-500:])

@@ -839,3 +839,126 @@ def test_fused_jvm_quantile_table_bit_parity(spark):
         }
         assert fused == two_stage, m
         assert {g for g, _ in fused} == {"g0", "g1", "g2", None}
+
+
+# ------------------------------------------------------- key-run stage
+def _groups(rows, key_cols, val=None):
+    """Multiset of (repr(key...), value) — repr keeps NaN, -0.0 and None
+    distinct and comparable."""
+    return sorted((tuple(repr(r[c]) for c in key_cols), None if val is None else r[val])
+                  for r in rows)
+
+
+def test_float_group_keys_match_groupby(spark):
+    """A DOUBLE key holding 0.0, -0.0, NaN and NULL groups as groupBy groups
+    it: 0.0 and -0.0 merge, NaN stays a NaN group (not a second NULL
+    group), NULL is its own group — for merge_grouped, udds_quantiles and
+    dd_quantiles alike."""
+    from puddsketch_spark.spark.sketches import dd_quantiles
+
+    rows = [(0.0, 1.0), (-0.0, 2.0), (float("nan"), 3.0), (None, 4.0),
+            (float("nan"), 5.0), (1.5, 6.0), (-0.0, 7.0)]
+    df = spark.createDataFrame(rows, "g double, v double").repartition(3)
+    want = _groups(df.groupBy("g").agg(F.count("v").alias("n")).collect(), ["g"], "n")
+    assert len(want) == 4
+    merged = sketch_grouped(df, "v", ["g"], lambda: UDDSketch(m=0))
+    assert _groups(merged.collect(), ["g"], "n") == want
+    keys = [(k, None) for k, _ in want]
+    assert _groups(udds_quantiles(df, "v", ["g"], [0.5]).collect(), ["g"]) == keys
+    assert _groups(dd_quantiles(df, "v", ["g"], [0.5]).collect(), ["g"]) == keys
+
+
+@pytest.fixture
+def small_batches(spark):
+    """Arrow batches of 3 rows, so most groups straddle batch boundaries."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    yield
+    spark.conf.set(key, prev)
+
+
+def _straddle_results(df):
+    from puddsketch_spark.spark.sketches import kll_quantiles
+
+    merged = sketch_grouped(df, "v", ["g"], lambda: UDDSketch(initial_alpha=0.01, m=0))
+    return (
+        sorted((r.g, bytes(r.state), r.n, r.num_partials) for r in merged.collect()),
+        sorted(map(tuple, udds_quantiles(df, "v", ["g"], [0.1, 0.5, 0.9]).collect())),
+        sorted(map(tuple, kll_quantiles(df, "v", ["g"], [0.1, 0.5, 0.9]).collect())),
+    )
+
+
+def test_key_runs_straddle_arrow_batches(spark, request):
+    """Groups spread over several partials and bucket rows give the same
+    states and estimates when every Arrow batch holds 3 rows. KLL sees at
+    most k values per group, so it is exact and order-free too."""
+    rng = np.random.default_rng(3)
+    rows = [(int(g), float(v)) for g in range(40) for v in rng.lognormal(3, 1, 60)]
+    df = spark.createDataFrame(rows, "g int, v double").repartition(8)
+    want = _straddle_results(df)
+    request.getfixturevalue("small_batches")
+    got = _straddle_results(df)
+    assert all(len(w) >= 40 for w in want)
+    assert got == want
+
+
+def test_key_runs_multi_column_keys_in_any_order(spark):
+    """group_cols listed in the reverse of the table's column order: every
+    key value comes out under its own column, for the state table and the
+    fused quantile finalize."""
+    from puddsketch_spark.spark.sketches import kll_quantiles
+
+    rows = [(f"b{i % 3}", i % 5, float(i + 1)) for i in range(90)]
+    df = spark.createDataFrame(rows, "b string, a int, v double")
+    want = {(r.a, r.b): r["count"] for r in df.groupBy("a", "b").count().collect()}
+    merged = sketch_grouped(df, "v", ["a", "b"], lambda: UDDSketch(m=0))
+    assert merged.columns[:2] == ["a", "b"]
+    assert {(r.a, r.b): r.n for r in merged.collect()} == want
+    for api in (udds_quantiles, kll_quantiles):
+        got = {(r.a, r.b) for r in api(df, "v", ["a", "b"], [0.5]).collect()}
+        assert got == set(want), api.__name__
+
+
+def test_key_runs_null_keys_and_more_groups_than_partitions(spark):
+    """NULL string and bigint keys (ids above 2^53 too) each form one group,
+    and 60 groups over spark.sql.shuffle.partitions=8 all come out once."""
+    from puddsketch_spark.spark.sketches import hll_distinct, tdigest_quantiles
+
+    big = (1 << 53) + 1
+    rows = [(None if i % 7 == 0 else f"s{i % 4}",
+             None if i % 11 == 0 else big + i % 15, float(i)) for i in range(600)]
+    df = spark.createDataFrame(rows, "s string, k bigint, v double").repartition(5)
+    want = {(r.s, r.k): r["count"] for r in df.groupBy("s", "k").count().collect()}
+    assert len(want) > int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert (None, None) in want
+    merged = sketch_grouped(df, "v", ["s", "k"], lambda: UDDSketch(m=0))
+    got = [(r.s, r.k, r.n) for r in merged.collect()]
+    assert len(got) == len(want)
+    assert {(s, k): n for s, k, n in got} == want
+    assert {(r.s, r.k) for r in hll_distinct(df, "v", ["s", "k"]).collect()} == set(want)
+    td = tdigest_quantiles(df, "v", ["s", "k"], [0.5, 0.9]).collect()
+    assert len(td) == 2 * len(want)
+
+
+def test_key_runs_empty_input(spark):
+    """Empty input: every grouped key-run API gives zero rows and raises
+    nothing."""
+    from puddsketch_spark.spark.agg import merge_grouped, sketch_grouped_jvm
+    from puddsketch_spark.spark.sketches import (
+        dd_quantiles, heavy_hitters_grouped, hll_distinct, kll_quantiles,
+        tdigest_quantiles)
+
+    df = spark.createDataFrame([("a", 1.0)], "g string, v double").where("v < 0")
+    parts = partial_sketches(df, "v", ["g"], UDDSketch)
+    outs = [
+        merge_grouped(parts, ["g"], UDDSketch.from_bytes),
+        sketch_grouped_jvm(df, "v", ["g"], 0.01, 200),
+        udds_quantiles(df, "v", ["g"]),
+        dd_quantiles(df, "v", ["g"]),
+        kll_quantiles(df, "v", ["g"]),
+        tdigest_quantiles(df, "v", ["g"]),
+        hll_distinct(df, "v", ["g"]),
+        heavy_hitters_grouped(df, "v", ["g"]),
+    ]
+    assert [o.collect() for o in outs] == [[]] * len(outs)
