@@ -4,26 +4,23 @@ Mergeable, Arrow-vectorized sketch UDAFs (UDDSketch quantiles + HLL, count-min,
 t-digest, KLL, REQ, Bloom, Misra-Gries) over transcript-shaped tables, plus
 training-data pipeline operators (dedup, similarity search, text analysis).
 
-Convenience re-exports: the kernels and the flagship aggregation APIs.
+Convenience re-exports: the kernels and the flagship aggregation APIs, all
+resolved on first use. Importing the package loads neither numpy/pandas nor
+Spark, so the local Python worker daemon (``spark.pydaemon``) stays light.
 """
 
-from .core import (  # noqa: F401
-    BloomFilter,
-    CountMinSketch,
-    DDSketchPair,
-    HLLSketch,
-    KLLSketch,
-    MisraGries,
-    REQSketch,
-    TDigest,
-    UDDSketch,
-)
-
 __version__ = "0.1.0"
+
+_CORE = {"BloomFilter", "CountMinSketch", "DDSketchPair", "HLLSketch",
+         "KLLSketch", "MisraGries", "REQSketch", "TDigest", "UDDSketch"}
 
 
 def __getattr__(name):
     # lazy: importing the package must not require a SparkSession/JVM
+    if name in _CORE:
+        from . import core
+
+        return getattr(core, name)
     if name in {"udds_quantiles", "sketch_grouped", "sketch_global",
                 "sketch_grouped_jvm", "quantile_table"}:
         from .spark import agg

@@ -133,9 +133,12 @@ def partial_sketches(
 
     mapInArrow map-side combine: group columns stay dictionary-encoded
     (codes are int32 numpy; only the per-DISTINCT-group values ever become
-    Python objects), values go straight to the kernel's numpy ``update``.
-    Zero per-row Python objects — the pandas conversion of millions of
-    group strings was the hot spot at 50M+ rows. Emits per-partition
+    Python objects), so group columns cost no per-row Python objects — the
+    pandas conversion of millions of group strings was the hot spot at 50M+
+    rows. Numeric values go straight to the kernel's numpy ``update``; a
+    string value column (the HLL/CMS/Bloom/theta fills over ``conv_id``)
+    still becomes one Python ``str`` per row in ``to_numpy`` before the
+    kernel hashes it. Emits per-partition
     lineage/metrics (partition_id, n, buckets, collapses) per the
     north_rule, mirroring the reference's per-rank logs
     (/root/reference/ParallelDDSketch/src/ParallelSketcher.cc:662-708).

@@ -8,6 +8,18 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark"]
 
+_PKG = "puddsketch_spark"
+
+
+def _imports_pkg_from(search_path, pkg_root: str) -> bool:
+    """True when the first entry of search_path that holds a puddsketch_spark
+    is pkg_root: ``python -m`` there imports this package, not another
+    checkout."""
+    for d in search_path:
+        if d and os.path.exists(os.path.join(d, _PKG)):
+            return os.path.samefile(d, pkg_root)
+    return False
+
 
 def get_spark(
     app_name: str = "puddsketch_spark",
@@ -17,6 +29,20 @@ def get_spark(
 ) -> SparkSession:
     """Build a session. On a real cluster these come from spark-submit conf;
     locally we default to local[$SPARK_GRAFT_CPUS or *].
+
+    Local sessions start their Python worker daemon as
+    ``puddsketch_spark.spark.pydaemon``: stock ``pyspark.daemon`` plus a
+    stat-checked ``zipimporter.invalidate_caches``. PySpark invalidates the
+    import caches at the start of every Python task, and on CPython 3.11 that
+    re-reads the whole directory of pyspark.zip and of the spark-core jar,
+    55-100 ms per task on a 4-vCPU host; with the check an unchanged archive
+    is not re-read, and after a worker's first task that set-up takes about
+    0.1 ms. A grouped sketch call runs one or two Python stages, so this was
+    about a fifth of a ``fill_unique_many`` op (perfbench). Non-local
+    masters keep the stock daemon, since only a local master's workers get
+    this package on their PYTHONPATH from here; so does a session whose
+    working directory holds another checkout of the package, which
+    ``python -m`` would import first.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
@@ -90,6 +116,12 @@ def get_spark(
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
+    if (master == "local" or master.startswith("local[")) and _imports_pkg_from(
+        [os.getcwd(), *os.environ["PYTHONPATH"].split(os.pathsep)], pkg_root
+    ):
+        # ours: skips the per-task re-read of pyspark.zip and the spark-core
+        # jar (55-100 ms per Python task; see the docstring and pydaemon)
+        b = b.config("spark.python.daemon.module", f"{_PKG}.spark.pydaemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -63,14 +63,15 @@ def parse_args(argv=None):
                         "distinct values, not rows (duplicate-heavy columns). "
                         "State-identical for udds --compat; bound-preserving "
                         "for tdigest; rejected for kll/dd and with "
-                        "--checkpoint, and for udds without --compat and "
-                        "global moments, which fill on the JVM")
+                        "--checkpoint, for udds without --compat and "
+                        "global moments, which fill on the JVM, and for global "
+                        "tdigest")
     p.add_argument("--length-dist", choices=["uniform", "lognormal", "beta"],
                    default="uniform",
                    help="--generate: text length distribution (reference set)")
     p.add_argument("--checkpoint",
                    help="dir for resumable per-partition state (the fill "
-                        "then runs on Arrow partials)")
+                        "then runs on Arrow partials); needs --group-by")
     p.add_argument("--save-states",
                    help="also write the merged per-group sketch STATE table "
                         "(parquet, binary state column) — the incremental-"
@@ -166,6 +167,12 @@ def main(argv=None) -> int:
     if args.pre_aggregate and args.sketch == "moments" and not args.group_by:
         raise SystemExit("--pre-aggregate has no effect on global --sketch moments, "
                          "which is one Catalyst aggregation")
+    if args.pre_aggregate and args.sketch == "tdigest" and not args.group_by:
+        raise SystemExit("--pre-aggregate has no effect on global --sketch tdigest, "
+                         "whose quantiles come from an unweighted tdigest_quantiles")
+    if args.checkpoint and not args.group_by:
+        raise SystemExit("--checkpoint needs --group-by: resumable state is the "
+                         "grouped per-partition state table")
     if args.pre_aggregate and args.checkpoint:
         # checkpoint lineage fingerprints input FILES; partials derived from
         # a shuffled counts table have no stable file lineage to resume from
@@ -307,11 +314,13 @@ def main(argv=None) -> int:
                 UDDSketch.from_bytes,
             )
             out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
-        elif group:
+        elif group and (args.save_states or sets is not None):
             merged = sketch_grouped_jvm(df, args.feature, group, args.alpha, args.max_buckets)
             out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
         else:
-            out = udds_quantiles(df, args.feature, (), args.quantiles,
+            # no state table wanted: one key-run stage assembles each
+            # group's sketch and reads its quantiles
+            out = udds_quantiles(df, args.feature, group, args.quantiles,
                                  args.alpha, args.max_buckets)
     elif args.sketch in ("hll", "theta"):
         from puddsketch_spark.core import HLLSketch, ThetaSketch
@@ -351,6 +360,11 @@ def main(argv=None) -> int:
             out = moments_table(merged, group)
         else:
             out = moments_stats(df, args.feature, ())
+    elif not group:
+        from puddsketch_spark.spark.sketches import kll_quantiles, tdigest_quantiles
+
+        quantiles = kll_quantiles if args.sketch == "kll" else tdigest_quantiles
+        out = quantiles(df, args.feature, (), args.quantiles)
     else:
         factory = (lambda: KLLSketch(k=200)) if args.sketch == "kll" else (lambda: TDigest())
         from_bytes = KLLSketch.from_bytes if args.sketch == "kll" else TDigest.from_bytes

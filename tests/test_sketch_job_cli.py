@@ -4,8 +4,9 @@ job calls spark.stop(), so it must not share the test session).
 Covers: --rollup on a fresh fill (+ --save-states), --grouping-sets on
 --from-states (no rescan) with bit-identical global estimates, the
 bad-column refusal, --sketch udds estimates equal to an in-process
-Arrow fill of the same generated input, and --pre-aggregate refused where
-the fill ignores it.
+Arrow fill of the same generated input, global --sketch kll/tdigest,
+and --pre-aggregate or a global --checkpoint refused where the job would
+ignore them.
 """
 
 import json
@@ -110,10 +111,38 @@ def test_sketch_job_udds_engines_agree(spark):
 def test_sketch_job_pre_aggregate_rejected_where_ignored():
     """--pre-aggregate only steers the Arrow-filled kernels: on --sketch udds
     without --compat (grouped or global) and on global --sketch moments the
-    fill is on the JVM, so the flag is refused instead of ignored."""
+    fill is on the JVM, and global --sketch tdigest reads tdigest_quantiles,
+    so the flag is refused instead of ignored."""
     for extra in (["--sketch", "udds", "--group-by", "role"],
                   ["--sketch", "udds", "--group-by"],
-                  ["--sketch", "moments", "--group-by"]):
+                  ["--sketch", "moments", "--group-by"],
+                  ["--sketch", "tdigest", "--group-by"]):
         proc = _run(["--generate", "2000", "--pre-aggregate", *extra], timeout=120)
         assert proc.returncode != 0, extra
         assert "--pre-aggregate has no effect" in proc.stderr, (extra, proc.stderr[-500:])
+
+
+def test_sketch_job_global_kll_and_tdigest():
+    """A bare --group-by (global) --sketch kll / tdigest prints one q/est row
+    per quantile, in the generated text_len range (1..999)."""
+    qs = [0.1, 0.5, 0.9]
+    for sketch in ("kll", "tdigest"):
+        proc = _run(["--generate", "2000", "--sketch", sketch, "--group-by",
+                     "--quantiles", *map(str, qs)])
+        assert proc.returncode == 0, (sketch, proc.stderr[-2000:])
+        rows = [json.loads(ln) for ln in proc.stdout.strip().splitlines()
+                if ln.startswith("{")]
+        assert [r["q"] for r in rows] == qs, sketch
+        ests = [r["est"] for r in rows]
+        assert ests == sorted(ests) and 1 <= ests[0] and ests[-1] <= 999, sketch
+
+
+def test_sketch_job_global_checkpoint_refused(tmp_path):
+    """--checkpoint resumes a grouped per-partition state table; without
+    --group-by there is none, so the job refuses instead of ignoring the
+    flag (udds, moments) or failing inside the grouped merge (kll, tdigest)."""
+    for sketch in ("udds", "kll", "tdigest", "moments"):
+        proc = _run(["--generate", "2000", "--sketch", sketch, "--group-by",
+                     "--checkpoint", str(tmp_path / "ckpt")], timeout=120)
+        assert proc.returncode != 0, sketch
+        assert "--checkpoint needs --group-by" in proc.stderr, (sketch, proc.stderr[-500:])
