@@ -123,7 +123,7 @@ class DDSketchPair:
     # compat=True: bucket keys via glibc log10 exactly as the reference
     # binary computes them — ceil(log10(|x|) / log10(gamma)) — for
     # bucket-for-bucket golden equality with the COMPILED reference kernels
-    # (scripts/gen_golden_ddog.py). Fill-time only; merge/quantile/serde
+    # (tests/golden/README.md). Fill-time only; merge/quantile/serde
     # are log-free and from_bytes yields compat=False.
     compat: bool = False
 

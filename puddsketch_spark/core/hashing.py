@@ -38,8 +38,10 @@ def hash64(values) -> np.ndarray:
     float round-trip — snowflake-style IDs above 2^53 must not collide);
     floats hash via their float64 bits. Consequently int 5 and float 5.0
     hash DIFFERENTLY: probe hash sketches with the same dtype the column was
-    built with (the Spark agg layer keeps integer columns integral for
-    hash-family kernels).
+    built with. Every Spark fill surface (``sketch_grouped``, the SQL
+    functions, streaming) picks the dtype from the column's Arrow type in
+    one place, ``spark.agg._kernel_input``: integer columns stay int64
+    for hash-family kernels, NULLs or not.
     """
     arr = values.to_numpy() if isinstance(values, pd.Series) else np.asarray(values)
     if arr.dtype.kind in "iu":

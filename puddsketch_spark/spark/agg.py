@@ -122,6 +122,33 @@ def _kernel_update_weighted(sk, vals: np.ndarray, w: np.ndarray):
     )
 
 
+def _kernel_input(col, sk) -> tuple[np.ndarray, np.ndarray | None]:
+    """``(values, valid)`` that kernel ``sk`` gets for Arrow column ``col``
+    (``valid`` None: all rows count) — the one rule of every fill surface:
+    partial_sketches, the SQL functions and the streaming updates.
+
+    * integer column, hash/exact kernel: int64 plus a validity mask, so
+      ids above 2^53 stay distinct and Misra-Gries keys stay ints;
+    * other numeric column, or numeric kernel: float64, NULL as NaN (which
+      every kernel drops); integers above 2^53 round, as in any float
+      kernel (``safe=False``: the checked cast raises on them);
+    * anything else: ``to_numpy`` (a Python ``str`` per row for strings)
+      plus a validity mask.
+
+    So the SQL type alone sets the hash domain: int 5 and double 5.0 hash
+    differently (``hashing.hash64``)."""
+    import pyarrow as pa
+
+    t = col.type
+    if (pa.types.is_integer(t)
+            and getattr(sk, "value_family", "numeric") in ("hash", "exact")):
+        valid = ~np.asarray(col.is_null()) if col.null_count else None
+        return col.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64), valid
+    if pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_decimal(t):
+        return col.cast(pa.float64(), safe=False).to_numpy(zero_copy_only=False), None
+    return col.to_numpy(zero_copy_only=False), ~np.asarray(col.is_null())
+
+
 def partial_sketches(
     df: DataFrame,
     value_col: str,
@@ -148,16 +175,6 @@ def partial_sketches(
                         + _state_fields("partition_id"))
     sel = [*group_cols, value_col] + ([weight_col] if weight_col else [])
     pruned = df.select(*sel)
-    tname = pruned.schema[value_col].dataType.typeName()
-    numeric_value = tname in {
-        "double", "float", "integer", "long", "short", "byte", "decimal",
-    }
-    int_value = tname in {"integer", "long", "short", "byte"}
-    # hash-family kernels (HLL/CMS/Bloom) hash integer columns via their
-    # exact bit pattern, and exact-key kernels (MisraGries) keep raw keys —
-    # a float64 round-trip would collide IDs above 2^53 and turn keys into
-    # '12345.0'-style strings downstream
-    preserve_int = getattr(factory(), "value_family", "numeric") in ("hash", "exact")
 
     def build(batches):
         import pyarrow as pa
@@ -165,22 +182,9 @@ def partial_sketches(
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         sketches: dict[tuple, object] = {}
-        arrow_schema = None
+        proto = factory()  # its value_family picks the kernel input
         for batch in batches:
-            if arrow_schema is None:
-                arrow_schema = batch.schema
-            vcol = batch.column(len(group_cols))
-            if preserve_int and int_value:
-                valid = ~np.asarray(vcol.is_null()) if vcol.null_count else None
-                vals_all = (
-                    vcol.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
-                )
-            elif numeric_value:
-                vals_all = vcol.cast(pa.float64()).to_numpy(zero_copy_only=False)
-                valid = None
-            else:
-                vals_all = vcol.to_numpy(zero_copy_only=False)
-                valid = ~np.asarray(vcol.is_null())
+            vals_all, valid = _kernel_input(batch.column(len(group_cols)), proto)
             w_all = None
             if weight_col is not None:
                 w_all = (

@@ -27,6 +27,7 @@ from typing import Iterable, Iterator, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -39,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from ..core.uddsketch import UDDSketch
+from ..spark.agg import _kernel_input
 
 __all__ = [
     "udds_state_update",
@@ -49,6 +51,7 @@ __all__ = [
 ]
 
 _STATE_SCHEMA = StructType([StructField("blob", BinaryType(), True)])
+_NULL_FLAG = "_value_is_null"
 
 
 def _group_fields(stream_df: DataFrame, group_cols: Sequence[str]):
@@ -58,23 +61,45 @@ def _group_fields(stream_df: DataFrame, group_cols: Sequence[str]):
     return [by_name[c] for c in group_cols]
 
 
-def _make_update(value_col, factory, from_bytes, finalize, out_columns, state_ttl_ms):
+def _value_input(stream_df: DataFrame, value_col: str):
+    """``(stream_df, arrow_type)`` of the value column. pandas would turn an
+    integer column holding a NULL into float64, so such a column is made
+    NULL-free on the JVM side and its NULLs ride in ``_NULL_FLAG``."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    dtype = stream_df.schema[value_col].dataType
+    arrow_type = to_arrow_type(dtype)
+    if pa.types.is_integer(arrow_type):
+        v = F.col(value_col)
+        stream_df = stream_df.withColumn(_NULL_FLAG, v.isNull()).withColumn(
+            value_col, F.coalesce(v, F.lit(0).cast(dtype)))
+    return stream_df, arrow_type
+
+
+def _fold(state: GroupState, pdfs, factory, from_bytes, value_col, arrow_type):
+    """The group's stored sketch (or a fresh one) updated with this
+    trigger's rows through ``agg._kernel_input``, the rule every fill
+    surface shares, and stored back."""
+    sk = from_bytes(bytes(state.get[0])) if state.exists else factory()
+    for pdf in pdfs:
+        col = pa.Array.from_pandas(
+            pdf[value_col], type=arrow_type,
+            mask=(pdf[_NULL_FLAG].to_numpy(dtype=bool)
+                  if pa.types.is_integer(arrow_type) else None))
+        vals, valid = _kernel_input(col, sk)
+        sk.update(vals if valid is None else vals[valid])
+    state.update((sk.to_bytes(),))
+    return sk
+
+
+def _make_update(value_col, arrow_type, factory, from_bytes, finalize, out_columns,
+                 state_ttl_ms):
     def update(key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
         if state_ttl_ms is not None and state.hasTimedOut:
             state.remove()  # idle group: evict the sketch blob
             return
-        if state.exists:
-            (blob,) = state.get
-            sk = from_bytes(bytes(blob))
-        else:
-            sk = factory()
-        for pdf in pdfs:
-            col = pdf[value_col]
-            if col.dtype.kind in "if":
-                sk.update(col.to_numpy(dtype="float64", na_value=np.nan))
-            else:
-                sk.update(col.dropna().to_numpy())
-        state.update((sk.to_bytes(),))
+        sk = _fold(state, pdfs, factory, from_bytes, value_col, arrow_type)
         if state_ttl_ms is not None:
             state.setTimeoutDuration(state_ttl_ms)
         yield pd.DataFrame([tuple(key) + tuple(finalize(sk))], columns=out_columns)
@@ -103,8 +128,9 @@ def streaming_sketch(
     out_schema = StructType(
         _group_fields(stream_df, group_cols) + list(finalize_schema.fields)
     )
+    stream_df, arrow_type = _value_input(stream_df, value_col)
     update = _make_update(
-        value_col, factory, from_bytes, finalize,
+        value_col, arrow_type, factory, from_bytes, finalize,
         [f.name for f in out_schema.fields], state_ttl_ms,
     )
     return stream_df.groupBy(*group_cols).applyInPandasWithState(
@@ -161,9 +187,10 @@ def streaming_sketch_windowed(
         f"{window_seconds} seconds",
         f"{slide_seconds or window_seconds} seconds",
     )
-    src = (
+    src, arrow_type = _value_input(
         stream_df.withWatermark(ts_col, f"{watermark_seconds} seconds")
-        .withColumn("window_start", win["start"])
+        .withColumn("window_start", win["start"]),
+        value_col,
     )
     out_schema = StructType(
         [StructField("window_start", TimestampType(), True)]
@@ -206,18 +233,7 @@ def streaming_sketch_windowed(
                 [tuple(key) + tuple(finalize(sk)) + (True,)], columns=out_columns
             )
             return
-        if state.exists:
-            (blob,) = state.get
-            sk = from_bytes(bytes(blob))
-        else:
-            sk = factory()
-        for pdf in pdfs:
-            col = pdf[value_col]
-            if col.dtype.kind in "if":
-                sk.update(col.to_numpy(dtype="float64", na_value=np.nan))
-            else:
-                sk.update(col.dropna().to_numpy())
-        state.update((sk.to_bytes(),))
+        sk = _fold(state, pdfs, factory, from_bytes, value_col, arrow_type)
         window_start = key[0]  # naive session-tz Timestamp of the window
         state.setTimeoutTimestamp(_epoch_ms(window_start) + horizon_ms)
         yield pd.DataFrame(
@@ -327,7 +343,8 @@ def udds_state_update(
     state_ttl_ms: int | None = None,
 ):
     """Build the UDDSketch applyInPandasWithState update function (testable
-    standalone; the streaming wiring lives in streaming_sketch)."""
+    standalone; the streaming wiring lives in streaming_sketch). The value
+    column is read as DOUBLE, as UDD reads any numeric column."""
     qs = [float(q) for q in qs]
     cols = (
         list(group_cols)
@@ -336,6 +353,7 @@ def udds_state_update(
     )
     return _make_update(
         value_col,
+        pa.float64(),
         lambda: UDDSketch(initial_alpha=alpha, m=m),
         UDDSketch.from_bytes,
         lambda sk: tuple(float(sk.quantile(q)) for q in qs)

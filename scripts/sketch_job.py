@@ -71,7 +71,8 @@ def parse_args(argv=None):
                    help="--generate: text length distribution (reference set)")
     p.add_argument("--checkpoint",
                    help="dir for resumable per-partition state (the fill "
-                        "then runs on Arrow partials); needs --group-by")
+                        "then runs on Arrow partials); needs --group-by; "
+                        "not for --sketch dd")
     p.add_argument("--save-states",
                    help="also write the merged per-group sketch STATE table "
                         "(parquet, binary state column) — the incremental-"
@@ -173,6 +174,10 @@ def main(argv=None) -> int:
     if args.checkpoint and not args.group_by:
         raise SystemExit("--checkpoint needs --group-by: resumable state is the "
                          "grouped per-partition state table")
+    if args.checkpoint and args.sketch == "dd":
+        raise SystemExit("--checkpoint has no effect on --sketch dd: it fills on "
+                         "the JVM bucket histogram, with no per-partition state "
+                         "table to resume")
     if args.pre_aggregate and args.checkpoint:
         # checkpoint lineage fingerprints input FILES; partials derived from
         # a shuffled counts table have no stable file lineage to resume from
@@ -283,13 +288,23 @@ def main(argv=None) -> int:
     group = list(args.group_by)
     sets = _rollup_sets(args, group)  # None unless a rollup flag was given
     merged = None  # grouped state table, when the chosen path produces one
+
+    def fill_grouped(factory, from_bytes):
+        """The grouped Arrow fill, resumable from --checkpoint when given."""
+        if args.checkpoint:
+            from puddsketch_spark.spark.checkpoint import checkpointed_sketch_grouped
+
+            return checkpointed_sketch_grouped(
+                spark, df, args.feature, group, args.checkpoint, factory, from_bytes)
+        return sketch_grouped(df, args.feature, group, factory, from_bytes,
+                              pre_aggregate=args.pre_aggregate)
+
     if args.sketch == "udds" and args.compat:
         # compat keys come from the reference fast-log — a Python kernel
         # computation, so the fill must run on Arrow partials
-        merged = sketch_grouped(
-            df, args.feature, group,
+        merged = fill_grouped(
             lambda: UDDSketch(initial_alpha=args.alpha, m=args.max_buckets, compat=True),
-            UDDSketch.from_bytes, pre_aggregate=args.pre_aggregate,
+            UDDSketch.from_bytes,
         )
         out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
     elif args.sketch == "dd":
@@ -302,14 +317,11 @@ def main(argv=None) -> int:
                            alpha=args.alpha, bound=args.max_buckets,
                            collapse_mode=args.collapse_mode)
     elif args.sketch == "udds":
-        if args.checkpoint and group:
+        if args.checkpoint:
             # resumable per-partition state requires the Arrow fill's
             # materialized partials (the JVM fill has no partition-level
             # state to checkpoint)
-            from puddsketch_spark.spark.checkpoint import checkpointed_sketch_grouped
-
-            merged = checkpointed_sketch_grouped(
-                spark, df, args.feature, group, args.checkpoint,
+            merged = fill_grouped(
                 lambda: UDDSketch(initial_alpha=args.alpha, m=args.max_buckets),
                 UDDSketch.from_bytes,
             )
@@ -327,9 +339,7 @@ def main(argv=None) -> int:
 
         kernel = HLLSketch if args.sketch == "hll" else ThetaSketch
         if group:
-            merged = sketch_grouped(df, args.feature, group, kernel,
-                                    kernel.from_bytes,
-                                    pre_aggregate=args.pre_aggregate)
+            merged = fill_grouped(kernel, kernel.from_bytes)
             from pyspark.sql import functions as F
 
             # rows here = one per group (not the hot path): plain UDF is fine
@@ -347,16 +357,7 @@ def main(argv=None) -> int:
         from puddsketch_spark.spark.sketches import moments_stats, moments_table
 
         if group:
-            if args.checkpoint:
-                from puddsketch_spark.spark.checkpoint import checkpointed_sketch_grouped
-
-                merged = checkpointed_sketch_grouped(
-                    spark, df, args.feature, group, args.checkpoint,
-                    MomentsSketch, MomentsSketch.from_bytes)
-            else:
-                merged = sketch_grouped(df, args.feature, group, MomentsSketch,
-                                        MomentsSketch.from_bytes,
-                                        pre_aggregate=args.pre_aggregate)
+            merged = fill_grouped(MomentsSketch, MomentsSketch.from_bytes)
             out = moments_table(merged, group)
         else:
             out = moments_stats(df, args.feature, ())
@@ -368,14 +369,7 @@ def main(argv=None) -> int:
     else:
         factory = (lambda: KLLSketch(k=200)) if args.sketch == "kll" else (lambda: TDigest())
         from_bytes = KLLSketch.from_bytes if args.sketch == "kll" else TDigest.from_bytes
-        if args.checkpoint:
-            from puddsketch_spark.spark.checkpoint import checkpointed_sketch_grouped
-
-            merged = checkpointed_sketch_grouped(
-                spark, df, args.feature, group, args.checkpoint, factory, from_bytes)
-        else:
-            merged = sketch_grouped(df, args.feature, group, factory, from_bytes,
-                                    pre_aggregate=args.pre_aggregate)
+        merged = fill_grouped(factory, from_bytes)
         out = quantile_table(merged, group, args.quantiles, from_bytes)
 
     if sets is not None:

@@ -1,10 +1,10 @@
 """Golden parity for the DDSketch pair collapse flavors against the
 COMPILED reference kernels.
 
-tests/golden/ddog_compat.json is produced by scripts/gen_golden_ddog.py,
-which compiles the READ-ONLY reference sources
-(/root/reference/ParallelDDSketch/src/{MapSketch,ArraySketch,Merger,
-Summary}.cc) in both -DLowBins and -DHighBins modes and replays the full
+tests/golden/ddog_compat.json was produced by a generator that compiled
+the READ-ONLY reference sources (ParallelDDSketch/src/{MapSketch,
+ArraySketch,Merger,Summary}.cc; provenance in tests/golden/README.md) in
+both -DLowBins and -DHighBins modes and replayed the full
 distributed protocol — per-rank VALIDATION fill with per-item
 OriginalPairCollapse (ParallelSketcher.cc:546-648, MapSketch.cc:87-247),
 pack_SketchesPair, a reduceOriginal fold (Merger.cc:472-739), and
@@ -22,9 +22,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import subprocess
-import sys
 
 import numpy as np
 import pytest
@@ -36,33 +33,14 @@ MIN_KEY = 1 << 30  # B* bucket key magnitude (Header.h:40)
 
 @pytest.fixture(scope="module")
 def ddog_golden():
-    """Load the DDOG goldens; rebuild (once) if the committed artifacts are
-    missing AND g++ is present, else skip — same hermetic contract as the
-    UDD goldens (test_uddsketch_kernel.py)."""
+    """Load the DDOG goldens; a missing manifest or value file fails the
+    test, as for the UDD goldens (test_uddsketch_kernel.py)."""
     golden_dir = os.path.join(os.path.dirname(__file__), "golden")
-    manifest = os.path.join(golden_dir, "ddog_compat.json")
-
-    def _load():
-        if not os.path.exists(manifest):
-            return None
-        with open(manifest) as f:
-            cases = json.load(f)["cases"]
-        for case in cases:
-            if not os.path.exists(os.path.join(golden_dir, case["file"])):
-                return None
-        return cases
-
-    cases = _load()
-    if cases is None:
-        if shutil.which("g++") is None:
-            pytest.skip("tests/golden/ DDOG artifacts incomplete and no g++ "
-                        "to rebuild (run scripts/gen_golden_ddog.py)")
-        script = os.path.join(
-            os.path.dirname(__file__), "..", "scripts", "gen_golden_ddog.py"
-        )
-        subprocess.run([sys.executable, script], check=True)
-        cases = _load()
-        assert cases is not None, "DDOG golden regeneration failed"
+    with open(os.path.join(golden_dir, "ddog_compat.json")) as f:
+        cases = json.load(f)["cases"]
+    missing = [c["file"] for c in cases
+               if not os.path.exists(os.path.join(golden_dir, c["file"]))]
+    assert not missing, f"tests/golden/ is missing {missing}"
     return golden_dir, cases
 
 

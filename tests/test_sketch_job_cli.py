@@ -5,8 +5,9 @@ Covers: --rollup on a fresh fill (+ --save-states), --grouping-sets on
 --from-states (no rescan) with bit-identical global estimates, the
 bad-column refusal, --sketch udds estimates equal to an in-process
 Arrow fill of the same generated input, global --sketch kll/tdigest,
-and --pre-aggregate or a global --checkpoint refused where the job would
-ignore them.
+grouped --sketch hll/theta resuming from --checkpoint, and
+--pre-aggregate, a global --checkpoint or a --sketch dd --checkpoint
+refused where the job would ignore them.
 """
 
 import json
@@ -146,3 +147,36 @@ def test_sketch_job_global_checkpoint_refused(tmp_path):
                      "--checkpoint", str(tmp_path / "ckpt")], timeout=120)
         assert proc.returncode != 0, sketch
         assert "--checkpoint needs --group-by" in proc.stderr, (sketch, proc.stderr[-500:])
+
+
+def _rows(proc):
+    return [json.loads(ln) for ln in proc.stdout.strip().splitlines()
+            if ln.startswith("{")]
+
+
+def test_sketch_job_grouped_checkpoint_hll_theta(tmp_path):
+    """Grouped --sketch hll / theta with --checkpoint fill through the
+    resumable per-partition state table: the checkpoint directory is
+    written, and the estimates equal a fill without it."""
+    for sketch in ("hll", "theta"):
+        ckpt = tmp_path / f"ckpt_{sketch}"
+        base = ["--generate", "2000", "--sketch", sketch, "--feature", "conv_id",
+                "--group-by", "role"]
+        proc = _run([*base, "--checkpoint", str(ckpt)])
+        assert proc.returncode == 0, (sketch, proc.stderr[-2000:])
+        assert ckpt.is_dir() and any(p.suffix == ".parquet" for p in ckpt.iterdir()), sketch
+        plain = _run(base)
+        assert plain.returncode == 0, (sketch, plain.stderr[-2000:])
+        key = lambda r: r["role"]  # noqa: E731
+        assert sorted(_rows(proc), key=key) == sorted(_rows(plain), key=key), sketch
+
+
+def test_sketch_job_dd_checkpoint_refused(tmp_path):
+    """--sketch dd fills on the JVM histogram and keeps no per-partition
+    state, so a --checkpoint is refused instead of ignored."""
+    ckpt = tmp_path / "ckpt"
+    proc = _run(["--generate", "2000", "--sketch", "dd", "--group-by", "role",
+                 "--checkpoint", str(ckpt)], timeout=120)
+    assert proc.returncode != 0
+    assert "--checkpoint has no effect on --sketch dd" in proc.stderr, proc.stderr[-500:]
+    assert not ckpt.exists()

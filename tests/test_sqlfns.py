@@ -469,3 +469,69 @@ def test_int_keys_with_nulls_share_hash_domain(spark, sqlfns):
         FROM nullkeys WHERE grp='a'
     """).first().j
     assert '"2"' in hh and "2.0" not in hh
+
+
+def test_double_keys_hash_as_doubles(spark, sqlfns):
+    """A DOUBLE key column hashes via float bits in every group, whatever
+    its values: a group holding only integral doubles {1.0, 2.0} and one
+    holding {1.0, 2.5} share the key 1.0, so their merged theta counts 3
+    distinct keys, not 4."""
+    spark.createDataFrame(
+        [(1.0, "a"), (2.0, "a"), (1.0, "b"), (2.5, "b")], "k double, grp string"
+    ).createOrReplaceTempView("dblkeys")
+    est = spark.sql("""
+        SELECT theta_estimate(theta_merge(s)) AS est FROM (
+          SELECT theta_sketch(k) AS s FROM dblkeys GROUP BY grp)
+    """).first().est
+    assert est == 3.0
+
+
+def test_bigint_ids_above_2_53_with_null(spark, sqlfns):
+    """A BIGINT group holding a NULL keeps its keys exact: 2^53+1 in a
+    NULL-bearing group and in a NULL-free one is one key (theta 1.0), and
+    Misra-Gries reports it as 9007199254740993, not the double
+    9007199254740992."""
+    big = 2**53 + 1
+    spark.createDataFrame(
+        [(big, "a"), (None, "a"), (big, "b")], "k long, grp string"
+    ).createOrReplaceTempView("bigkeys")
+    est = spark.sql("""
+        SELECT theta_estimate(theta_merge(s)) AS est FROM (
+          SELECT theta_sketch(k) AS s FROM bigkeys GROUP BY grp)
+    """).first().est
+    assert est == 1.0
+    hh = spark.sql("""
+        SELECT mg_heavy_hitters_json(mg_sketch(k), 0.1D) AS j
+        FROM bigkeys WHERE grp = 'a'
+    """).first().j
+    assert hh == f'[["{big}", 1]]'
+
+
+@pytest.fixture
+def one_row_batches(spark):
+    """Arrow batches of one row for the duration of a test."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    yield
+    spark.conf.set(key, old)
+
+
+def _double_probes(spark):
+    state = spark.sql("""
+        SELECT bloom_sketch(k) AS s FROM VALUES (1.0D), (2.0D) AS t(k)
+    """).first().s
+    probes = spark.createDataFrame(
+        [(state, 2.0), (state, 2.5)], "s binary, key double").coalesce(1)
+    return [r.hit for r in probes.selectExpr(
+        "bloom_contains(s, key) AS hit").collect()]
+
+
+def test_double_probe_independent_of_batch(spark, sqlfns, request):
+    """A DOUBLE probe of 2.0 answers the same whether a fractional probe
+    shares its Arrow batch (default batch size: both rows in one batch)
+    or not (one-row batches)."""
+    together = _double_probes(spark)
+    request.getfixturevalue("one_row_batches")
+    alone = _double_probes(spark)
+    assert together == alone == [True, False]
