@@ -533,8 +533,8 @@ FROM kq
 
 def _udds_multi_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two features (l_extendedprice, l_quantity) sketched in ONE scan via
-    udds_quantiles_multi (Catalyst stack -> one Tungsten histogram keyed by
-    feature). m=0: bit-exact bucket walk, oracled per feature."""
+    udds_quantiles_multi (posexplode -> one Tungsten histogram keyed by the
+    feature index). m=0: bit-exact bucket walk, oracled per feature."""
     from puddsketch_spark.spark.agg import udds_quantiles_multi
 
     li = _t(spark, sf_dir, "lineitem")

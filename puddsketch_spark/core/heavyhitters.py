@@ -100,7 +100,7 @@ class MisraGries:
     def to_bytes(self) -> bytes:
         # keys are strings or numbers; JSON with a type tag keeps the serde
         # dependency-free and cross-version stable (no pickle)
-        items = []
+        tagged = []
         for key, c in self.counters.items():
             # bool check first: isinstance(True, int) is True and would tag
             # booleans 'i', crashing from_bytes on int('True')
@@ -112,7 +112,11 @@ class MisraGries:
                 t = "i"
             else:
                 t = "f"
-            items.append([t, str(key), int(c)])
+            tagged.append((t, key, int(c)))
+        # canonical order (type tag, then key): the bytes are a function of
+        # the summary, not of the merge order that built the dict
+        tagged.sort(key=lambda it: it[:2])
+        items = [[t, str(key), c] for t, key, c in tagged]
         return json.dumps(
             {"k": self.k, "total": self.total, "err": self.err, "items": items}
         ).encode()

@@ -815,32 +815,29 @@ def udds_quantiles_multi(
 
     The reference runs one reduction per binary invocation; on a 100 TB
     table the scan dominates, so re-reading it per feature is the real
-    cost. Here the feature columns stack into (feature, value) rows with a
-    Catalyst ``stack`` (codegen'd, no Python, no extra scan) and feature
-    becomes the leading group key of the SAME Tungsten bucket-histogram
-    fill — N features for one scan and one shuffle of bucket counts.
+    cost. Here ``posexplode`` over an array of the feature columns (one
+    codegen'd Generate node, no Python, no extra scan) stacks them into
+    (feature index, value) rows, and the int index becomes the leading
+    group key of the SAME Tungsten bucket-histogram fill — N features for
+    one scan and one shuffle of bucket counts. The histogram hashes an int
+    per exploded row, not a string; the feature names are looked up only
+    on the output rows.
 
     Output: DataFrame[feature, group..., q, est, n].
     """
     group_cols = list(group_cols)
     # pure Column expressions (no SQL-string interpolation — a column name
-    # containing a quote/backtick must not break or reshape the plan);
-    # explode(array(struct...)) compiles to the same Generate node as stack
+    # containing a quote/backtick must not break or reshape the plan)
     stacked = df.select(
         *group_cols,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(c).alias("feature"),
-                    F.col(c).cast("double").alias("_value"),
-                )
-                for c in value_cols
-            ])
-        ).alias("_fv"),
-    ).select(*group_cols, F.col("_fv.feature").alias("feature"),
-             F.col("_fv._value").alias("_value"))
-    return udds_quantile_table_jvm(stacked, "_value", ["feature", *group_cols],
-                                   list(qs), alpha, m)
+        F.posexplode(F.array(*[F.col(c).cast("double") for c in value_cols]))
+        .alias("_f", "_value"),
+    )
+    names = F.array(*[F.lit(c) for c in value_cols])
+    table = udds_quantile_table_jvm(stacked, "_value", ["_f", *group_cols],
+                                    list(qs), alpha, m)
+    return table.select(F.element_at(names, F.col("_f") + 1).alias("feature"),
+                        *group_cols, "q", "est", "n")
 
 
 def udds_quantiles(

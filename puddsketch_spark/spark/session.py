@@ -99,16 +99,13 @@ def get_spark(
         # of 3 alternating A/B pairs, pinned 8 cores)
         .config("spark.sql.codegen.aggregate.map.twolevel.partialOnly", "false")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
-        # Scan split sizing is layout-dependent, so it is parameterised
-        # (guide §6.1). The local default (16m) matches the benchmark
-        # fixtures: single parquet files with ~20 MB row groups, where the
-        # stock 128m packs a whole 130 MB table into 1-2 splits and
-        # serializes every downstream map stage on a 32-core machine. On a
-        # production cluster reading TB-scale tables of 128 MB+ row groups,
-        # set SPARK_GRAFT_MAX_PARTITION_BYTES=512m-1g instead: there the
-        # bottleneck is per-task overhead, not split granularity (§2.2).
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
+        # Scan splits keep Spark's own sizing: min(maxPartitionBytes = 128m,
+        # max(openCostInBytes, input bytes / default parallelism)), so a
+        # scan yields about one split per core and runs in one wave. A fixed
+        # cap tuned for one core count does not: 16m (set for 32 cores)
+        # packed 8 x 4.7 MB parquet files into 4 splits, two waves on a
+        # local[3] session. A job that needs a fixed split size sets
+        # spark.sql.files.maxPartitionBytes through extra_conf.
         .config("spark.ui.enabled", "false")
         # belt-and-braces with the PYTHONPATH export above: executorEnv is
         # honored for executors launched on a real cluster, where the

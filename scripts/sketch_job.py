@@ -302,11 +302,18 @@ def main(argv=None) -> int:
     if args.sketch == "udds" and args.compat:
         # compat keys come from the reference fast-log — a Python kernel
         # computation, so the fill must run on Arrow partials
-        merged = fill_grouped(
-            lambda: UDDSketch(initial_alpha=args.alpha, m=args.max_buckets, compat=True),
-            UDDSketch.from_bytes,
-        )
-        out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
+        def compat_factory():
+            return UDDSketch(initial_alpha=args.alpha, m=args.max_buckets, compat=True)
+
+        if group:
+            merged = fill_grouped(compat_factory, UDDSketch.from_bytes)
+            out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
+        else:
+            sk = sketch_global(df, args.feature, compat_factory, UDDSketch.from_bytes,
+                               pre_aggregate=args.pre_aggregate)
+            out = spark.createDataFrame(
+                [(float(q), float(sk.quantile(q))) for q in args.quantiles],
+                "q double, est double")
     elif args.sketch == "dd":
         from puddsketch_spark.spark.sketches import dd_quantiles
 

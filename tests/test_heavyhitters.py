@@ -73,6 +73,21 @@ def test_weighted_and_serde_and_mismatch():
         MisraGries(k=8).merge(MisraGries(k=16))
 
 
+def test_merge_order_gives_the_same_bytes():
+    """to_bytes writes items sorted by type tag then key, so merging the
+    same partials in either order serializes to the same bytes."""
+    def part(vals):
+        return MisraGries(k=8).update(np.array(vals, dtype=np.int64))
+
+    ab = part([1, 2]).merge(part([3, 1]))
+    ba = part([3, 1]).merge(part([1, 2]))
+    assert ab.counters == ba.counters
+    assert ab.to_bytes() == ba.to_bytes()
+    mixed = MisraGries(k=8, total=9, counters={"b": 1, 2: 2, "a": 3, 1.5: 2, True: 1})
+    rt = MisraGries.from_bytes(mixed.to_bytes())
+    assert rt.counters == mixed.counters and rt.to_bytes() == mixed.to_bytes()
+
+
 def test_int_keys_roundtrip():
     sk = MisraGries(k=16).update(np.array([7, 7, 9], dtype=np.int64))
     rt = MisraGries.from_bytes(sk.to_bytes())

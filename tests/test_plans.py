@@ -22,6 +22,23 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _nodes(plan) -> list:
+    """Every node of a JVM SparkPlan, root first."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        ch = node.children()
+        stack += [ch.apply(i) for i in range(ch.size())]
+    return out
+
+
+def _key_types(agg) -> list[str]:
+    """Data types of a HashAggregateExec's grouping keys."""
+    ks = agg.groupingExpressions()
+    return [ks.apply(i).dataType().simpleString() for i in range(ks.size())]
+
+
 def test_q1_pushes_filter_and_prunes_columns(spark):
     df = entry.queries()["q1_pricing_summary"](spark, SF)
     plan = _plan(df)
@@ -216,6 +233,11 @@ def test_multi_feature_sketch_scans_once(spark):
     read = plan.split("ReadSchema")[1][:400]
     assert "l_extendedprice" in read and "l_quantity" in read
     assert "l_orderkey" not in read
+    # the histogram groups on an int feature index, never a string literal
+    # hashed per exploded row
+    keys = [_key_types(n) for n in _nodes(df._jdf.queryExecution().sparkPlan())
+            if n.nodeName() == "HashAggregate"]
+    assert keys and all("string" not in k for k in keys), keys
 
 
 def test_pre_aggregate_counts_before_python(spark):

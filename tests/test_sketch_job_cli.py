@@ -5,9 +5,9 @@ Covers: --rollup on a fresh fill (+ --save-states), --grouping-sets on
 --from-states (no rescan) with bit-identical global estimates, the
 bad-column refusal, --sketch udds estimates equal to an in-process
 Arrow fill of the same generated input, global --sketch kll/tdigest,
-grouped --sketch hll/theta resuming from --checkpoint, and
---pre-aggregate, a global --checkpoint or a --sketch dd --checkpoint
-refused where the job would ignore them.
+grouped --sketch hll/theta resuming from --checkpoint, global --sketch
+udds --compat, and --pre-aggregate, a global --checkpoint or a --sketch
+dd --checkpoint refused where the job would ignore them.
 """
 
 import json
@@ -107,6 +107,26 @@ def test_sketch_job_udds_engines_agree(spark):
                  for key, sk in sks.items() for q in qs}
         assert len(cli) >= 3  # every quantile of at least one group
         assert cli == arrow, group
+
+
+def test_sketch_job_global_compat(spark):
+    """A bare --group-by (global) --sketch udds --compat fills through
+    sketch_global: one q/est row per quantile, equal to an in-process
+    compat fill of the same generated input."""
+    from puddsketch_spark.core import UDDSketch
+    from puddsketch_spark.datagen import transcripts
+    from puddsketch_spark.spark.agg import sketch_global
+    from puddsketch_spark.spark.features import with_text_len
+
+    qs = [0.1, 0.5, 0.99]
+    proc = _run(["--generate", "2000", "--seed", "5", "--feature", "text_len",
+                 "--sketch", "udds", "--compat", "--max-buckets", "0",
+                 "--quantiles", *map(str, qs), "--group-by"])
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    df = with_text_len(transcripts(spark, n_conv=2000 // 8, seed=5))
+    sk = sketch_global(df, "text_len",
+                       lambda: UDDSketch(initial_alpha=0.01, m=0, compat=True))
+    assert _rows(proc) == [{"q": q, "est": float(sk.quantile(q))} for q in qs]
 
 
 def test_sketch_job_pre_aggregate_rejected_where_ignored():

@@ -841,6 +841,45 @@ def test_fused_jvm_quantile_table_bit_parity(spark):
         assert {g for g, _ in fused} == {"g0", "g1", "g2", None}
 
 
+def test_multi_feature_equals_per_feature(spark):
+    """udds_quantiles_multi stacks its features under an int index and
+    names them on the output rows: each feature's rows equal a
+    per-feature fill row for row, n included, grouped (NULL group key,
+    NULL and NaN values, a feature with no value in one group) and
+    global, at m=0 and a collapsing m=8."""
+    from puddsketch_spark.spark.agg import (
+        udds_quantile_table_jvm,
+        udds_quantiles_multi,
+        udds_sketch_global_jvm,
+    )
+
+    rows = [("g%d" % (i % 3), float(i % 97) * 1.37 - 5.0, i % 41,
+             None if i % 3 == 2 else float(i))
+            for i in range(1500)]
+    rows += [("g0", float("nan"), None, float("nan")), ("g1", None, 0, None),
+             (None, 4.2, 7, 2.0), (None, None, None, None)]
+    df = spark.createDataFrame(rows, "grp string, x double, k int, y double")
+    feats, qs = ["x", "k", "y"], [0.01, 0.5, 0.99]
+    for m in (0, 8):
+        multi = udds_quantiles_multi(df, feats, ["grp"], qs, 0.01, m)
+        assert multi.columns == ["feature", "grp", "q", "est", "n"]
+        got = sorted(map(tuple, multi.collect()), key=repr)
+        want = sorted(((c, *r) for c in feats for r in udds_quantile_table_jvm(
+            df, c, ["grp"], qs, 0.01, m).collect()), key=repr)
+        assert got == want, m
+        assert ("y", "g2") not in {(r[0], r[1]) for r in got}
+        per_q = {(c, r.grp, r.q): r.est for c in feats
+                 for r in udds_quantiles(df, c, ["grp"], qs, 0.01, m).collect()}
+        assert {(f, g, q): e for f, g, q, e, _ in got} == per_q
+
+        glob = udds_quantiles_multi(df, feats, (), qs, 0.01, m)
+        assert glob.columns == ["feature", "q", "est", "n"]
+        want = sorted(
+            (c, r.q, r.est, udds_sketch_global_jvm(df, c, 0.01, m).count)
+            for c in feats for r in udds_quantiles(df, c, (), qs, 0.01, m).collect())
+        assert sorted(map(tuple, glob.collect())) == want, m
+
+
 # ------------------------------------------------------- key-run stage
 def _groups(rows, key_cols, val=None):
     """Multiset of (repr(key...), value) — repr keeps NaN, -0.0 and None

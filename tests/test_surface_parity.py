@@ -1,14 +1,14 @@
 """One hash domain on every fill surface: the SQL fill
-(``register_sql_functions``), the Python-API fill (``sketch_grouped``)
-and the streaming state (``streaming_sketch``) give byte-equal states for
-HLL, theta, count-min, Bloom and Misra-Gries over {int, bigint, double,
-string} x {groups with, without NULLs}, bigint ids above 2^53 included;
-UDD at m=0 is byte-equal between SQL and Python.
+(``register_sql_functions``), the Python-API fill (``sketch_grouped``),
+the streaming state (``streaming_sketch``) and the checkpointed fill
+(``checkpointed_sketch_grouped``, after its first write and after a
+resume over an appended file) give byte-equal states for HLL, theta,
+count-min, Bloom and Misra-Gries over {int, bigint, double, string} x
+{groups with, without NULLs}, bigint ids above 2^53 included; UDD at m=0
+is byte-equal between SQL, Python and the checkpoint."""
 
-Each value type is one parquet file read back as one partition, so
-``sketch_grouped`` merges one partial per group: Misra-Gries serializes
-its counters in insertion order, which a multi-partial merge would
-permute without changing the summary."""
+import json
+import os
 
 import numpy as np
 import pytest
@@ -22,6 +22,7 @@ from puddsketch_spark.core import (
     UDDSketch,
 )
 from puddsketch_spark.spark.agg import sketch_grouped
+from puddsketch_spark.spark.checkpoint import checkpointed_sketch_grouped
 from puddsketch_spark.spark.sqlfns import register_sql_functions
 
 # SQL name -> kernel class; the SQL registration defaults equal the
@@ -149,3 +150,34 @@ def test_fill_surfaces_byte_equal(spark, par_sql, tmp_path, vtype):
     assert mg.counters == {
         v: (2 if i < 2 else 1) for i, v in enumerate(VALUES[vtype][:4])}
     assert all(type(k) is type(VALUES[vtype][0]) for k in mg.counters)
+
+
+@pytest.mark.parametrize("vtype", list(VALUES))
+def test_checkpoint_state_byte_equal(spark, tmp_path, vtype):
+    """The checkpointed fill's states equal sketch_grouped's over the same
+    files: after the write over one file, and after the resume that
+    fills only a second, appended file and merges two partials per
+    group."""
+    schema = f"g string, v {vtype}"
+    src = str(tmp_path / "src")
+    kernels = dict(HASHERS)
+    if vtype != "string":
+        kernels["udds"] = lambda: UDDSketch(initial_alpha=0.01, m=0)
+
+    for values in (VALUES[vtype], VALUES[vtype][::-1]):
+        spark.createDataFrame(_rows(values), schema).coalesce(1)\
+            .write.mode("append").parquet(src)
+        df = spark.read.parquet(src)
+        for n, factory in kernels.items():
+            fb = (UDDSketch if n == "udds" else HASHERS[n]).from_bytes
+            ckpt = {r.g: bytes(r.state) for r in checkpointed_sketch_grouped(
+                spark, df, "v", ["g"], str(tmp_path / n), factory, fb).collect()}
+            api = {r.g: bytes(r.state)
+                   for r in sketch_grouped(df, "v", ["g"], factory, fb).collect()}
+            assert set(ckpt) == {"clean_a", "clean_b", "null_a", "null_b"}
+            assert ckpt == api, n
+    for n in kernels:
+        with open(os.path.join(tmp_path, n, "_sketch_manifest.json")) as f:
+            manifest = json.load(f)
+        # a write over the first file, then a resume over the second alone
+        assert [len(r["scanned"]) for r in manifest["runs"]] == [1, 1], n
