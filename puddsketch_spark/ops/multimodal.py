@@ -99,16 +99,17 @@ def decode_and_featurize(
     df: DataFrame,
     decoder: Callable[[bytes], np.ndarray] = fake_image_decoder,
     decoders: dict | None = None,
-    batch_limit_mb: int = 256,
 ) -> DataFrame:
     """payload binary -> feature vector via mapInPandas.
 
     ``decoders`` optionally dispatches per kind (e.g. {"image": ...,
     "audio": ...}); rows whose kind has no entry fall back to ``decoder``.
 
-    Real-scale notes: binary payloads dominate partition size — cap
-    spark.sql.files.maxPartitionBytes (or repartition by size) so one Arrow
-    batch stays under ``batch_limit_mb``; decode failures become
+    Real-scale notes: an Arrow batch is bounded by
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows × payload size
+    (``get_spark`` sets no byte cap). Large payloads need a smaller
+    ``spark.sql.files.maxPartitionBytes`` or a lower row cap, both passed
+    through ``get_spark(extra_conf=...)``. Decode failures become
     decode_ok=false rows rather than task failures (poison-pill isolation).
     """
     table = decoders or {}

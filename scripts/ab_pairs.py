@@ -4,6 +4,8 @@
         [--workloads fill_dup_few ...] [--claim fill_dup_few:op_s_p50]
         [--out runs.jsonl]
     python scripts/ab_pairs.py --from runs.jsonl [--claim ...]
+    python scripts/ab_pairs.py --parent DIR --change DIR --trace-seed 9301
+        [--workloads fill_unique_many ...]
 
 Runs ``perfbench/run.py`` (untraced, for BENCHMARK.json's ``run_seconds``)
 in each checkout, one pair per seed and workload, alternating which side
@@ -21,6 +23,13 @@ median may be worse than the parent's by at most the metric's ``bound``
 (a share of the parent's median), and its share of failed ops may not be
 larger. Exit status 1 when a claim or a bound check fails.
 
+``--trace-seed N`` runs instead one traced ``perfbench/run.py`` per side
+and workload on seed N and prints every per-layer metric side by side,
+with the median per-op task run time from the trace file. The exact counts
+of ``perfbench/README.md``'s audit repeat for a seed, so one that differs
+between the sides is flagged: the change moved it. Exit status 1 when a
+traced run fails.
+
 The two checkouts should be clean copies of the commits being compared
 (``git clone`` or ``git archive``); each run writes only under its own
 checkout's ``.perfbench_out/``.
@@ -36,6 +45,17 @@ import subprocess
 import sys
 
 SIDES = ("parent", "change")
+# the counts perfbench/README.md's exact-count audit found repeating
+EXACT_COUNTS = (
+    *(f"core.{k}.state_bytes" for k in ("udds", "kll", "tdigest", "hll", "cms")),
+    "agg.partial_rows", "agg.partial_state_bytes", "agg.bucket_rows",
+    "spark.scan_bytes", "spark.shuffle_bytes", "spark.shuffle_records",
+    "spark.python_bytes_sent", "spark.python_bytes_received", "spark.jobs",
+    "spark.tasks", "driver.collect_rows", "checkpoint.files_scanned",
+    "checkpoint.rescan_share",
+)
+# from each traced run's trace file: median over the traced ops
+TASK_RUN = "op.task_run_s"
 
 
 def parse_seeds(spec: str) -> list[int]:
@@ -47,21 +67,43 @@ def parse_seeds(spec: str) -> list[int]:
     return seeds
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
-    """One untraced benchmark run: the result line, plus the attempted and
-    failed op counts (``failed`` is None when the run itself failed)."""
+def _bench(checkout: str, workload: str, seed: int, seconds: float,
+           trace: int) -> dict | None:
+    """The result line of one benchmark run, or None when it failed."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
         cwd=checkout, capture_output=True, text=True,
     )
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or not lines:
         sys.stderr.write(proc.stderr[-2000:])
+        return None
+    return json.loads(lines[-1])
+
+
+def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
+    """One untraced benchmark run: the result line, plus the attempted and
+    failed op counts (``failed`` is None when the run itself failed)."""
+    res = _bench(checkout, workload, seed, seconds, 0)
+    if res is None:
         return {"metrics": {}, "attempted": 0, "failed": None}
-    res = json.loads(lines[-1])
     return {"metrics": {k: v["value"] for k, v in res["metrics"].items()},
             "attempted": res["attempted"], "failed": res["failed"]}
+
+
+def run_traced(checkout: str, workload: str, seed: int, seconds: float) -> dict | None:
+    """One traced benchmark run: {metric: value} over the per-layer record
+    and the median per-op task run time; None when the run failed."""
+    res = _bench(checkout, workload, seed, seconds, 1)
+    if res is None:
+        return None
+    metrics = {k: v["value"] for k, v in res["metrics"].items()}
+    path = os.path.join(checkout, ".perfbench_out", f"trace-{workload}-{seed}.json")
+    with open(path) as f:
+        per_op = json.load(f)["per_op"]
+    metrics[TASK_RUN] = statistics.median(r["task_run_s"] for r in per_op)
+    return metrics
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -142,6 +184,32 @@ def summarize(pairs: dict, spec: dict, claims: set) -> bool:
     return ok
 
 
+def compare_traced(workload: str, seed: int, traced: dict, spec: dict) -> list[str]:
+    """Print both sides' per-layer metrics of one traced seed; return the
+    exact counts that differ."""
+    print(f"\n== {workload}: traced, seed {seed}")
+    print(f"  {'metric':30s} {'unit':6s} {'parent':>14s} {'change':>14s}  change vs parent")
+    rows = [(m["name"], m["unit"]) for m in spec["per_layer"]] + [(TASK_RUN, "s")]
+    differ = []
+    for name, unit in rows:
+        p, c = (traced[side].get(name) for side in SIDES)
+        exact = name in EXACT_COUNTS
+        if p is None or c is None:
+            note = "missing"
+        elif exact and p != c:
+            note = "EXACT COUNT DIFFERS"
+            differ.append(name)
+        elif exact:
+            note = "exact count, equal"
+        else:
+            note = f"{(c - p) / abs(p):+.1%}" if p else ("equal" if c == p else "n/a")
+        fmt = ".12g" if exact else ".6g"
+        p_s, c_s = ("-" if v is None else format(v, fmt) for v in (p, c))
+        print(f"  {name:30s} {unit:6s} {p_s:>14s} {c_s:>14s}  {note}")
+    print(f"  exact counts that differ: {', '.join(differ) or 'none'}")
+    return differ
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", help="checkout of the parent commit")
@@ -153,12 +221,32 @@ def main(argv=None) -> int:
                     help="WORKLOAD:METRIC the change claims to improve (repeatable)")
     ap.add_argument("--out", help="append each run's result here as a JSON line")
     ap.add_argument("--from", dest="src", help="summarize this --out file; run nothing")
+    ap.add_argument("--trace-seed", type=int,
+                    help="run one traced benchmark per side on this seed and "
+                         "print the per-layer metrics side by side")
     args = ap.parse_args(argv)
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(args.change or here, "BENCHMARK.json")) as f:
         spec = json.load(f)
     claims = {tuple(c.split(":", 1)) for c in args.claim}
+    workloads = args.workloads or [w["name"] for w in spec["workloads"]]
+
+    if args.trace_seed is not None:
+        if not (args.parent and args.change):
+            ap.error("--trace-seed needs --parent and --change")
+        ok = True
+        for workload in workloads:
+            traced = {side: run_traced(os.path.abspath(getattr(args, side)), workload,
+                                       args.trace_seed, spec["run_seconds"])
+                      for side in SIDES}
+            failed = [side for side in SIDES if traced[side] is None]
+            if failed:
+                print(f"\n== {workload}: traced run failed on {', '.join(failed)}")
+                ok = False
+                continue
+            compare_traced(workload, args.trace_seed, traced, spec)
+        return 0 if ok else 1
 
     if args.src:
         with open(args.src) as f:
@@ -166,7 +254,6 @@ def main(argv=None) -> int:
     else:
         if not (args.parent and args.change and args.seeds):
             ap.error("--parent, --change and --seeds are required unless --from is given")
-        workloads = args.workloads or [w["name"] for w in spec["workloads"]]
         checkouts = {"parent": os.path.abspath(args.parent),
                      "change": os.path.abspath(args.change)}
         runs = []

@@ -55,3 +55,19 @@ def test_bound_and_failed_share(capsys):
     assert "bound EXCEEDED" in capsys.readouterr().out
     assert not ab.summarize(_runs([(1.0, 0.8)] * 10, failed=(0, 1)), SPEC, CLAIM)
     assert "-> WORSE" in capsys.readouterr().out
+
+
+def test_trace_compare_flags_exact_counts(capsys):
+    """--trace-seed's side-by-side table: an exact count that moves is
+    flagged, a time that moves is not."""
+    layer = {m["name"]: 1.0 for m in SPEC["per_layer"]}
+    parent = {**layer, ab.TASK_RUN: 2.45, "spark.python_bytes_sent": 78430224}
+    change = {**parent, ab.TASK_RUN: 2.03, "agg.partial_s": 0.5}
+    sides = dict(zip(ab.SIDES, (parent, change)))
+    assert ab.compare_traced("fill_unique_many", 9301, sides, SPEC) == []
+    out = capsys.readouterr().out
+    assert "78430224" in out and "exact counts that differ: none" in out
+    assert "-50.0%" in out and "-17.1%" in out  # agg.partial_s, op.task_run_s
+    change["spark.tasks"] = 22
+    assert ab.compare_traced("fill_unique_many", 9301, sides, SPEC) == ["spark.tasks"]
+    assert "EXACT COUNT DIFFERS" in capsys.readouterr().out
