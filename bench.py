@@ -242,7 +242,7 @@ def run_bench(sf_dir: str, cpus: str, n_turn_target: int = 2_000_000) -> dict:
     def near_dups():
         nonlocal n_pairs
         pairs = embedding_near_dups(
-            emb768, threshold=0.99, num_bands=4, planes_per_band=16, engine="auto"
+            emb768, threshold=0.99, num_bands=4, planes_per_band=16
         )
         n_pairs = pairs.count()
         release_cached(pairs)

@@ -655,7 +655,6 @@ def embedding_near_dups(
     num_bands: int = 4,
     planes_per_band: int = 8,
     seed: int = 42,
-    engine: str = "auto",
 ) -> DataFrame:
     """Near-dup pairs by cosine >= threshold.
 
@@ -667,7 +666,8 @@ def embedding_near_dups(
     never all-pairs.
 
     Plane dots: Catalyst literal expressions while bands*planes*dim stays
-    small; at dim 768+ that tree bloats the plan, so "auto" switches to ONE
+    small; at dim 768+ that tree bloats the plan, so past
+    ``_MAX_CATALYST_COEFFS`` plane coefficients it switches to ONE
     Arrow-batched matmul per batch that also packs each band's sign bits
     into an int64 (smaller join keys, single Python pass), and the exact
     verify uses a vectorized numpy cosine instead of the interpreted
@@ -682,8 +682,7 @@ def embedding_near_dups(
     dim = len(df.select(vec_col).first()[0])
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((num_bands * planes_per_band, dim))
-    if engine == "auto":
-        engine = "catalyst" if planes.size <= _MAX_CATALYST_COEFFS else "arrow"
+    arrow = planes.size > _MAX_CATALYST_COEFFS
 
     def band_sig_catalyst(b: int):
         # small-dim path: codegen'd dot per plane, string of sign bits
@@ -702,7 +701,7 @@ def embedding_near_dups(
     # the deduplicated candidate pairs once per side for the exact-cosine
     # verify (same shuffle discipline as lsh_candidate_pairs)
     vecs = df.select(id_col, vec_col).persist()
-    if engine == "arrow":
+    if arrow:
         mat = np.ascontiguousarray(planes)
         n_b, n_p = num_bands, planes_per_band
         weights = (np.int64(1) << np.arange(n_p, dtype=np.int64))
@@ -744,7 +743,7 @@ def embedding_near_dups(
     )
     va = vecs.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
     vb = vecs.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
-    if engine == "arrow":
+    if arrow:
         # interpreted zip_with costs ~dim lambda evals per pair; one numpy
         # einsum per Arrow batch replaces it at high dim
         @F.pandas_udf(DoubleType())

@@ -189,20 +189,16 @@ def ivf_assign(
     centroids: np.ndarray,
     vec_col: str = "embedding",
     out: str = "cell_id",
-    engine: str = "auto",
 ) -> DataFrame:
     """Tag each vector with its nearest centroid id (argmax dot). Partition
     or Z-order the table by ``cell_id`` so ivf_topk prunes at the scan.
 
-    engine="catalyst": n_cells dot products as codegen'd expressions — best
-    while n_cells*dim literals stay small. engine="arrow": one pandas-UDF
-    matmul (the dim-768+ path). "auto" switches on the coefficient count.
-    The two can differ on exact argmax ties (summation order), so pin the
-    engine where bit-stable assignments matter."""
+    Up to ``_MAX_CATALYST_COEFFS`` centroid coefficients, the n_cells dot
+    products are codegen'd expressions; past it (the dim-768+ case), one
+    pandas-UDF matmul. The two can differ on exact argmax ties (summation
+    order)."""
     cents = np.asarray(centroids, dtype=np.float64)
-    if engine == "auto":
-        engine = "catalyst" if cents.size <= _MAX_CATALYST_COEFFS else "arrow"
-    if engine == "arrow":
+    if cents.size > _MAX_CATALYST_COEFFS:
         dots = matrix_dots(vec_col, cents)
     else:
         dots = F.array(*[_dot_lit(vec_col, c) for c in cents])

@@ -17,7 +17,11 @@ custom commutative MPI_Reduce -> root-rank quantile query becomes
 The JVM fills (sketch_grouped_jvm, udds_quantile_table_jvm,
 dd_states_grouped_jvm) end in the same key-run stage over the Tungsten
 bucket table, and a grouped finalize (quantiles, estimates) runs inside
-it rather than as a second stage.
+it rather than as a second stage. A state table that already holds one
+row per key (saved, rolled up, or checkpointed) is finalized by the same
+row emitter in one exchange-free mapInArrow (_map_states:
+quantile_table, sketches.moments_table, sketches.distinct_table); a
+global answer is the same rows built on the driver (_global_quantiles).
 
 Scale notes (100 TB / 1000 executors):
   * the only shuffle moves (n_groups x n_partitions) sketch blobs of
@@ -32,11 +36,9 @@ from __future__ import annotations
 from typing import Callable, Iterable, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark import TaskContext
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -87,6 +89,18 @@ _QUANTILE_FIELDS = [
     StructField("q", DoubleType(), False),
     StructField("est", DoubleType(), True),
 ]
+
+
+def _quantile_rows(sk, qs) -> list[tuple]:
+    """The quantile finalize of one sketch: a (q, est) row per q, in
+    _QUANTILE_FIELDS order."""
+    return [(float(q), float(sk.quantile(q))) for q in qs]
+
+
+def _global_quantiles(spark: SparkSession, sk, qs) -> DataFrame:
+    """DataFrame[q, est] of a driver-side sketch: every global quantile
+    answer, typed like the grouped ones."""
+    return spark.createDataFrame(_quantile_rows(sk, qs), StructType(_QUANTILE_FIELDS))
 
 
 def _metrics_of(sk) -> tuple[int, int, int]:
@@ -234,31 +248,13 @@ def partial_sketches(
                     sk.update(vals_all[idx])
                 else:
                     _kernel_update_weighted(sk, vals_all[idx], w_all[idx])
-        cols: list[list] = [[] for _ in range(len(group_cols))]
-        states, ns, bs, cs, pids = [], [], [], [], []
-        for key, sk in sketches.items():
-            n, b, c = _metrics_of(sk)
-            for gi, kv in enumerate(key):
-                cols[gi].append(kv)
-            states.append(sk.to_bytes())
-            ns.append(n)
-            bs.append(b)
-            cs.append(c)
-            pids.append(pid)
         from pyspark.sql.pandas.types import to_arrow_schema
 
         out_schema = to_arrow_schema(schema)
-        arrays = [
-            pa.array(cols[gi], type=out_schema.field(gi).type)
-            for gi in range(len(group_cols))
-        ] + [
-            pa.array(states, type=pa.binary()),
-            pa.array(ns, type=pa.int64()),
-            pa.array(bs, type=pa.int32()),
-            pa.array(cs, type=pa.int32()),
-            pa.array(pids, type=pa.int32()),
-        ]
-        yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+        rows = [(*key, *_state_values(sk, pid)) for key, sk in sketches.items()]
+        cols = list(zip(*rows)) or [()] * len(out_schema)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, out_schema)], schema=out_schema)
 
     return pruned.mapInArrow(build, schema=schema)
 
@@ -279,6 +275,33 @@ def _run_starts(keys) -> np.ndarray:
         codes = codes.fill_null(-1).to_numpy()
         change[1:] |= codes[1:] != codes[:-1]
     return np.flatnonzero(change)
+
+
+def _row_emitter(keys: Sequence[str], value_fields: Sequence[StructField]):
+    """``emit(src, runs)``, the output batch of every finalize stage:
+    ``runs`` pairs a row offset of pyarrow Table ``src`` with the value
+    tuples to emit for it. The batch holds the ``keys`` columns of ``src``
+    taken at those offsets (Arrow ``take``, so keys keep their type, NULLs
+    and NaNs), then one column per value field. Yields nothing when no run
+    has a row. Runs on the executor."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    keys = list(keys)
+    value_types = [f.type for f in to_arrow_schema(StructType(list(value_fields)))]
+    names = keys + [f.name for f in value_fields]
+
+    def emit(src, runs):
+        idx, rows = [], []
+        for i, got in runs:
+            idx += [i] * len(got)
+            rows += got
+        if rows:
+            cols = [src.column(k).take(idx).combine_chunks() for k in keys]
+            cols += [pa.array(c, type=t) for c, t in zip(zip(*rows), value_types)]
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return emit
 
 
 def _map_key_runs(
@@ -315,25 +338,16 @@ def _map_key_runs(
 
     def stage(batches):
         import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
 
-        value_types = [f.type for f in to_arrow_schema(StructType(list(value_fields)))]
-        names = keys + [f.name for f in value_fields]
+        out = _row_emitter(keys, value_fields)
         pending: list = []  # slices of the open run (the last run seen)
         open_key = None  # its key, a one-row Table
 
         def emit(key_src, runs):
-            """One batch of per_run's rows for ``runs``, (key row of
-            ``key_src``, slices of one group) pairs."""
-            idx, rows = [], []
-            for key_row, parts in runs:
-                got = per_run(pa.Table.from_batches(parts))
-                idx += [key_row] * len(got)
-                rows += got
-            if rows:
-                cols = [key_src.column(k).take(idx).combine_chunks() for k in keys]
-                cols += [pa.array(c, type=t) for c, t in zip(zip(*rows), value_types)]
-                yield pa.RecordBatch.from_arrays(cols, names=names)
+            """per_run's rows for ``runs``, (key row of ``key_src``, slices
+            of one group) pairs."""
+            return out(key_src, ((i, per_run(pa.Table.from_batches(parts)))
+                                 for i, parts in runs))
 
         for batch in batches:
             if batch.num_rows == 0:
@@ -663,6 +677,33 @@ def sketch_global(
     return factory() if out is None else fb(out)
 
 
+def _map_states(
+    states: DataFrame,
+    keys: Sequence[str],
+    from_bytes: Callable[[bytes], object],
+    value_fields: Sequence[StructField],
+    emit: Callable[[object], list],
+) -> DataFrame:
+    """DataFrame[keys..., value_fields...] with the rows ``emit(sketch)``
+    returns for each row of ``states``, a state table that already holds
+    one row per key: ONE mapInArrow over the table as it is partitioned —
+    no exchange, no sort. Keys pass through with _row_emitter's Arrow
+    ``take``, as on the key-run stage."""
+    keys = list(keys)
+    schema = StructType([states.schema[k] for k in keys] + list(value_fields))
+
+    def stage(batches):
+        import pyarrow as pa
+
+        out = _row_emitter(keys, value_fields)
+        for batch in batches:
+            blobs = batch.column("state").to_pylist()
+            yield from out(pa.Table.from_batches([batch]),
+                           ((i, emit(from_bytes(b))) for i, b in enumerate(blobs)))
+
+    return states.select(*keys, "state").mapInArrow(stage, schema=schema)
+
+
 def quantile_table(
     merged: DataFrame,
     group_cols: Sequence[str],
@@ -671,27 +712,15 @@ def quantile_table(
     extra_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Finalize: DataFrame[group..., q, est, extra...] from merged sketch
-    states. ``extra_cols`` pass through columns of ``merged`` (e.g. the n
-    metric) WITHOUT a self-join — joining the finalized table back to
+    states, one row per (group, q), in one exchange-free mapInArrow
+    (_map_states). ``extra_cols`` pass through columns of ``merged`` (e.g.
+    the n metric) WITHOUT a self-join — joining the finalized table back to
     ``merged`` would recompute the whole fill pipeline (second scan)."""
-    qs = [float(q) for q in qs]
-    extra_cols = list(extra_cols)
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def q_udf(states: pd.Series) -> pd.Series:
-        return states.map(lambda b: [float(from_bytes(b).quantile(q)) for q in qs])
-
-    qlits = F.array(*[F.lit(q) for q in qs])
-    return (
-        merged.withColumn("_ests", q_udf("state"))
-        .select(
-            *group_cols,
-            *extra_cols,
-            F.explode(F.arrays_zip(qlits.alias("q"), F.col("_ests").alias("est"))).alias("_z"),
-        )
-        .select(*group_cols, F.col("_z.q").alias("q"), F.col("_z.est").alias("est"),
-                *extra_cols)
-    )
+    group_cols, extra_cols, qs = list(group_cols), list(extra_cols), list(qs)
+    return _map_states(
+        merged, group_cols + extra_cols, from_bytes, _QUANTILE_FIELDS,
+        lambda sk: _quantile_rows(sk, qs),
+    ).select(*group_cols, "q", "est", *extra_cols)
 
 
 # --------------------------------------------------------------------------
@@ -795,7 +824,7 @@ def udds_quantile_table_jvm(
 
     def finalize(run) -> list:
         sk = _udds_of(run, alpha, m)
-        return [(q, float(sk.quantile(q)), sk.count) for q in qs]
+        return [(*row, sk.count) for row in _quantile_rows(sk, qs)]
 
     return _map_key_runs(
         buckets, group_cols,
@@ -870,10 +899,8 @@ def udds_quantiles(
         return udds_quantile_table_jvm(
             df, value_col, group_cols, qs, alpha, m
         ).select(*group_cols, "q", "est")
-    sk = udds_sketch_global_jvm(df, value_col, alpha, m)
-    return df.sparkSession.createDataFrame(
-        [(float(q), float(sk.quantile(q))) for q in qs], schema="q double, est double"
-    )
+    return _global_quantiles(df.sparkSession,
+                             udds_sketch_global_jvm(df, value_col, alpha, m), qs)
 
 
 def dd_bucket_counts(

@@ -5,6 +5,9 @@ agg.partial_sketches / merge_grouped / sketch_global: Arrow-vectorized
 per-partition partials, blob-only shuffles, commutative merges. The DDSketch
 pair, the quantile filters and the rank transform fill through Tungsten
 bucket histograms instead, and the moments are one Catalyst aggregation.
+A saved or rolled-up state table is finalized in one exchange-free
+mapInArrow (agg._map_states): agg.quantile_table, moments_table,
+distinct_table.
 (North_rule companion set: HLL, count-min, t-digest, KLL, Bloom — plus theta
 set algebra, exact moments, and the sketch-powered analytics:
 quantile-threshold filtering and the quantile-rank transform.)
@@ -21,12 +24,16 @@ from ..core.bloom import BloomFilter
 from ..core.cms import CountMinSketch
 from ..core.hll import HLLSketch
 from ..core.kll import KLLSketch
+from ..core.moments import MomentsSketch
 from ..core.tdigest import TDigest
 from ..core.theta import ThetaSketch
 from .agg import (
     _QUANTILE_FIELDS,
+    _global_quantiles,
     _map_key_runs,
+    _map_states,
     _merge_runs,
+    _quantile_rows,
     partial_sketches,
     sketch_global,
     sketch_grouped,
@@ -34,6 +41,7 @@ from .agg import (
 
 __all__ = [
     "hll_distinct",
+    "distinct_table",
     "theta_global",
     "theta_states",
     "theta_set_ops",
@@ -73,6 +81,15 @@ def _null_safe_broadcast_join(
     )
 
 
+# the columns a distinct-count (HLL, theta) finalize emits after the keys
+_DISTINCT_FIELDS = [StructField("distinct_est", LongType(), False)]
+
+
+def _distinct_rows(sk) -> list[tuple]:
+    """The distinct-count finalize of one HLL or theta sketch."""
+    return [(int(round(sk.estimate())),)]
+
+
 # ---------------------------------------------------------------- HLL
 def hll_distinct(
     df: DataFrame, col: str, group_cols: Sequence[str] = (), p: int = 14
@@ -88,8 +105,18 @@ def hll_distinct(
     return _merge_runs(
         partial_sketches(df, col, group_cols, factory), group_cols,
         HLLSketch.from_bytes, [StructField("est", LongType(), False)],
-        lambda sk, _: [(int(round(sk.estimate())),)],
+        lambda sk, _: _distinct_rows(sk),
     )
+
+
+def distinct_table(
+    states: DataFrame, group_cols: Sequence[str], from_bytes
+) -> DataFrame:
+    """Finalize an HLL or theta STATE table (group..., state), one row per
+    group, into DataFrame[group..., distinct_est:long] — one exchange-free
+    mapInArrow, the piece CLI state rollups reuse without rescanning."""
+    return _map_states(states, group_cols, from_bytes, _DISTINCT_FIELDS,
+                       _distinct_rows)
 
 
 # ---------------------------------------------------------------- Theta
@@ -306,25 +333,27 @@ def moments_stats(
     )
 
 
+_MOMENT_FIELDS = [StructField("n", LongType(), False)] + [
+    StructField(c, DoubleType(), True)
+    for c in ("mean", "variance", "stddev", "skewness", "kurtosis", "vmin", "vmax")
+]
+
+
+def _moment_rows(sk) -> list[tuple]:
+    """The stats row of one MomentsSketch, in _MOMENT_FIELDS order; a
+    statistic that is undefined (NaN in the kernel) is None."""
+    stats = (sk.mean, sk.variance(), sk.stddev(), sk.skewness(),
+             sk.kurtosis(), sk.vmin, sk.vmax)
+    return [(int(sk.n), *(None if v != v else float(v) for v in stats))]
+
+
 def moments_table(merged: DataFrame, group_cols: Sequence[str]) -> DataFrame:
-    """Finalize a merged moments STATE table (group..., state) into the
-    stats table — the piece CLI state rollups reuse without rescanning. A
-    statistic that is undefined for its group is NULL."""
-    from ..core.moments import MomentsSketch
-
-    stat_fields = [StructField("n", LongType(), False)] + [
-        StructField(c, DoubleType(), True)
-        for c in ("mean", "variance", "stddev", "skewness", "kurtosis", "vmin", "vmax")
-    ]
-
-    def finalize(run) -> list:
-        sk = MomentsSketch.from_bytes(run.column("state")[0].as_py())
-        stats = (sk.mean, sk.variance(), sk.stddev(), sk.skewness(),
-                 sk.kurtosis(), sk.vmin, sk.vmax)
-        return [(int(sk.n), *(None if v != v else float(v) for v in stats))]
-
-    return _map_key_runs(merged.select(*group_cols, "state"), group_cols,
-                         stat_fields, finalize)
+    """Finalize a merged moments STATE table (group..., state), one row per
+    group, into the stats table — one exchange-free mapInArrow, the piece
+    CLI state rollups reuse without rescanning. A statistic that is
+    undefined for its group is NULL."""
+    return _map_states(merged, group_cols, MomentsSketch.from_bytes,
+                       _MOMENT_FIELDS, _moment_rows)
 
 
 # ---------------------------------------------------------------- CMS
@@ -423,39 +452,41 @@ def dd_quantiles(
     """
     from .agg import _dd_of, dd_bucket_counts, dd_sketch_global_jvm
 
-    qs = [float(q) for q in qs]
+    qs = list(qs)
+    bound_cols = ("q0", "q1", "alpha_now")
 
-    def rows_of(sk) -> list[tuple]:
+    def bounds_of(sk) -> tuple:
         q0, q1 = sk.accurate_range()
-        return [
-            (q, float(sk.quantile(q)), float(q0), float(q1), float(sk.alpha))
-            for q in qs
-        ]
+        return float(q0), float(q1), float(sk.alpha)
 
     if not group_cols:
         sk = dd_sketch_global_jvm(df, value_col, alpha, m=bound,
                                   collapse_mode=collapse_mode)
-        return df.sparkSession.createDataFrame(
-            rows_of(sk), "q double, est double, q0 double, q1 double, alpha_now double"
-        )
+        return _global_quantiles(df.sparkSession, sk, qs).select(
+            "*", *[F.lit(v).alias(c) for c, v in zip(bound_cols, bounds_of(sk))])
+
+    def rows_of(sk) -> list[tuple]:
+        return [(*row, *bounds_of(sk)) for row in _quantile_rows(sk, qs)]
+
     return _map_key_runs(
         dd_bucket_counts(df, value_col, group_cols, alpha), group_cols,
-        _QUANTILE_FIELDS + [
-            StructField(c, DoubleType(), False) for c in ("q0", "q1", "alpha_now")
-        ],
+        _QUANTILE_FIELDS + [StructField(c, DoubleType(), False) for c in bound_cols],
         lambda run: rows_of(_dd_of(run, alpha, bound, collapse_mode)),
     )
 
 
 # ---------------------------------------------------------------- quantiles
-def _grouped_quantiles(df, value_col, group_cols, factory, from_bytes, qs):
-    """DataFrame[group..., q, est]: Arrow partials, then one key-run stage
-    that merges each group's blobs and reads its quantiles."""
-    qs = [float(q) for q in qs]
+def _quantiles(df, value_col, group_cols, factory, from_bytes, qs) -> DataFrame:
+    """DataFrame[group..., q, est] of an Arrow-filled kernel: grouped,
+    partials then one key-run stage that merges and finalizes each group;
+    global, a tree merge and the driver-side answer."""
+    qs = list(qs)
+    if not group_cols:
+        return _global_quantiles(
+            df.sparkSession, sketch_global(df, value_col, factory, from_bytes), qs)
     return _merge_runs(
         partial_sketches(df, value_col, group_cols, factory), group_cols,
-        from_bytes, _QUANTILE_FIELDS,
-        lambda sk, _: [(q, float(sk.quantile(q))) for q in qs],
+        from_bytes, _QUANTILE_FIELDS, lambda sk, _: _quantile_rows(sk, qs),
     )
 
 
@@ -466,15 +497,8 @@ def tdigest_quantiles(
     qs: Iterable[float] = (0.5, 0.9, 0.99, 0.999),
     delta: float = 200.0,
 ) -> DataFrame:
-    factory = lambda: TDigest(delta=delta)  # noqa: E731
-    qs = list(qs)
-    if group_cols:
-        return _grouped_quantiles(df, value_col, group_cols, factory,
-                                  TDigest.from_bytes, qs)
-    sk = sketch_global(df, value_col, factory, TDigest.from_bytes)
-    return df.sparkSession.createDataFrame(
-        [(float(q), float(sk.quantile(q))) for q in qs], "q double, est double"
-    )
+    return _quantiles(df, value_col, group_cols, lambda: TDigest(delta=delta),
+                      TDigest.from_bytes, qs)
 
 
 def kll_quantiles(
@@ -484,12 +508,5 @@ def kll_quantiles(
     qs: Iterable[float] = (0.5, 0.9, 0.99, 0.999),
     k: int = 200,
 ) -> DataFrame:
-    factory = lambda: KLLSketch(k=k)  # noqa: E731
-    qs = list(qs)
-    if group_cols:
-        return _grouped_quantiles(df, value_col, group_cols, factory,
-                                  KLLSketch.from_bytes, qs)
-    sk = sketch_global(df, value_col, factory, KLLSketch.from_bytes)
-    return df.sparkSession.createDataFrame(
-        [(float(q), float(sk.quantile(q))) for q in qs], "q double, est double"
-    )
+    return _quantiles(df, value_col, group_cols, lambda: KLLSketch(k=k),
+                      KLLSketch.from_bytes, qs)

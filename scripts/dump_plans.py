@@ -103,7 +103,7 @@ def _fragments(name: str, spark, sf_dir: str):
 
         emb = embeddings_table(spark, n=8_000, dim=768, seed=5, n_dupes=100)
         pairs = embedding_near_dups(
-            emb, threshold=0.99, num_bands=4, planes_per_band=16, engine="auto"
+            emb, threshold=0.99, num_bands=4, planes_per_band=16
         )
         frags.append(("pairs (banded sig join -> cosine verify)", pairs))
     return frags

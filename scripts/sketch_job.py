@@ -24,6 +24,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from puddsketch_spark.core import (  # noqa: E402 (after the path insert)
+    DDSketchPair, HLLSketch, KLLSketch, MomentsSketch, TDigest, ThetaSketch, UDDSketch)
+
+# --sketch -> its kernel: the default-parameter factory and from_bytes of
+# every fill, state table and rollup
+_KERNELS = {"udds": UDDSketch, "dd": DDSketchPair, "kll": KLLSketch,
+            "tdigest": TDigest, "moments": MomentsSketch, "hll": HLLSketch,
+            "theta": ThetaSketch}
+
 
 def parse_args(argv=None):
     p = argparse.ArgumentParser(description="puddsketch_spark distributed sketch job")
@@ -125,31 +134,50 @@ def _rollup_sets(args, group: list[str]) -> list[list[str]] | None:
     return sets
 
 
-def _rollup_out(merged, sets, group, args, fb):
-    """Shared finalize for the rollup paths: grouping-set cells from the
-    (persisted) finest state table, rendered per kernel kind."""
-    from pyspark.sql import functions as F
+def _finalize(states, gcols, args, fb, extra_cols=()):
+    """The answer table of a grouped state table (one row per ``gcols``
+    key), per kernel kind: each is one exchange-free mapInArrow."""
+    from puddsketch_spark.spark.agg import quantile_table
+    from puddsketch_spark.spark.sketches import distinct_table, moments_table
 
-    from puddsketch_spark.spark.agg import quantile_table, rollup_grouping_sets
-
-    cells = rollup_grouping_sets(merged, sets, fb)
-    gcols = group + ["grouping_id"]
     if args.sketch in ("hll", "theta"):
-        est = F.udf(lambda b: int(round(fb(bytes(b)).estimate())), "long")
-        return cells.select(*gcols, est("state").alias("distinct_est"))
+        return distinct_table(states, gcols, fb)
     if args.sketch == "moments":
-        from puddsketch_spark.spark.sketches import moments_table
+        return moments_table(states, gcols)
+    return quantile_table(states, gcols, args.quantiles, fb, extra_cols)
 
-        return moments_table(cells, gcols)
-    return quantile_table(cells, gcols, args.quantiles, fb, extra_cols=["n"])
+
+def _finalize_global(spark, sk, args):
+    """The answer table of a driver-side sketch, typed like _finalize's."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from puddsketch_spark.spark.agg import _global_quantiles
+    from puddsketch_spark.spark.sketches import (
+        _DISTINCT_FIELDS, _MOMENT_FIELDS, _distinct_rows, _moment_rows)
+
+    if args.sketch in ("hll", "theta"):
+        return spark.createDataFrame(_distinct_rows(sk), StructType(_DISTINCT_FIELDS))
+    if args.sketch == "moments":
+        return spark.createDataFrame(_moment_rows(sk), StructType(_MOMENT_FIELDS))
+    return _global_quantiles(spark, sk, args.quantiles).withColumn(
+        "n", F.lit(int(sk.count)).cast("long"))
+
+
+def _rollup_out(states, sets, group, args, fb):
+    """The grouping-set cells of a (persisted) finest state table."""
+    from puddsketch_spark.spark.agg import rollup_grouping_sets
+
+    return _finalize(rollup_grouping_sets(states, sets, fb),
+                     group + ["grouping_id"], args, fb, ["n"])
 
 
 def main(argv=None) -> int:
     args = parse_args(argv)
-    from puddsketch_spark.core import KLLSketch, TDigest, UDDSketch
     from puddsketch_spark.datagen import transcripts
     from puddsketch_spark.spark.agg import (
-        quantile_table,
+        _global_quantiles,
+        rollup_states,
         sketch_global,
         sketch_grouped,
         sketch_grouped_jvm,
@@ -183,22 +211,16 @@ def main(argv=None) -> int:
         # a shuffled counts table have no stable file lineage to resume from
         raise SystemExit("--pre-aggregate cannot be combined with --checkpoint "
                          "(resumable state is keyed by input-file lineage)")
+    group = list(args.group_by)
+    sets = _rollup_sets(args, group)  # None unless a rollup flag was given
+    fb = _KERNELS[args.sketch].from_bytes
     spark = get_spark(app_name="sketch_job", master=args.master)
     t0 = time.time()
 
     if args.from_states:
         # incremental rollup: no scan of raw data at all — load a saved
         # state table and merge to the requested (coarser) grouping
-        from puddsketch_spark.core import DDSketchPair
-        from puddsketch_spark.spark.agg import rollup_states
-
-        from puddsketch_spark.core import HLLSketch, MomentsSketch, ThetaSketch
-
-        fb = {"udds": UDDSketch, "kll": KLLSketch, "tdigest": TDigest,
-              "dd": DDSketchPair, "moments": MomentsSketch,
-              "hll": HLLSketch, "theta": ThetaSketch}[args.sketch].from_bytes
         states = spark.read.parquet(args.from_states)
-        group = list(args.group_by)
         # fail fast with actionable messages instead of an opaque
         # AnalysisException / deserialization error downstream
         meta_cols = {"state", "n", "buckets", "collapses", "num_partials",
@@ -218,7 +240,6 @@ def main(argv=None) -> int:
                     f"state table {args.from_states} was saved with "
                     f"--sketch {stored_kernel}, not --sketch {args.sketch}; "
                     "blobs are not interchangeable between kernels")
-        sets = _rollup_sets(args, group)
         if sets is not None:
             # grouping-set rollup WITHOUT any raw-data scan: the saved
             # finest states are merged once per requested set
@@ -230,42 +251,10 @@ def main(argv=None) -> int:
                 states.unpersist()
             spark.stop()
             return rc
-        if args.sketch in ("hll", "theta"):
-            if group:
-                from pyspark.sql import functions as F
-
-                est = F.udf(
-                    lambda b: int(round(fb(bytes(b)).estimate())), "long")
-                out = rollup_states(states, group, fb).select(
-                    *group, est("state").alias("distinct_est"))
-            else:
-                sk = rollup_states(states, (), fb)
-                out = spark.createDataFrame(
-                    [(int(round(sk.estimate())),)], "distinct_est long")
-        elif args.sketch == "moments":
-            from puddsketch_spark.spark.sketches import moments_table
-
-            if group:
-                out = moments_table(rollup_states(states, group, fb), group)
-            else:
-                sk = rollup_states(states, (), fb)
-                out = spark.createDataFrame(
-                    [(int(sk.n), float(sk.mean), float(sk.variance()),
-                      float(sk.stddev()), float(sk.skewness()),
-                      float(sk.kurtosis()), float(sk.vmin), float(sk.vmax))],
-                    "n long, mean double, variance double, stddev double, "
-                    "skewness double, kurtosis double, vmin double, vmax double",
-                )
-        elif group:
-            out = quantile_table(rollup_states(states, group, fb),
-                                 group, args.quantiles, fb, extra_cols=["n"])
+        if group:
+            out = _finalize(rollup_states(states, group, fb), group, args, fb, ["n"])
         else:
-            sk = rollup_states(states, (), fb)
-            out = spark.createDataFrame(
-                [(float(q), float(sk.quantile(q)), int(sk.count))
-                 for q in args.quantiles],
-                "q double, est double, n long",
-            )
+            out = _finalize_global(spark, rollup_states(states, (), fb), args)
         rc = _emit(args, spark, out, t0)
         spark.stop()
         return rc
@@ -285,18 +274,16 @@ def main(argv=None) -> int:
                                 spark.sparkContext.defaultParallelism * 2,
                                 args.salt_buckets)
 
-    group = list(args.group_by)
-    sets = _rollup_sets(args, group)  # None unless a rollup flag was given
     merged = None  # grouped state table, when the chosen path produces one
 
-    def fill_grouped(factory, from_bytes):
+    def fill_grouped(factory):
         """The grouped Arrow fill, resumable from --checkpoint when given."""
         if args.checkpoint:
             from puddsketch_spark.spark.checkpoint import checkpointed_sketch_grouped
 
             return checkpointed_sketch_grouped(
-                spark, df, args.feature, group, args.checkpoint, factory, from_bytes)
-        return sketch_grouped(df, args.feature, group, factory, from_bytes,
+                spark, df, args.feature, group, args.checkpoint, factory, fb)
+        return sketch_grouped(df, args.feature, group, factory, fb,
                               pre_aggregate=args.pre_aggregate)
 
     if args.sketch == "udds" and args.compat:
@@ -306,14 +293,11 @@ def main(argv=None) -> int:
             return UDDSketch(initial_alpha=args.alpha, m=args.max_buckets, compat=True)
 
         if group:
-            merged = fill_grouped(compat_factory, UDDSketch.from_bytes)
-            out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
+            merged = fill_grouped(compat_factory)
         else:
-            sk = sketch_global(df, args.feature, compat_factory, UDDSketch.from_bytes,
+            sk = sketch_global(df, args.feature, compat_factory, fb,
                                pre_aggregate=args.pre_aggregate)
-            out = spark.createDataFrame(
-                [(float(q), float(sk.quantile(q))) for q in args.quantiles],
-                "q double, est double")
+            out = _global_quantiles(spark, sk, args.quantiles)
     elif args.sketch == "dd":
         from puddsketch_spark.spark.sketches import dd_quantiles
 
@@ -329,55 +313,31 @@ def main(argv=None) -> int:
             # materialized partials (the JVM fill has no partition-level
             # state to checkpoint)
             merged = fill_grouped(
-                lambda: UDDSketch(initial_alpha=args.alpha, m=args.max_buckets),
-                UDDSketch.from_bytes,
-            )
-            out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
+                lambda: UDDSketch(initial_alpha=args.alpha, m=args.max_buckets))
         elif group and (args.save_states or sets is not None):
             merged = sketch_grouped_jvm(df, args.feature, group, args.alpha, args.max_buckets)
-            out = quantile_table(merged, group, args.quantiles, UDDSketch.from_bytes)
         else:
             # no state table wanted: one key-run stage assembles each
             # group's sketch and reads its quantiles
             out = udds_quantiles(df, args.feature, group, args.quantiles,
                                  args.alpha, args.max_buckets)
+    elif group:
+        # kll, tdigest, moments, hll, theta: the grouped Arrow fill at the
+        # kernel's default parameters
+        merged = fill_grouped(_KERNELS[args.sketch])
     elif args.sketch in ("hll", "theta"):
-        from puddsketch_spark.core import HLLSketch, ThetaSketch
-
-        kernel = HLLSketch if args.sketch == "hll" else ThetaSketch
-        if group:
-            merged = fill_grouped(kernel, kernel.from_bytes)
-            from pyspark.sql import functions as F
-
-            # rows here = one per group (not the hot path): plain UDF is fine
-            est = F.udf(
-                lambda b: int(round(kernel.from_bytes(bytes(b)).estimate())),
-                "long")
-            out = merged.select(*group, est("state").alias("distinct_est"))
-        else:
-            sk = sketch_global(df, args.feature, kernel, kernel.from_bytes,
-                               pre_aggregate=args.pre_aggregate)
-            out = spark.createDataFrame(
-                [(int(round(sk.estimate())),)], "distinct_est long")
+        sk = sketch_global(df, args.feature, _KERNELS[args.sketch], fb,
+                           pre_aggregate=args.pre_aggregate)
+        out = _finalize_global(spark, sk, args)
     elif args.sketch == "moments":
-        from puddsketch_spark.core import MomentsSketch
-        from puddsketch_spark.spark.sketches import moments_stats, moments_table
+        from puddsketch_spark.spark.sketches import moments_stats
 
-        if group:
-            merged = fill_grouped(MomentsSketch, MomentsSketch.from_bytes)
-            out = moments_table(merged, group)
-        else:
-            out = moments_stats(df, args.feature, ())
-    elif not group:
+        out = moments_stats(df, args.feature, ())
+    else:
         from puddsketch_spark.spark.sketches import kll_quantiles, tdigest_quantiles
 
         quantiles = kll_quantiles if args.sketch == "kll" else tdigest_quantiles
         out = quantiles(df, args.feature, (), args.quantiles)
-    else:
-        factory = (lambda: KLLSketch(k=200)) if args.sketch == "kll" else (lambda: TDigest())
-        from_bytes = KLLSketch.from_bytes if args.sketch == "kll" else TDigest.from_bytes
-        merged = fill_grouped(factory, from_bytes)
-        out = quantile_table(merged, group, args.quantiles, from_bytes)
 
     if sets is not None:
         if merged is None:
@@ -385,20 +345,12 @@ def main(argv=None) -> int:
                 "--grouping-sets/--cube/--rollup need a grouped state-table "
                 "path (udds/kll/tdigest/moments/hll/theta with --group-by; "
                 "--sketch dd emits quantiles directly, no state table)")
-        from puddsketch_spark.core import (
-            DDSketchPair,  # noqa: F401 (kernel table completeness)
-            HLLSketch,
-            MomentsSketch,
-            ThetaSketch,
-        )
-
-        rfb = {"udds": UDDSketch, "kll": KLLSketch, "tdigest": TDigest,
-               "moments": MomentsSketch, "hll": HLLSketch,
-               "theta": ThetaSketch}[args.sketch].from_bytes
         # the finest table feeds one merge per set — persist so the fill
         # runs once across sets (and is shared with --save-states below)
         merged = merged.persist()
-        out = _rollup_out(merged, sets, group, args, rfb)
+        out = _rollup_out(merged, sets, group, args, fb)
+    elif merged is not None:
+        out = _finalize(merged, group, args, fb)
 
     if args.save_states:
         if merged is None:

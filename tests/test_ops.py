@@ -305,17 +305,17 @@ def test_highdim_arrow_engine(spark):
     from puddsketch_spark.ops.dedup import release_cached
 
     emb = embeddings_table(spark, n=300, dim=768, seed=1, n_dupes=20).cache()
-    pairs = embedding_near_dups(emb, threshold=0.99, engine="auto")
+    pairs = embedding_near_dups(emb, threshold=0.99)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         pairs.explain("formatted")
     plan = buf.getvalue()
-    assert "ArrowEvalPython" in plan  # auto picked the matmul path at dim 768
+    assert "ArrowEvalPython" in plan  # the matmul path at dim 768
     got = {(r.a, r.b) for r in pairs.collect()}
     assert {(i, i + 300) for i in range(20)} <= got  # planted exact dups found
     release_cached(pairs)
 
-    assigned = ivf_assign(emb, random_centroids(768, n_cells=64), engine="auto")
+    assigned = ivf_assign(emb, random_centroids(768, n_cells=64))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         assigned.explain("formatted")

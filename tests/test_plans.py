@@ -351,3 +351,51 @@ def test_grouped_sketch_apis_run_one_key_run_stage(spark):
         assert "FlatMapGroupsInPandas" not in plan, (name, plan)
         if fused:
             assert "ArrowEvalPython" not in plan, (name, plan)
+
+
+def test_state_table_finalizers_are_one_exchange_free_stage(spark):
+    """quantile_table, moments_table and distinct_table finalize a state
+    table that already holds one row per key: each executed plan over a
+    localCheckpoint-ed state table is exactly one MapInArrow, with no
+    Exchange, Sort, Python UDF eval or Generate. A NULL string key and a
+    NaN double key each keep their type and yield one row per quantile."""
+    from pyspark.sql import functions as F
+
+    from puddsketch_spark.core import HLLSketch, MomentsSketch, UDDSketch
+    from puddsketch_spark.spark.agg import quantile_table, sketch_grouped
+    from puddsketch_spark.spark.sketches import distinct_table, moments_table
+
+    rows = [(s, k, float(i % 37) + 0.5)
+            for i, (s, k) in enumerate([("a", 1.0), (None, 2.0), ("b", float("nan"))] * 40)]
+    df = spark.createDataFrame(rows, "s string, k double, v double")
+    keys = ["s", "k"]
+
+    def states(factory):
+        return sketch_grouped(df, "v", keys, factory).localCheckpoint()
+
+    qs = [0.25, 0.5, 0.99]
+    cases = {
+        "quantile_table": quantile_table(states(UDDSketch), keys, qs,
+                                         UDDSketch.from_bytes, extra_cols=["n"]),
+        "moments_table": moments_table(states(MomentsSketch), keys),
+        "distinct_table": distinct_table(states(HLLSketch), keys, HLLSketch.from_bytes),
+    }
+    for name, out in cases.items():
+        nodes = [n.nodeName() for n in _nodes(out._jdf.queryExecution().executedPlan())]
+        assert nodes.count("MapInArrow") == 1, (name, nodes)
+        for bad in ("Exchange", "Sort", "ArrowEvalPython", "BatchEvalPython", "Generate"):
+            assert not any(bad in n for n in nodes), (name, bad, nodes)
+        assert out.schema["s"].dataType.simpleString() == "string", name
+        assert out.schema["k"].dataType.simpleString() == "double", name
+
+    got = cases["quantile_table"].collect()
+    assert cases["quantile_table"].columns == ["s", "k", "q", "est", "n"]
+    by_key = {}
+    for r in got:
+        key = (r.s, "nan" if r.k != r.k else r.k)
+        by_key.setdefault(key, []).append(r.q)
+    assert by_key == {("a", 1.0): qs, (None, 2.0): qs, ("b", "nan"): qs}
+    assert all(r.n == 40 for r in got)
+    assert {(r.s, r.n) for r in cases["moments_table"].collect()} == {
+        ("a", 40), (None, 40), ("b", 40)}
+    assert cases["distinct_table"].where(F.isnan("k")).first().distinct_est > 0

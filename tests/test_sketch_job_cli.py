@@ -6,7 +6,8 @@ Covers: --rollup on a fresh fill (+ --save-states), --grouping-sets on
 bad-column refusal, --sketch udds estimates equal to an in-process
 Arrow fill of the same generated input, global --sketch kll/tdigest,
 grouped --sketch hll/theta resuming from --checkpoint, global --sketch
-udds --compat, and --pre-aggregate, a global --checkpoint or a --sketch
+udds --compat, NULL (never NaN) statistics of a one-value --from-states
+moments table, and --pre-aggregate, a global --checkpoint or a --sketch
 dd --checkpoint refused where the job would ignore them.
 """
 
@@ -200,3 +201,29 @@ def test_sketch_job_dd_checkpoint_refused(tmp_path):
     assert proc.returncode != 0
     assert "--checkpoint has no effect on --sketch dd" in proc.stderr, proc.stderr[-500:]
     assert not ckpt.exists()
+
+
+def test_sketch_job_from_states_moments_single_value_is_null(tmp_path):
+    """A one-value moments state table rolled up globally and grouped from
+    --from-states gives JSON null skewness and kurtosis on both paths, as
+    moments_stats does: never a bare NaN, which is not valid JSON."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from puddsketch_spark.core import MomentsSketch
+
+    states = tmp_path / "states"
+    states.mkdir()
+    blob = MomentsSketch().update(np.array([3.5])).to_bytes()
+    pq.write_table(pa.table({"role": ["user"], "state": pa.array([blob], pa.binary()),
+                             "sketch_kernel": ["moments"]}),
+                   str(states / "part-0.parquet"))
+    for group in ([], ["role"]):
+        proc = _run(["--from-states", str(states), "--sketch", "moments",
+                     "--group-by", *group], timeout=180)
+        assert proc.returncode == 0, (group, proc.stderr[-2000:])
+        assert "NaN" not in proc.stdout, (group, proc.stdout)
+        (row,) = _rows(proc)
+        assert row["n"] == 1 and row["mean"] == 3.5 and row["variance"] == 0.0, group
+        assert row["skewness"] is None and row["kurtosis"] is None, (group, row)
