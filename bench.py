@@ -201,21 +201,8 @@ def run_bench(sf_dir: str, cpus: str, n_turn_target: int = 2_000_000) -> dict:
         quantile_table(merged, ["role", "tool"], [0.5, 0.9, 0.99, 0.999],
                        UDDSketch.from_bytes).collect()
 
-    def fill_arrow_preagg():
-        # pre_aggregate: Tungsten distinct-count first, weighted kernel fill
-        # after — the Arrow exchange carries distinct (group, value) rows
-        # instead of all turns (measured 6x on 50M turns at 8 cores)
-        merged = sketch_grouped(
-            t, "text_len", ["role", "tool"],
-            lambda: UDDSketch(initial_alpha=0.01, m=200), UDDSketch.from_bytes,
-            pre_aggregate=True,
-        )
-        quantile_table(merged, ["role", "tool"], [0.5, 0.9, 0.99, 0.999],
-                       UDDSketch.from_bytes).collect()
-
     record("udds_transcripts_grouped_jvm", fill_jvm)
     record("udds_transcripts_grouped_arrow", fill_arrow)
-    record("udds_transcripts_grouped_arrow_preagg", fill_arrow_preagg)
     t.unpersist()
     extras["transcript_turns"] = n_turns
     extras["transcript_gen_sec"] = round(gen_s, 3)
@@ -223,8 +210,6 @@ def run_bench(sf_dir: str, cpus: str, n_turn_target: int = 2_000_000) -> dict:
         n_turns / raw_median["udds_transcripts_grouped_jvm"], 1)
     extras["sketch_throughput_turns_per_sec_arrow"] = round(
         n_turns / raw_median["udds_transcripts_grouped_arrow"], 1)
-    extras["sketch_throughput_turns_per_sec_arrow_preagg"] = round(
-        n_turns / raw_median["udds_transcripts_grouped_arrow_preagg"], 1)
 
     # high-dim embedding audit: dim-768 hyperplane-LSH near-dups via the
     # Arrow matmul engine (no catalyst literal blowup); planted exact dupes

@@ -77,8 +77,8 @@ class BloomFilter:
         return self
 
     def update_weighted(self, values, counts) -> "BloomFilter":
-        """Membership is duplicate-insensitive (bit OR), so pre-aggregated
-        (value, count) input sets the same bits as the row path — same
+        """Membership is duplicate-insensitive (bit OR), so a weighted fill
+        of (value, count) rows sets the same bits as the row fill — same
         justification as HLL. n_added is corrected to the weighted total so
         it matches the row path exactly (NaN rows drop their counts too)."""
         arr = np.asarray(values) if not hasattr(values, "to_numpy") else values.to_numpy()

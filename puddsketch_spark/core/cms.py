@@ -56,7 +56,12 @@ class CountMinSketch:
     num_collapses = 0
     value_family = "hash"
 
-    def update(self, values, counts: np.ndarray | None = None) -> "CountMinSketch":
+    def update(self, values) -> "CountMinSketch":
+        return self.update_weighted(values, None)
+
+    def update_weighted(self, values, counts) -> "CountMinSketch":
+        """Add each value ``counts`` times (None: once), as ``update`` over
+        the repeated values would."""
         values, counts = _drop_nan(values, counts)
         hs = hash64_k(values, self.depth)
         n = hs.shape[1]

@@ -46,7 +46,12 @@ class MisraGries:
 
     num_collapses = 0
 
-    def update(self, values, counts=None) -> "MisraGries":
+    def update(self, values) -> "MisraGries":
+        return self.update_weighted(values, None)
+
+    def update_weighted(self, values, counts) -> "MisraGries":
+        """Add each value ``counts`` times (None: once), as ``update`` over
+        the repeated values would."""
         arr = np.asarray(values)
         if arr.dtype.kind == "f":
             m = ~np.isnan(arr)

@@ -81,10 +81,10 @@ class HLLSketch:
         return self
 
     def update_weighted(self, values, counts) -> "HLLSketch":
-        """Distinct counting is duplicate-insensitive, so pre-aggregated
-        (value, count) input is just the values — counts carry no
-        information for HLL. Present so the pre_aggregate fill path
-        (spark/agg.py) works uniformly across kernels."""
+        """Distinct counting is duplicate-insensitive, so a weighted fill
+        of (value, count) rows is just the values — counts carry no
+        information for HLL. Present so the weighted fill
+        (agg.partial_sketches' weight_col) works uniformly across kernels."""
         return self.update(values)
 
     def merge(self, other: "HLLSketch") -> "HLLSketch":

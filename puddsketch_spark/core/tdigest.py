@@ -79,7 +79,8 @@ class TDigest:
         return self
 
     def update_weighted(self, values, counts) -> "TDigest":
-        """Absorb pre-aggregated (value, count) pairs (JVM pre-agg path)."""
+        """Absorb (value, count) pairs: the weighted fill of a counted
+        table."""
         v = np.asarray(values, dtype=np.float64)
         c = np.asarray(counts, dtype=np.float64)
         ok = ~np.isnan(v) & (c > 0)

@@ -95,7 +95,7 @@ class ThetaSketch:
         return self
 
     def update_weighted(self, values, counts) -> "ThetaSketch":
-        """Distinct-count is weight-invariant: the pre-aggregated fill
+        """Distinct-count is weight-invariant: the weighted fill
         (distinct value + count rows) feeds the same key set."""
         return self.update(values)
 

@@ -182,10 +182,10 @@ class UDDSketch:
         return np.ceil(np.log(v) / self.log_gamma).astype(np.int64)
 
     def update_weighted(self, values, counts) -> "UDDSketch":
-        """Absorb pre-aggregated (value, count) pairs — the JVM pre-agg path:
-        ``df.groupBy(value).count()`` runs in Tungsten, the kernel only sees
-        distinct values. Equivalent to ``update`` repeating each value
-        count times."""
+        """Absorb (value, count) pairs — the weighted fill of a counted
+        table (``df.groupBy(value).count()`` in Tungsten), so the kernel
+        only sees distinct values. Equivalent to ``update`` repeating each
+        value count times."""
         v = np.asarray(values, dtype=np.float64)
         c = np.asarray(counts, dtype=np.int64)
         ok = ~np.isnan(v)

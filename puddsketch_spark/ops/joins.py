@@ -13,7 +13,7 @@ test suite pins by equality against the unfiltered join.
 
 Spark's own AQE has a limited runtime-filter feature; this operator makes
 the pattern explicit, works on any join the planner can't infer (e.g.
-pre-aggregated or unioned build sides), and reuses the filter across
+aggregated or unioned build sides), and reuses the filter across
 several probes (build once, probe many).
 """
 

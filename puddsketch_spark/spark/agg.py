@@ -28,7 +28,9 @@ Scale notes (100 TB / 1000 executors):
     ~16*m bytes (m=200 -> ~3 KB); raw rows never cross the wire.
   * group-key skew is irrelevant post-partial (one row per group per
     partition); input conv_id skew is handled by skew.salted_repartition.
-  * all per-row work is numpy inside Arrow batches — no per-row Python.
+  * per-row work is numpy inside Arrow batches, except that a string
+    value column becomes one Python ``str`` per row before the kernel
+    hashes it (partial_sketches).
 """
 
 from __future__ import annotations
@@ -69,7 +71,8 @@ __all__ = [
 
 # A sketch kernel is anything with: update(np.ndarray)->self, merge(other)->self,
 # to_bytes()->bytes, classmethod from_bytes(bytes), and int attrs count /
-# num_buckets / num_collapses (companion sketches report 0 collapses).
+# num_buckets / num_collapses (companion sketches report 0 collapses); a
+# weighted fill also needs update_weighted(values, counts)->self.
 SketchFactory = Callable[[], object]
 
 def _state_fields(tail: str) -> list[StructField]:
@@ -110,29 +113,6 @@ def _metrics_of(sk) -> tuple[int, int, int]:
         int(getattr(sk, "count", 0)),
         int(getattr(sk, "num_buckets", 0)),
         int(getattr(sk, "num_collapses", 0)) + int(getattr(sk, "pair_collapses", 0)),
-    )
-
-
-def _kernel_update_weighted(sk, vals: np.ndarray, w: np.ndarray):
-    """Weighted-update dispatch: kernels expose either update_weighted
-    (UDD, t-digest, HLL, Bloom) or update(values, counts) (CMS,
-    Misra-Gries). Rank-based kernels (KLL, REQ) have no exact weighted
-    form — their compaction samples ITEMS, so they reject weighted fills
-    (pre_aggregate or weight_col). The capability check is by SIGNATURE,
-    not by catching TypeError from the call — a genuine TypeError inside a
-    weight-capable kernel must surface as itself, not as a false
-    'unsupported' diagnosis."""
-    import inspect
-
-    uw = getattr(sk, "update_weighted", None)
-    if uw is not None:
-        return uw(vals, w)
-    params = list(inspect.signature(sk.update).parameters)
-    if len(params) >= 2:  # update(values, counts)
-        return sk.update(vals, w)
-    raise TypeError(
-        f"{type(sk).__name__} does not support weighted update; weighted "
-        "fills (pre_aggregate or weight_col) need a weight-capable kernel"
     )
 
 
@@ -183,8 +163,28 @@ def partial_sketches(
     lineage/metrics (partition_id, n, buckets, collapses) per the
     north_rule, mirroring the reference's per-rank logs
     (/root/reference/ParallelDDSketch/src/ParallelSketcher.cc:662-708).
+
+    ``weight_col``: fill an already counted (value, count) table, e.g.
+    ``groupBy(group, value).count()``, with the kernel's
+    ``update_weighted`` — the Arrow exchange then carries one row per
+    distinct (group, value). The merged states (merge_grouped, or
+    sketch_global's weight_col) are
+      * state-identical to the row fill for UDD (same bucket increments),
+        HLL, Bloom and theta (duplicate-insensitive) and count-min
+        (additive counters);
+      * bound-preserving but not state-identical for t-digest and
+        Misra-Gries (compression / shrink sees different intermediate
+        states, so centroids / counters can differ while the published
+        error bounds still hold);
+      * rejected for KLL, REQ and DD (rank compaction and pair stores
+        sample items; they have no ``update_weighted``), with a TypeError
+        before any job runs.
     """
     group_cols = list(group_cols)
+    if weight_col is not None and not hasattr(factory(), "update_weighted"):
+        raise TypeError(
+            f"{type(factory()).__name__} does not support weighted update; "
+            "a weight_col fill needs a kernel with update_weighted")
     schema = StructType([df.schema[c] for c in group_cols]
                         + _state_fields("partition_id"))
     sel = [*group_cols, value_col] + ([weight_col] if weight_col else [])
@@ -197,22 +197,21 @@ def partial_sketches(
         pid = ctx.partitionId() if ctx is not None else -1
         sketches: dict[tuple, object] = {}
         proto = factory()  # its value_family picks the kernel input
+        update = "update" if weight_col is None else "update_weighted"
+
+        def fill(sk, idx):
+            # update(values) or update_weighted(values, counts) on rows idx
+            getattr(sk, update)(*(c[idx] for c in cols))
+
         for batch in batches:
             vals_all, valid = _kernel_input(batch.column(len(group_cols)), proto)
-            w_all = None
+            cols = [vals_all]
             if weight_col is not None:
-                w_all = (
-                    batch.column(len(group_cols) + 1)
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64)
-                )
+                cols.append(batch.column(len(group_cols) + 1)
+                            .to_numpy(zero_copy_only=False).astype(np.int64))
             if not group_cols:
-                sk = sketches.setdefault((), factory())
-                sl = slice(None) if valid is None else valid
-                if w_all is None:
-                    sk.update(vals_all[sl])
-                else:
-                    _kernel_update_weighted(sk, vals_all[sl], w_all[sl])
+                fill(sketches.setdefault((), factory()),
+                     slice(None) if valid is None else valid)
                 continue
             # dictionary-encode each group col: int codes, tiny value dicts
             code_arrays, dicts = [], []
@@ -244,10 +243,7 @@ def partial_sketches(
                 idx = order[g0:g1]
                 if valid is not None:
                     idx = idx[valid[idx]]
-                if w_all is None:
-                    sk.update(vals_all[idx])
-                else:
-                    _kernel_update_weighted(sk, vals_all[idx], w_all[idx])
+                fill(sk, idx)
         from pyspark.sql.pandas.types import to_arrow_schema
 
         out_schema = to_arrow_schema(schema)
@@ -421,8 +417,16 @@ def merge_grouped(
                        lambda sk, k: [_state_values(sk, k)])
 
 
-def _tree_merge_bytes(blobs, fb, depth: int):
-    """treeAggregate with a None sentinel: ONE job, same pairwise merge
+# treeAggregate levels of every global merge: executors pairwise-merge
+# blobs at this many levels, the driver receives one blob
+_TREE_DEPTH = 2
+
+
+def _merge_global(states: DataFrame, fb) -> bytes | None:
+    """The merged blob of every ``state`` of ``states``, or None when it
+    has none: sketch_global's and rollup_states' one global merge.
+
+    treeAggregate with a None sentinel: ONE job, same pairwise merge
     tree as RDD.treeReduce (which PySpark implements as exactly this
     aggregate over (isZero, value) pairs — so results stay bit-identical
     for order-sensitive kernels like KLL). Replaces the old
@@ -430,8 +434,7 @@ def _tree_merge_bytes(blobs, fb, depth: int):
     job (the isEmpty take(1)) and a cache round-trip per global fill —
     measured r7: that overhead was a fixed ~0.15-0.3 s tax on every one of
     the nine headline queries that end in a global fill (guide §1.2: remove
-    passes before tuning anything else). Returns the merged blob, or None
-    when ``blobs`` is empty."""
+    passes before tuning anything else)."""
     def seq(acc, b):
         return b if acc is None else fb(acc).merge(fb(b)).to_bytes()
 
@@ -442,14 +445,14 @@ def _tree_merge_bytes(blobs, fb, depth: int):
             return a
         return fb(a).merge(fb(b)).to_bytes()
 
-    return blobs.treeAggregate(None, seq, comb, depth=depth)
+    blobs = states.select("state").rdd.map(lambda r: bytes(r[0]))
+    return blobs.treeAggregate(None, seq, comb, depth=_TREE_DEPTH)
 
 
 def rollup_states(
     states: DataFrame,
     group_cols: Sequence[str],
     from_bytes: Callable[[bytes], object],
-    depth: int = 2,
 ):
     """Re-aggregate an EXISTING sketch-state table to a coarser grouping —
     the incremental-rollup pattern: materialize per-(day, group) states
@@ -468,8 +471,7 @@ def rollup_states(
     group_cols = list(group_cols)
     if group_cols:
         return merge_grouped(states, group_cols, from_bytes)
-    blobs = states.select("state").rdd.map(lambda r: bytes(r[0]))
-    out = _tree_merge_bytes(blobs, from_bytes, depth)
+    out = _merge_global(states, from_bytes)
     if out is None:
         raise ValueError("rollup_states: empty state table")
     return from_bytes(out)
@@ -506,7 +508,7 @@ def rollup_grouping_sets(
     so every cell equals a direct fill on its slice up to merge effects —
     bit-identical for UDD m=0 / DD / HLL / CMS / Bloom / theta /
     moments, bound-preserving for t-digest / Misra-Gries (see
-    sketch_grouped's pre_aggregate note for the same taxonomy).
+    partial_sketches' weight_col note for the same taxonomy).
     """
     sets = [list(s) for s in grouping_sets]
     if not sets:
@@ -597,23 +599,12 @@ def sketch_grouped(
     group_cols: Sequence[str],
     factory: SketchFactory = UDDSketch,
     from_bytes: Callable[[bytes], object] | None = None,
-    pre_aggregate: bool = False,
 ) -> DataFrame:
     """partials -> keyed merge. Returns DataFrame[group..., state, n, buckets, collapses, num_partials].
 
-    ``pre_aggregate=True`` runs a Tungsten ``groupBy(group, value).count()``
-    FIRST and feeds (value, weight) pairs to the kernel — the JVM->Python
-    Arrow exchange then carries |distinct (group, value)| rows instead of N.
-    The right call for duplicate-heavy columns (integer-ish features,
-    categorical values): at 10^12 turns with ~10^3 distinct lengths per
-    group, the Python stage sees ~10^3 rows per group instead of 10^9.
-    Wrong call for near-unique columns (the extra shuffle buys nothing).
-    State-identical to the row path for UDD (same bucket increments),
-    HLL/Bloom (duplicate-insensitive), and CMS (additive counters);
-    bound-preserving but NOT state-identical for t-digest and Misra-Gries
-    (their compression/shrink sees different intermediate states, so
-    centroids/counters can differ while the published error bounds still
-    hold); rank-compaction kernels (KLL, REQ) reject it loudly.
+    A table already counted by (group, value) fills with
+    ``partial_sketches(weight_col=)`` + merge_grouped instead (see its
+    weight_col note for which kernels give the same states).
 
     When collapses happen: a bounded UDD kernel (m > 0) may collapse
     *during* this fill, per partition and again at each merge, while the
@@ -623,15 +614,8 @@ def sketch_grouped(
     bit-identical.
     """
     fb = from_bytes or _default_from_bytes(factory)
-    if pre_aggregate:
-        counts = df.groupBy(*group_cols, value_col).agg(
-            F.count(F.lit(1)).alias("_w")
-        )
-        partials = partial_sketches(counts, value_col, group_cols, factory,
-                                    weight_col="_w")
-    else:
-        partials = partial_sketches(df, value_col, group_cols, factory)
-    return merge_grouped(partials, group_cols, fb)
+    return merge_grouped(partial_sketches(df, value_col, group_cols, factory),
+                         group_cols, fb)
 
 
 def _default_from_bytes(factory: SketchFactory):
@@ -644,36 +628,20 @@ def sketch_global(
     value_col: str,
     factory: SketchFactory = UDDSketch,
     from_bytes: Callable[[bytes], object] | None = None,
-    depth: int = 2,
-    pre_aggregate: bool = False,
     weight_col: str | None = None,
 ):
     """Global sketch via two-level treeReduce over serialized partials.
 
     Spark analogue of the reference's MPI_Reduce with a custom commutative op
     (/root/reference/psketches/pudds.cpp:45-57,175-182): executors pairwise-
-    merge blobs at ``depth`` levels, the driver receives one blob.
+    merge blobs (_merge_global), the driver receives one blob.
     Returns the merged kernel object (driver-side, like rank 0).
-    ``pre_aggregate``: see sketch_grouped — Tungsten distinct-count first,
-    weighted kernel fill after; for duplicate-heavy value columns.
-    ``weight_col``: fill from an ALREADY-aggregated (value, weight) table —
-    the caller pays the Tungsten count once and can reuse it for other
-    work, instead of pre_aggregate computing a private copy.
+    ``weight_col``: fill from an ALREADY-counted (value, count) table (see
+    partial_sketches) — the caller pays the Tungsten count once and can
+    reuse it for other work.
     """
     fb = from_bytes or _default_from_bytes(factory)
-    if pre_aggregate and weight_col is not None:
-        raise ValueError("pass pre_aggregate or weight_col, not both")
-    if pre_aggregate:
-        counts = df.groupBy(value_col).agg(F.count(F.lit(1)).alias("_w"))
-        partials = partial_sketches(counts, value_col, (), factory,
-                                    weight_col="_w")
-    elif weight_col is not None:
-        partials = partial_sketches(df, value_col, (), factory,
-                                    weight_col=weight_col)
-    else:
-        partials = partial_sketches(df, value_col, (), factory)
-    blobs = partials.select("state").rdd.map(lambda r: bytes(r[0]))
-    out = _tree_merge_bytes(blobs, fb, depth)
+    out = _merge_global(partial_sketches(df, value_col, (), factory, weight_col), fb)
     return factory() if out is None else fb(out)
 
 

@@ -66,15 +66,6 @@ def parse_args(argv=None):
                         "on Arrow partials)")
     p.add_argument("--salt-buckets", type=int, default=0,
                    help=">0: salted repartition on conv_id before sketching")
-    p.add_argument("--pre-aggregate", action="store_true",
-                   help="Arrow-filled kernels: Tungsten groupBy(value).count() "
-                        "first, weighted kernel fill after — exchange carries "
-                        "distinct values, not rows (duplicate-heavy columns). "
-                        "State-identical for udds --compat; bound-preserving "
-                        "for tdigest; rejected for kll/dd and with "
-                        "--checkpoint, for udds without --compat and "
-                        "global moments, which fill on the JVM, and for global "
-                        "tdigest")
     p.add_argument("--length-dist", choices=["uniform", "lognormal", "beta"],
                    default="uniform",
                    help="--generate: text length distribution (reference set)")
@@ -187,18 +178,10 @@ def main(argv=None) -> int:
     from puddsketch_spark.spark.session import get_spark
     from puddsketch_spark.spark.skew import salted_repartition
 
-    if args.pre_aggregate and args.sketch in ("kll", "dd"):
-        raise SystemExit(f"--pre-aggregate is not exact for --sketch {args.sketch} "
-                         "(rank compaction / pair stores sample items)")
-    if args.pre_aggregate and args.sketch == "udds" and not args.compat:
-        raise SystemExit("--pre-aggregate has no effect on --sketch udds without "
-                         "--compat: its Tungsten bucket fill already counts per key")
-    if args.pre_aggregate and args.sketch == "moments" and not args.group_by:
-        raise SystemExit("--pre-aggregate has no effect on global --sketch moments, "
-                         "which is one Catalyst aggregation")
-    if args.pre_aggregate and args.sketch == "tdigest" and not args.group_by:
-        raise SystemExit("--pre-aggregate has no effect on global --sketch tdigest, "
-                         "whose quantiles come from an unweighted tdigest_quantiles")
+    if args.from_states and (args.save_states or args.checkpoint):
+        flag = "--save-states" if args.save_states else "--checkpoint"
+        raise SystemExit(f"{flag} has no effect with --from-states: it merges "
+                         "a saved state table, with no fill to save or resume")
     if args.checkpoint and not args.group_by:
         raise SystemExit("--checkpoint needs --group-by: resumable state is the "
                          "grouped per-partition state table")
@@ -206,11 +189,6 @@ def main(argv=None) -> int:
         raise SystemExit("--checkpoint has no effect on --sketch dd: it fills on "
                          "the JVM bucket histogram, with no per-partition state "
                          "table to resume")
-    if args.pre_aggregate and args.checkpoint:
-        # checkpoint lineage fingerprints input FILES; partials derived from
-        # a shuffled counts table have no stable file lineage to resume from
-        raise SystemExit("--pre-aggregate cannot be combined with --checkpoint "
-                         "(resumable state is keyed by input-file lineage)")
     group = list(args.group_by)
     sets = _rollup_sets(args, group)  # None unless a rollup flag was given
     fb = _KERNELS[args.sketch].from_bytes
@@ -283,8 +261,7 @@ def main(argv=None) -> int:
 
             return checkpointed_sketch_grouped(
                 spark, df, args.feature, group, args.checkpoint, factory, fb)
-        return sketch_grouped(df, args.feature, group, factory, fb,
-                              pre_aggregate=args.pre_aggregate)
+        return sketch_grouped(df, args.feature, group, factory, fb)
 
     if args.sketch == "udds" and args.compat:
         # compat keys come from the reference fast-log — a Python kernel
@@ -295,8 +272,7 @@ def main(argv=None) -> int:
         if group:
             merged = fill_grouped(compat_factory)
         else:
-            sk = sketch_global(df, args.feature, compat_factory, fb,
-                               pre_aggregate=args.pre_aggregate)
+            sk = sketch_global(df, args.feature, compat_factory, fb)
             out = _global_quantiles(spark, sk, args.quantiles)
     elif args.sketch == "dd":
         from puddsketch_spark.spark.sketches import dd_quantiles
@@ -326,8 +302,7 @@ def main(argv=None) -> int:
         # kernel's default parameters
         merged = fill_grouped(_KERNELS[args.sketch])
     elif args.sketch in ("hll", "theta"):
-        sk = sketch_global(df, args.feature, _KERNELS[args.sketch], fb,
-                           pre_aggregate=args.pre_aggregate)
+        sk = sketch_global(df, args.feature, _KERNELS[args.sketch], fb)
         out = _finalize_global(spark, sk, args)
     elif args.sketch == "moments":
         from puddsketch_spark.spark.sketches import moments_stats

@@ -70,7 +70,7 @@ def test_cms_merge_and_serde():
 
 def test_cms_weighted_update():
     sk = CountMinSketch()
-    sk.update(np.array(["x", "y"], dtype=object), counts=np.array([10, 32]))
+    sk.update_weighted(np.array(["x", "y"], dtype=object), np.array([10, 32]))
     assert sk.query(np.array(["x"], dtype=object))[0] >= 10
     assert sk.total == 42
 
@@ -178,7 +178,7 @@ def test_kll_k_mismatch_raises():
 
 
 def test_bloom_weighted_matches_row_path():
-    """update_weighted (the pre_aggregate fill path) sets the same bits AND
+    """update_weighted (the weighted fill) sets the same bits AND
     the same n_added as row-at-a-time update, NaN counts dropped too."""
     import numpy as np
 

@@ -65,7 +65,7 @@ def test_heavy_hitters_superset():
 
 def test_weighted_and_serde_and_mismatch():
     sk = MisraGries(k=8)
-    sk.update(np.array(["a", "b"], dtype=object), counts=np.array([100, 5]))
+    sk.update_weighted(np.array(["a", "b"], dtype=object), np.array([100, 5]))
     assert sk.estimate("a")[0] == 100 and sk.total == 105
     rt = MisraGries.from_bytes(sk.to_bytes())
     assert rt.counters == sk.counters and rt.err == sk.err

@@ -240,28 +240,6 @@ def test_multi_feature_sketch_scans_once(spark):
     assert keys and all("string" not in k for k in keys), keys
 
 
-def test_pre_aggregate_counts_before_python(spark):
-    """pre_aggregate=True: the distinct-count must be a Tungsten
-    HashAggregate UPSTREAM of the Python stage — if the count ran in Python
-    (or after the exchange to the kernel), the whole point (shrinking the
-    JVM->Python exchange to distinct values) would be lost."""
-    from puddsketch_spark.core import UDDSketch
-    from puddsketch_spark.spark.agg import sketch_grouped
-
-    li = spark.read.parquet(f"{SF}/lineitem.parquet")
-    merged = sketch_grouped(li, "l_quantity", ["l_returnflag"],
-                            lambda: UDDSketch(initial_alpha=0.01, m=0),
-                            pre_aggregate=True)
-    tree = _plan(merged).split("\n\n")[0]
-    py_nodes = [i for i, ln in enumerate(tree.splitlines())
-                if "MapInArrow" in ln or "ArrowEval" in ln or "FlatMapGroupsInPandas" in ln]
-    agg_nodes = [i for i, ln in enumerate(tree.splitlines()) if "HashAggregate" in ln]
-    assert py_nodes and agg_nodes
-    # plan trees print top-down (root first), so upstream = LARGER line idx:
-    # some HashAggregate must sit below (= before) the deepest python node
-    assert max(agg_nodes) > max(py_nodes), tree
-
-
 def test_range_join_is_hash_join_not_nested_loop(spark):
     """The bucketed range join must plan as a hash equi-join — never a
     cartesian product or broadcast-nested-loop (the naive range-predicate

@@ -7,8 +7,9 @@ bad-column refusal, --sketch udds estimates equal to an in-process
 Arrow fill of the same generated input, global --sketch kll/tdigest,
 grouped --sketch hll/theta resuming from --checkpoint, global --sketch
 udds --compat, NULL (never NaN) statistics of a one-value --from-states
-moments table, and --pre-aggregate, a global --checkpoint or a --sketch
-dd --checkpoint refused where the job would ignore them.
+moments table, a global --checkpoint or a --sketch dd --checkpoint
+refused where the job would ignore them, and --save-states or
+--checkpoint refused with --from-states.
 """
 
 import json
@@ -130,20 +131,6 @@ def test_sketch_job_global_compat(spark):
     assert _rows(proc) == [{"q": q, "est": float(sk.quantile(q))} for q in qs]
 
 
-def test_sketch_job_pre_aggregate_rejected_where_ignored():
-    """--pre-aggregate only steers the Arrow-filled kernels: on --sketch udds
-    without --compat (grouped or global) and on global --sketch moments the
-    fill is on the JVM, and global --sketch tdigest reads tdigest_quantiles,
-    so the flag is refused instead of ignored."""
-    for extra in (["--sketch", "udds", "--group-by", "role"],
-                  ["--sketch", "udds", "--group-by"],
-                  ["--sketch", "moments", "--group-by"],
-                  ["--sketch", "tdigest", "--group-by"]):
-        proc = _run(["--generate", "2000", "--pre-aggregate", *extra], timeout=120)
-        assert proc.returncode != 0, extra
-        assert "--pre-aggregate has no effect" in proc.stderr, (extra, proc.stderr[-500:])
-
-
 def test_sketch_job_global_kll_and_tdigest():
     """A bare --group-by (global) --sketch kll / tdigest prints one q/est row
     per quantile, in the generated text_len range (1..999)."""
@@ -227,3 +214,29 @@ def test_sketch_job_from_states_moments_single_value_is_null(tmp_path):
         (row,) = _rows(proc)
         assert row["n"] == 1 and row["mean"] == 3.5 and row["variance"] == 0.0, group
         assert row["skewness"] is None and row["kurtosis"] is None, (group, row)
+
+
+def test_sketch_job_from_states_refuses_save_states_and_checkpoint(tmp_path):
+    """--from-states merges a saved state table and runs no fill, so a
+    --save-states or --checkpoint next to it is refused before any Spark
+    work instead of being ignored (exit 0 and no directory written)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from puddsketch_spark.core import MomentsSketch
+
+    states = tmp_path / "states"
+    states.mkdir()
+    blob = MomentsSketch().update(np.array([3.5])).to_bytes()
+    pq.write_table(pa.table({"role": ["user"], "state": pa.array([blob], pa.binary()),
+                             "sketch_kernel": ["moments"]}),
+                   str(states / "part-0.parquet"))
+    for flag in ("--save-states", "--checkpoint"):
+        out = tmp_path / flag.strip("-")
+        proc = _run(["--from-states", str(states), "--sketch", "moments",
+                     "--group-by", "role", flag, str(out)], timeout=120)
+        assert proc.returncode != 0, flag
+        assert f"{flag} has no effect with --from-states" in proc.stderr, (
+            flag, proc.stderr[-500:])
+        assert not out.exists(), flag

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from puddsketch_spark.core import UDDSketch
 from puddsketch_spark.datagen import transcripts
 from puddsketch_spark.spark.agg import (
+    merge_grouped,
     partial_sketches,
     quantile_table,
     sketch_global,
@@ -102,23 +103,32 @@ def test_grouped_matches_exact_within_alpha(spark, tdf):
         assert abs(e - x) / x <= 0.011, (role, q, e, x)
 
 
+def _counted_fill(df, value_col, group_cols, factory):
+    """The weighted fill of ``df`` counted by (group, value): an explicit
+    Tungsten ``groupBy(...).count()`` fed to partial_sketches(weight_col=)
+    and merged per group."""
+    counts = df.groupBy(*group_cols, value_col).count()
+    partials = partial_sketches(counts, value_col, group_cols, factory,
+                                weight_col="count")
+    return merge_grouped(partials, group_cols, type(factory()).from_bytes)
+
+
 def test_pre_aggregate_path_bucket_exact(spark, tdf):
-    """pre_aggregate=True (Tungsten distinct-count -> weighted kernel fill)
-    must produce the SAME sketch as the row-at-a-time path: with no
-    collapses (m=0 = unbounded) the bucket stores are bit-identical, since
-    update and update_weighted increment the same keys by the same totals."""
+    """A counted table's weighted fill (Tungsten distinct-count -> weighted
+    kernel fill) must produce the SAME sketch as the row-at-a-time fill:
+    with no collapses (m=0 = unbounded) the bucket stores are bit-identical,
+    since update and update_weighted increment the same keys by the same
+    totals."""
+    def fac():
+        return UDDSketch(initial_alpha=0.01, m=0)
+
     plain = {
         r.role: UDDSketch.from_bytes(bytes(r.state))
-        for r in sketch_grouped(
-            tdf, "text_len", ["role"],
-            lambda: UDDSketch(initial_alpha=0.01, m=0)).collect()
+        for r in sketch_grouped(tdf, "text_len", ["role"], fac).collect()
     }
     pre = {
         r.role: UDDSketch.from_bytes(bytes(r.state))
-        for r in sketch_grouped(
-            tdf, "text_len", ["role"],
-            lambda: UDDSketch(initial_alpha=0.01, m=0),
-            pre_aggregate=True).collect()
+        for r in _counted_fill(tdf, "text_len", ["role"], fac).collect()
     }
     assert set(plain) == set(pre)
     for role, sk in plain.items():
@@ -127,29 +137,29 @@ def test_pre_aggregate_path_bucket_exact(spark, tdf):
 
 
 def test_pre_aggregate_hll_and_cms(spark, tdf):
-    """HLL ignores weights (duplicate-insensitive) -> identical registers;
-    CMS takes counts -> identical frequency estimates."""
-    from puddsketch_spark.core import CountMinSketch, HLLSketch
+    """HLL and Bloom ignore weights (duplicate-insensitive) -> identical
+    registers / bits; CMS takes counts -> identical counters."""
+    from puddsketch_spark.core import BloomFilter, CountMinSketch, HLLSketch
 
-    for fac in (lambda: HLLSketch(p=12), lambda: CountMinSketch()):
+    for fac in (lambda: HLLSketch(p=12), lambda: CountMinSketch(),
+                lambda: BloomFilter(num_bits=1 << 12, num_hashes=3)):
         a = {r.role: bytes(r.state)
              for r in sketch_grouped(tdf, "turn_idx", ["role"], fac).collect()}
         b = {r.role: bytes(r.state)
-             for r in sketch_grouped(tdf, "turn_idx", ["role"], fac,
-                                     pre_aggregate=True).collect()}
-        assert a == b  # byte-identical states
+             for r in _counted_fill(tdf, "turn_idx", ["role"], fac).collect()}
+        assert a == b, type(fac()).__name__  # byte-identical states
 
 
 def test_pre_aggregate_rejects_rank_kernels(spark, tdf):
-    """KLL compaction samples items — no exact weighted form; the
-    pre-aggregate path must fail loudly, not silently skew ranks."""
+    """KLL compaction samples items — no exact weighted form; a weighted
+    fill must fail loudly, not silently skew ranks."""
     from puddsketch_spark.core import KLLSketch
 
-    with pytest.raises(Exception, match="does not support weighted update"):
-        sketch_grouped(tdf, "text_len", ["role"], lambda: KLLSketch(k=128),
-                       pre_aggregate=True).collect()
-    counts = tdf.groupBy("text_len").count()
-    with pytest.raises(Exception, match="KLLSketch does not support weighted"):
+    counts = tdf.groupBy("role", "text_len").count()
+    with pytest.raises(TypeError, match="does not support weighted update"):
+        partial_sketches(counts, "text_len", ["role"], lambda: KLLSketch(k=128),
+                         weight_col="count")
+    with pytest.raises(TypeError, match="KLLSketch does not support weighted"):
         sketch_global(counts, "text_len", lambda: KLLSketch(k=128),
                       weight_col="count")
 

@@ -158,17 +158,19 @@ def test_theta_distributed_set_ops_vs_exact(spark):
 
 
 def test_theta_pre_aggregate_bucket_identical(spark):
-    """pre_aggregate=True (Tungsten distinct upstream) yields byte-identical
-    theta state to the row path — distinct-count is weight-invariant."""
+    """The weighted fill of a Tungsten-counted table (sketch_global's
+    weight_col) yields byte-identical theta state to the row fill —
+    distinct-count is weight-invariant."""
     from puddsketch_spark.core import ThetaSketch
     from puddsketch_spark.spark.agg import sketch_global
 
     t = transcripts(spark, n_conv=800, avg_turns=8, seed=10)
     df = t.select(F.col("turn_idx").cast("long").alias("v"))
     row = sketch_global(df, "v", lambda: ThetaSketch(k=128), ThetaSketch.from_bytes)
-    pre = sketch_global(df, "v", lambda: ThetaSketch(k=128), ThetaSketch.from_bytes,
-                        pre_aggregate=True)
+    pre = sketch_global(df.groupBy("v").count(), "v", lambda: ThetaSketch(k=128),
+                        ThetaSketch.from_bytes, weight_col="count")
     assert row.same_buckets(pre)
+    assert row.to_bytes() == pre.to_bytes()
 
 
 def test_theta_grouped_states_and_cross_group_set_ops(spark):
