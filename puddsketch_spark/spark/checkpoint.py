@@ -1,58 +1,70 @@
 """Checkpoint / resume for long sketch jobs via per-partition state parquet.
 
 North-rule requirement: jobs resumable from checkpointed per-partition sketch
-state with lineage + bucket-count/collapse metrics per partition. The
-checkpoint is the stage-1 partials DataFrame (group cols + state blob +
-n/buckets/collapses/partition_id) plus a JSON manifest recording input
-lineage, written atomically after the data.
+state with lineage + bucket-count/collapse metrics per partition. Each write
+(the first fill, and every resume that fills missing input) puts its
+stage-1 partials (group cols + state blob + n/buckets/collapses/
+partition_id) in its own hive-style run directory ``sketch_run=<k>``, so a
+row's lineage is (``sketch_run``, ``partition_id``). A JSON manifest,
+rewritten atomically after each run's data, lists the committed runs
+(``runs[k]["scanned"]``: the files run k's scan planned). Every read is one
+parquet scan with an explicit schema, pruned to ``sketch_run < len(runs)``
+by a partition filter: a run that crashed before its manifest rewrite stays
+outside, and the next resume reuses its index and overwrites it.
 
-Two lineage modes, picked automatically:
+* **File-backed input.** The manifest records every completed input file
+  with a (size, mtime) fingerprint. Resume refuses a changed file (resuming
+  would double-count) or a vanished one (resume is defined for append-only
+  inputs), and writes one new run whose scan plans ONLY the missing files —
+  a 99%-done job re-reads ~1% of the input. At Iceberg scale the file list
+  would come from the table snapshot; the mechanism is identical.
+* **Non-file input (generated or in-memory): all-or-nothing.** Without a
+  manifest the input is filled as run 0; with one, run 0 is returned if the
+  input still has the partition count it was written for. One Spark write
+  followed by the manifest never leaves it partly committed.
 
-* **File-level (primary, file-backed sources).** The manifest records every
-  completed input file with a (size, mtime) fingerprint. Resume lists the
-  input's files, verifies fingerprints of already-completed files (a changed
-  file raises instead of silently double-counting; a vanished file raises —
-  resume is defined for append-only inputs), and builds a NEW scan over
-  ONLY the missing files — a 99%-done job re-reads ~1% of the input, not
-  100%. Each resume run is appended to ``manifest["runs"]`` with the exact
-  file set its scan planned, so tests (and operators) can audit what was
-  actually re-read. Crash-safe: partials are only trusted inside the
-  manifest's committed partition-id ranges, so a run that dies between its
-  parquet append and its manifest rewrite leaves orphan rows that every
-  later read EXCLUDES (and the next resume re-runs those files under a
-  fresh id range). At Iceberg scale the file list would come from the table
-  snapshot; the mechanism is identical.
-
-* **Partition-id (fallback, non-file sources such as generated data).** A
-  partition is complete iff its partition_id appears in the checkpoint; the
-  recompute gates inside mapInPandas on TaskContext partition id. This
-  re-scans the full input to recompute the missing slice and is only sound
-  while split planning is unchanged (same partition count, which is
-  verified; same packing, which cannot be — hence file-level is primary).
-
-Contract for the file-level mode: ``df`` must be an unfiltered scan of the
-file-backed table (projections are fine — the resume scan re-reads only the
-columns ``partial_sketches`` prunes to). For derived/filtered inputs pass
-``rebuild_scan(spark, missing_files) -> DataFrame`` reproducing the same
-transformation over a partial file list.
+``df`` must be an unfiltered scan of the file-backed table (projections are
+fine). For derived/filtered inputs pass ``rebuild_scan(spark, missing_files)
+-> DataFrame`` reproducing the same transformation over a file subset; the
+default rebuild refuses columns the missing files lack. The manifest is
+written with local file I/O, so the path must be local (a plain path or a
+``file:`` URI); other schemes are refused before any job.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import Callable, Iterator, Sequence
+import shutil
+from typing import Callable, Sequence
 from urllib.parse import urlparse
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..core.uddsketch import UDDSketch
 from .agg import SketchFactory, merge_grouped, partial_sketches
 
 __all__ = ["write_partials", "resume_partials", "checkpointed_sketch_grouped"]
 
-_VERSION = 3
+_VERSION = 4
+# the run directories' partition column; Spark's file listing skips names
+# that start with "_" or ".", so this one must not
+_RUN = "sketch_run"
+
+
+def checkpoint_dir(path: str) -> str:
+    """The absolute local directory of checkpoint ``path`` (a plain path or a
+    ``file:`` URI); any other scheme raises ValueError."""
+    p = urlparse(path)
+    if p.scheme == "file" and p.netloc in ("", "localhost"):
+        path = p.path
+    elif p.scheme:
+        raise ValueError(
+            f"checkpoint path {path!r} is not local: the manifest is written "
+            "with local file I/O, so pass a local path or a file: URI"
+        )
+    return os.path.abspath(path)
 
 
 def _manifest_path(path: str) -> str:
@@ -70,6 +82,17 @@ def _fingerprint(uri: str) -> dict:
     return {}
 
 
+def _read_manifest(path: str) -> dict:
+    with open(_manifest_path(path)) as f:
+        manifest = json.load(f)
+    if manifest.get("version") != _VERSION:
+        raise ValueError(
+            f"checkpoint at {path} has manifest version {manifest.get('version')}, "
+            f"not {_VERSION} (one directory per run); delete the checkpoint"
+        )
+    return manifest
+
+
 def _write_manifest(path: str, manifest: dict) -> None:
     tmp = _manifest_path(path) + ".tmp"
     with open(tmp, "w") as f:
@@ -77,51 +100,83 @@ def _write_manifest(path: str, manifest: dict) -> None:
     os.replace(tmp, _manifest_path(path))
 
 
+def _write_run(partials: DataFrame, path: str, run: int) -> None:
+    partials.write.mode("overwrite").parquet(f"file:{path}/{_RUN}={run}")
+
+
+def _read_runs(spark: SparkSession, path: str, schema: StructType, runs: int) -> DataFrame:
+    """The committed runs' partials: no job (explicit schema), and the
+    partition filter prunes any uncommitted run directory."""
+    schema = StructType(schema.fields + [StructField(_RUN, IntegerType())])
+    return spark.read.schema(schema).parquet(f"file:{path}").where(F.col(_RUN) < runs)
+
+
 def write_partials(
     partials: DataFrame,
     path: str,
-    num_input_partitions: int,
-    completed_ids: list[int] | None = None,
+    num_input_partitions: int | None,
     input_files: Sequence[str] | None = None,
 ) -> None:
-    """Write partial states + manifest.
+    """Start a checkpoint at ``path``: replace whatever is there with
+    ``partials`` as run 0, then write the manifest.
 
-    ``input_files`` records file-level lineage (primary resume mode).
-    ``completed_ids`` records partitions known processed even when they
-    produced zero rows (empty partitions leave no parquet trace, so
-    presence-in-parquet alone can never mark a checkpoint complete).
+    ``input_files`` records file-level lineage. Without it the checkpoint
+    serves a non-file input, which resume_partials checks against
+    ``num_input_partitions``.
     """
-    partials.write.mode("overwrite").parquet(path)
+    path = checkpoint_dir(path)
+    if _RUN in partials.columns:
+        raise ValueError(f"column {_RUN!r} is reserved for the checkpoint's run directories")
+    shutil.rmtree(path, ignore_errors=True)
+    _write_run(partials, path, 0)
     _write_manifest(
         path,
         {
             "version": _VERSION,
             "num_input_partitions": num_input_partitions,
-            "completed": sorted(completed_ids or []),
             "files": {f: _fingerprint(f) for f in (input_files or [])},
             "runs": [{"scanned": sorted(input_files or [])}],
-            "next_pid_base": num_input_partitions,
-            # partition_id ranges whose partials the manifest vouches for; a
-            # crash BETWEEN a resume append and the manifest rewrite leaves
-            # orphan rows outside every committed range, and the read path
-            # filters them out instead of double-counting
-            "committed_ranges": [[0, num_input_partitions]],
         },
     )
 
 
-def _committed_partials(spark: SparkSession, path: str, manifest: dict) -> DataFrame:
-    """Read the checkpoint parquet restricted to manifest-committed
-    partition-id ranges (orphan rows from crashed appends are excluded)."""
-    df = spark.read.parquet(path)
-    ranges = manifest.get("committed_ranges")
-    if not ranges:
-        return df
-    cond = None
-    for lo, hi in ranges:
-        c = (F.col("partition_id") >= int(lo)) & (F.col("partition_id") < int(hi))
-        cond = c if cond is None else (cond | c)
-    return df.where(cond)
+def _default_rebuild(
+    spark: SparkSession, df: DataFrame, input_files: list[str], missing: list[str]
+) -> DataFrame:
+    """A plain parquet read of the missing leaf files with ``df``'s schema.
+
+    It CANNOT reconstruct hive-partition directory columns (they would
+    silently become NULL groups), non-parquet sources, or columns derived
+    after the read (NULL too) — those raise, asking for rebuild_scan. Only
+    directory segments BELOW the scan root count: an ancestor like
+    /warehouse/env=prod/ is not partitioning."""
+    paths = [urlparse(f_uri).path for f_uri in input_files]
+    root = os.path.commonpath([os.path.dirname(p) for p in paths])
+    if any(
+        "=" in seg
+        for f_uri in missing
+        for seg in os.path.dirname(urlparse(f_uri).path)[len(root):].split("/")
+    ):
+        raise ValueError(
+            "input looks hive-partitioned (key=value directories below "
+            "the scan root); the default missing-file rebuild would NULL "
+            "the partition columns — pass rebuild_scan reproducing the "
+            "full read"
+        )
+    if not all(urlparse(f_uri).path.endswith(".parquet") for f_uri in missing):
+        raise ValueError(
+            "input files are not parquet; pass rebuild_scan reproducing "
+            "the original source read over a file subset"
+        )
+    stored = set(spark.read.parquet(*missing).columns)
+    derived = [c for c in df.columns if c not in stored]
+    if derived:
+        raise ValueError(
+            f"input columns {derived} are not in the missing files; the "
+            "default missing-file rebuild would read them as NULL — pass "
+            "rebuild_scan reproducing the input's transformation"
+        )
+    return spark.read.schema(df.schema).parquet(*missing)
 
 
 def resume_partials(
@@ -133,44 +188,40 @@ def resume_partials(
     factory: SketchFactory = UDDSketch,
     rebuild_scan: Callable[[SparkSession, list[str]], DataFrame] | None = None,
 ) -> DataFrame:
-    """Return complete partials, computing only the missing input.
+    """Return the committed runs' partials, first filling what the
+    checkpoint at ``path`` lacks.
 
-    File-backed input -> file-level lineage: the resume job's scan is built
-    from ONLY the files absent from the manifest. Non-file input -> the
-    partition-id fallback documented in the module docstring. If no
-    checkpoint exists, builds everything and writes one.
+    No checkpoint: fill ``df`` and write it as run 0. File-backed input
+    with files absent from the manifest: fill ONLY those files (through
+    ``rebuild_scan`` when given) as one new run. Otherwise no job runs.
+    The returned partials carry a ``sketch_run`` column next to
+    ``partition_id``.
     """
+    path = checkpoint_dir(path)
+    if _RUN in group_cols:
+        raise ValueError(f"group column {_RUN!r} is reserved for the checkpoint's run directories")
+    partials = partial_sketches(df, value_col, group_cols, factory)
     input_files = sorted(df.inputFiles())
-    if input_files:
-        return _resume_files(
-            spark, df, value_col, group_cols, path, factory, input_files, rebuild_scan
-        )
-    return _resume_partition_ids(spark, df, value_col, group_cols, path, factory)
-
-
-def _resume_files(
-    spark: SparkSession,
-    df: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str],
-    path: str,
-    factory: SketchFactory,
-    input_files: list[str],
-    rebuild_scan: Callable[[SparkSession, list[str]], DataFrame] | None,
-) -> DataFrame:
-    n_parts = df.rdd.getNumPartitions()
+    # getNumPartitions plans df (running any shuffle under AQE): only the
+    # non-file check needs it
+    n_parts = None if input_files else df.rdd.getNumPartitions()
     if not os.path.exists(_manifest_path(path)):
-        partials = partial_sketches(df, value_col, group_cols, factory)
         write_partials(partials, path, n_parts, input_files=input_files)
-        return spark.read.parquet(path)
+        return _read_runs(spark, path, partials.schema, 1)
 
-    with open(_manifest_path(path)) as f:
-        manifest = json.load(f)
-    known = manifest.get("files", {})
-    if not known:
+    manifest = _read_manifest(path)
+    known = manifest["files"]
+    if bool(known) != bool(input_files):
+        kinds = ("file-backed", "non-file") if known else ("non-file", "file-backed")
         raise ValueError(
-            f"checkpoint at {path} has partition-id lineage but the input is "
-            "file-backed; delete the checkpoint to switch lineage modes"
+            f"checkpoint at {path} was written for a {kinds[0]} input but the "
+            f"input is {kinds[1]}; delete the checkpoint to switch lineage modes"
+        )
+    if not input_files and manifest["num_input_partitions"] != n_parts:
+        raise ValueError(
+            f"checkpoint at {path} was written for {manifest['num_input_partitions']} "
+            f"input partitions, input now has {n_parts}; split planning changed — "
+            "delete the checkpoint or pin spark.sql.files.maxPartitionBytes"
         )
     for f_uri in input_files:
         if f_uri in known and known[f_uri] and known[f_uri] != _fingerprint(f_uri):
@@ -188,131 +239,17 @@ def _resume_files(
             "defined for append-only inputs)"
         )
     missing = [f_uri for f_uri in input_files if f_uri not in known]
-    if not missing:
-        return _committed_partials(spark, path, manifest)
-
-    # THE point of file-level lineage: the recompute scan plans ONLY the
-    # missing files — completed input is never re-read
-    if rebuild_scan is not None:
-        missing_df = rebuild_scan(spark, missing)
-    else:
-        # the default rebuild is a plain parquet read of the leaf files; it
-        # CANNOT reconstruct hive-partition directory columns (they would
-        # silently become NULL groups) or non-parquet sources — demand an
-        # explicit rebuild_scan for those. Only directory segments BELOW the
-        # scan root count: an ancestor like /warehouse/env=prod/ is not
-        # partitioning.
-        paths = [urlparse(f_uri).path for f_uri in input_files]
-        root = os.path.commonpath([os.path.dirname(p) for p in paths]) if paths else ""
-        if any(
-            "=" in seg
-            for f_uri in missing
-            for seg in os.path.dirname(urlparse(f_uri).path)[len(root):].split("/")
-        ):
-            raise ValueError(
-                "input looks hive-partitioned (key=value directories below "
-                "the scan root); the default missing-file rebuild would NULL "
-                "the partition columns — pass rebuild_scan reproducing the "
-                "full read"
-            )
-        if not all(urlparse(f_uri).path.endswith(".parquet") for f_uri in missing):
-            raise ValueError(
-                "input files are not parquet; pass rebuild_scan reproducing "
-                "the original source read over a file subset"
-            )
-        missing_df = spark.read.schema(df.schema).parquet(*missing)
-    pid_base = int(manifest.get("next_pid_base", 0))
-    existing = spark.read.parquet(path)
-    max_pid = existing.agg(F.max("partition_id")).first()[0]
-    if max_pid is not None and max_pid >= pid_base:
-        # orphan rows from a resume that crashed after its append but before
-        # its manifest rewrite: leave them outside every committed range and
-        # start this run's ids above them
-        pid_base = int(max_pid) + 1
-    fresh = partial_sketches(missing_df, value_col, group_cols, factory).withColumn(
-        "partition_id", (F.col("partition_id") + F.lit(pid_base)).cast("int")
-    )
-    fresh.write.mode("append").parquet(path)
-    # commit the range from the ids ACTUALLY WRITTEN, not a re-planned
-    # getNumPartitions() (AQE can re-plan a rebuild_scan's shuffle between
-    # the write and a later evaluation, and an undersized range would
-    # silently exclude committed rows)
-    written_max = (
-        spark.read.parquet(path)
-        .where(F.col("partition_id") >= pid_base)
-        .agg(F.max("partition_id"))
-        .first()[0]
-    )
-    hi = (int(written_max) + 1) if written_max is not None else pid_base
-    known.update({f_uri: _fingerprint(f_uri) for f_uri in missing})
-    manifest["files"] = known
-    manifest.setdefault("runs", []).append({"scanned": sorted(missing_df.inputFiles())})
-    manifest.setdefault("committed_ranges", [[0, int(manifest.get("next_pid_base", 0))]])
-    manifest["committed_ranges"].append([pid_base, hi])
-    manifest["next_pid_base"] = hi
-    _write_manifest(path, manifest)
-    return _committed_partials(spark, path, manifest)
-
-
-def _resume_partition_ids(
-    spark: SparkSession,
-    df: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str],
-    path: str,
-    factory: SketchFactory,
-) -> DataFrame:
-    n_parts = df.rdd.getNumPartitions()
-    if not os.path.exists(_manifest_path(path)):
-        partials = partial_sketches(df, value_col, group_cols, factory)
-        write_partials(partials, path, n_parts, completed_ids=list(range(n_parts)))
-        return spark.read.parquet(path)
-
-    with open(_manifest_path(path)) as f:
-        manifest = json.load(f)
-    if manifest.get("files"):
-        raise ValueError(
-            f"checkpoint at {path} has file lineage but the input is not "
-            "file-backed; delete the checkpoint to switch lineage modes"
-        )
-    if manifest["num_input_partitions"] != n_parts:
-        raise ValueError(
-            f"checkpoint at {path} was written for {manifest['num_input_partitions']} "
-            f"input partitions, input now has {n_parts}; split planning changed — "
-            "delete the checkpoint or pin spark.sql.files.maxPartitionBytes"
-        )
-    existing = spark.read.parquet(path)
-    done_ids = {r[0] for r in existing.select("partition_id").distinct().collect()}
-    done_ids |= set(manifest.get("completed", []))
-    missing = sorted(set(range(n_parts)) - done_ids)
-    if not missing:
-        return existing
-    missing_set = set(missing)
-
-    # recompute only missing partitions: the gate runs in the same narrow
-    # chain (partition indices preserved), so completed partitions emit
-    # nothing. Their input is still scanned — acceptable only because this
-    # fallback serves non-file sources (generated data) where a "scan" is
-    # the generator itself; file-backed inputs take _resume_files.
-    from pyspark import TaskContext
-
-    def gate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        if pid not in missing_set:
-            return
-        yield from batches
-
-    pruned = df.select(*group_cols, value_col)
-    gated = pruned.mapInPandas(gate, schema=pruned.schema)
-    fresh = partial_sketches(gated, value_col, group_cols, factory)
-    fresh.write.mode("append").parquet(path)
-    # record the recomputed partitions as complete — empty partitions leave
-    # no rows, so the parquet alone can never prove completeness
-    manifest["completed"] = sorted(done_ids | missing_set)
-    manifest["version"] = _VERSION
-    _write_manifest(path, manifest)
-    return spark.read.parquet(path)
+    if missing:
+        # THE point of file-level lineage: the new run's scan plans ONLY the
+        # missing files — completed input is never re-read
+        missing_df = (rebuild_scan(spark, missing) if rebuild_scan is not None
+                      else _default_rebuild(spark, df, input_files, missing))
+        _write_run(partial_sketches(missing_df, value_col, group_cols, factory),
+                   path, len(manifest["runs"]))
+        known.update({f_uri: _fingerprint(f_uri) for f_uri in missing})
+        manifest["runs"].append({"scanned": sorted(missing_df.inputFiles())})
+        _write_manifest(path, manifest)
+    return _read_runs(spark, path, partials.schema, len(manifest["runs"]))
 
 
 def checkpointed_sketch_grouped(

@@ -5,7 +5,7 @@ Usage (cluster):
         --input s3://bucket/transcripts --feature text_len \
         --group-by role tool --quantiles 0.5 0.9 0.99 0.999 \
         --alpha 0.01 --max-buckets 200 \
-        --checkpoint s3://bucket/ckpt/run1 --output s3://bucket/out/run1
+        --checkpoint /mnt/shared/ckpt/run1 --output s3://bucket/out/run1
 
 Usage (local smoke):
     python scripts/sketch_job.py --generate 1000000 --feature text_len --group-by role
@@ -70,9 +70,12 @@ def parse_args(argv=None):
                    default="uniform",
                    help="--generate: text length distribution (reference set)")
     p.add_argument("--checkpoint",
-                   help="dir for resumable per-partition state (the fill "
-                        "then runs on Arrow partials); needs --group-by; "
-                        "not for --sketch dd")
+                   help="local dir (or file: URI) for resumable per-partition "
+                        "state (the fill then runs on Arrow partials): an "
+                        "--input resume fills only the files added since; a "
+                        "--generate input is checkpointed all-or-nothing; "
+                        "needs --group-by; not for --sketch dd or --feature "
+                        "latency_s")
     p.add_argument("--save-states",
                    help="also write the merged per-group sketch STATE table "
                         "(parquet, binary state column) — the incremental-"
@@ -168,6 +171,7 @@ def main(argv=None) -> int:
     from puddsketch_spark.datagen import transcripts
     from puddsketch_spark.spark.agg import (
         _global_quantiles,
+        merge_grouped,
         rollup_states,
         sketch_global,
         sketch_grouped,
@@ -189,6 +193,17 @@ def main(argv=None) -> int:
         raise SystemExit("--checkpoint has no effect on --sketch dd: it fills on "
                          "the JVM bucket histogram, with no per-partition state "
                          "table to resume")
+    if args.checkpoint and args.feature == "latency_s":
+        raise SystemExit("--checkpoint cannot resume --feature latency_s: its "
+                         "window runs over a conversation, and a conversation "
+                         "can span input files")
+    if args.checkpoint:
+        from puddsketch_spark.spark.checkpoint import checkpoint_dir
+
+        try:
+            checkpoint_dir(args.checkpoint)
+        except ValueError as e:
+            raise SystemExit(f"--checkpoint: {e}") from None
     group = list(args.group_by)
     sets = _rollup_sets(args, group)  # None unless a rollup flag was given
     fb = _KERNELS[args.sketch].from_bytes
@@ -237,30 +252,42 @@ def main(argv=None) -> int:
         spark.stop()
         return rc
 
+    def derive(df):
+        """The feature column (and salting) over a transcript read."""
+        if args.feature == "text_len":
+            df = with_text_len(df) if "text" in df.columns else df
+        elif args.feature == "latency_s":
+            df = with_inter_turn_latency(df).where("latency_s is not null")
+        # conv_id: raw column passthrough (distinct-count kernels)
+        if args.salt_buckets > 0:
+            df = salted_repartition(df, ["conv_id"], ["turn_idx", "ts"],
+                                    spark.sparkContext.defaultParallelism * 2,
+                                    args.salt_buckets)
+        return df
+
     if args.generate:
-        df = transcripts(spark, n_conv=max(1, args.generate // 8), seed=args.seed,
-                         length_dist=args.length_dist)
+        raw = transcripts(spark, n_conv=max(1, args.generate // 8), seed=args.seed,
+                          length_dist=args.length_dist)
     else:
-        df = spark.read.parquet(args.input)
-    if args.feature == "text_len":
-        df = with_text_len(df) if "text" in df.columns else df
-    elif args.feature == "latency_s":
-        df = with_inter_turn_latency(df).where("latency_s is not null")
-    # conv_id: raw column passthrough (distinct-count kernels)
-    if args.salt_buckets > 0:
-        df = salted_repartition(df, ["conv_id"], ["turn_idx", "ts"],
-                                spark.sparkContext.defaultParallelism * 2,
-                                args.salt_buckets)
+        raw = spark.read.parquet(args.input)
+    df = derive(raw)
+
+    def rebuild(spark_, files):
+        """derive over the input files a resume finds new (the default
+        rebuild refuses a column derived after the read, like text_len)."""
+        return derive(spark_.read.schema(raw.schema)
+                      .option("basePath", args.input).parquet(*files))
 
     merged = None  # grouped state table, when the chosen path produces one
 
     def fill_grouped(factory):
         """The grouped Arrow fill, resumable from --checkpoint when given."""
         if args.checkpoint:
-            from puddsketch_spark.spark.checkpoint import checkpointed_sketch_grouped
+            from puddsketch_spark.spark.checkpoint import resume_partials
 
-            return checkpointed_sketch_grouped(
-                spark, df, args.feature, group, args.checkpoint, factory, fb)
+            return merge_grouped(resume_partials(
+                spark, df, args.feature, group, args.checkpoint, factory,
+                rebuild_scan=rebuild), group, fb)
         return sketch_grouped(df, args.feature, group, factory, fb)
 
     if args.sketch == "udds" and args.compat:

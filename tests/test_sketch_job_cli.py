@@ -8,8 +8,11 @@ Arrow fill of the same generated input, global --sketch kll/tdigest,
 grouped --sketch hll/theta resuming from --checkpoint, global --sketch
 udds --compat, NULL (never NaN) statistics of a one-value --from-states
 moments table, a global --checkpoint or a --sketch dd --checkpoint
-refused where the job would ignore them, and --save-states or
---checkpoint refused with --from-states.
+refused where the job would ignore them, --save-states or
+--checkpoint refused with --from-states, a --feature text_len
+--checkpoint resume after an appended file equal to a fill without
+--checkpoint, and a non-local or --feature latency_s --checkpoint
+refused before any Spark work.
 """
 
 import json
@@ -172,11 +175,61 @@ def test_sketch_job_grouped_checkpoint_hll_theta(tmp_path):
                 "--group-by", "role"]
         proc = _run([*base, "--checkpoint", str(ckpt)])
         assert proc.returncode == 0, (sketch, proc.stderr[-2000:])
-        assert ckpt.is_dir() and any(p.suffix == ".parquet" for p in ckpt.iterdir()), sketch
+        assert ckpt.is_dir() and any(ckpt.rglob("*.parquet")), sketch
         plain = _run(base)
         assert plain.returncode == 0, (sketch, plain.stderr[-2000:])
         key = lambda r: r["role"]  # noqa: E731
         assert sorted(_rows(proc), key=key) == sorted(_rows(plain), key=key), sketch
+
+
+def test_sketch_job_text_len_checkpoint_resume_after_append(spark, tmp_path):
+    """The default --feature text_len is derived after the read, so the
+    resume re-derives it for the appended file: a --checkpoint run over 3
+    files, then a resume after a 4th lands, equals a fill of all 4 without
+    --checkpoint (--max-buckets 0: the Arrow and JVM fills agree exactly)."""
+    from puddsketch_spark.datagen import transcripts
+
+    src = tmp_path / "src"
+    (transcripts(spark, n_conv=400, avg_turns=6, seed=7)
+     .select("conv_id", "role", "text").repartition(4).write.parquet(str(src)))
+    last = sorted(src.glob("*.parquet"))[-1]
+    aside = tmp_path / "held_back.parquet"
+    last.rename(aside)
+    qs = [i / 20 for i in range(1, 20)]
+    base = ["--input", str(src), "--feature", "text_len", "--group-by", "role",
+            "--max-buckets", "0", "--quantiles", *map(str, qs)]
+    ckpt = tmp_path / "ckpt"
+
+    def est(args):
+        proc = _run(args)
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        return {(r["role"], r["q"]): r["est"] for r in _rows(proc)}
+
+    first = est([*base, "--checkpoint", str(ckpt)])
+    aside.rename(last)  # the 4th file lands; rename keeps its fingerprint
+    resumed = est([*base, "--checkpoint", str(ckpt)])
+    plain = est(base)
+    assert len(plain) >= 3 * len(qs)  # every quantile of at least 3 roles
+    assert first != plain  # the appended file moves the estimates
+    assert resumed == plain
+    with open(ckpt / "_sketch_manifest.json") as f:
+        assert [len(r["scanned"]) for r in json.load(f)["runs"]] == [3, 1]
+
+
+def test_sketch_job_checkpoint_refusals(tmp_path):
+    """--checkpoint is refused before any Spark work when its path is not
+    local (the manifest is written with local file I/O) or with --feature
+    latency_s (its window runs over a conversation, which can span files)."""
+    ckpt = tmp_path / "ckpt"
+    for extra, msg in (
+        (["--checkpoint", "s3://bucket/ckpt"], "is not local"),
+        (["--feature", "latency_s", "--checkpoint", str(ckpt)],
+         "cannot resume --feature latency_s"),
+    ):
+        proc = _run(["--generate", "2000", "--group-by", "role", *extra], timeout=120)
+        assert proc.returncode != 0, extra
+        assert msg in proc.stderr, (extra, proc.stderr[-500:])
+    assert not ckpt.exists()
 
 
 def test_sketch_job_dd_checkpoint_refused(tmp_path):

@@ -275,32 +275,34 @@ def test_latency_feature(spark):
 
 
 def test_checkpoint_resume_equals_uninterrupted(spark, tdf, tmp_path):
-    path = str(tmp_path / "ckpt")
-    full = partial_sketches(tdf, "text_len", ["role"], _factory)
-    n_parts = tdf.rdd.getNumPartitions()
-    # simulate a crash: persist only partitions < half
-    partial_half = full.where(F.col("partition_id") < n_parts // 2)
-    write_partials(partial_half, path, n_parts)
-    resumed = resume_partials(spark, tdf, "text_len", ["role"], path, _factory)
-    # resumed partials cover every partition exactly once
-    per_pid = resumed.groupBy("partition_id", "role").count().collect()
-    assert all(r["count"] == 1 for r in per_pid)
-    assert {r.partition_id for r in resumed.select("partition_id").distinct().collect()} == set(
-        range(n_parts)
-    )
-    # and the merged result equals the uninterrupted run
-    def merge_all(df):
-        sk = None
-        for r in df.select("state").collect():
-            s = UDDSketch.from_bytes(bytes(r[0]))
-            sk = s if sk is None else sk.merge(s)
-        return sk
+    """Non-file input checkpoints all-or-nothing: the first call fills and
+    writes run 0, a second call returns those partials (equal to an
+    uninterrupted fill) with no new run, and a changed partition count or
+    a switch to file-backed input is refused."""
+    import json
 
-    a, b = merge_all(resumed), merge_all(full)
+    path = str(tmp_path / "ckpt")
+    first = resume_partials(spark, tdf, "text_len", ["role"], path, _factory)
+    resumed = resume_partials(spark, tdf, "text_len", ["role"], path, _factory)
+    with open(f"{path}/_sketch_manifest.json") as f:
+        manifest = json.load(f)
+    assert manifest["runs"] == [{"scanned": []}] and manifest["files"] == {}
+    assert sorted(resumed.collect()) == sorted(first.collect())
+    full = partial_sketches(tdf, "text_len", ["role"], _factory)
+    a, b = _merge_all(resumed), _merge_all(full)
     c = max(a.num_collapses, b.num_collapses)
     a.collapse(c - a.num_collapses)
     b.collapse(c - b.num_collapses)
     assert a.same_buckets(b)
+    n_parts = tdf.rdd.getNumPartitions()
+    with pytest.raises(ValueError, match="split planning changed"):
+        resume_partials(spark, tdf.repartition(n_parts + 1), "text_len", ["role"],
+                        path, _factory)
+    src = str(tmp_path / "src")
+    tdf.select("role", "text_len").write.parquet(src)
+    with pytest.raises(ValueError, match="switch lineage modes"):
+        resume_partials(spark, spark.read.parquet(src), "text_len", ["role"],
+                        path, _factory)
 
 
 def test_jvm_engine_bit_parity(spark, tdf):
@@ -372,8 +374,8 @@ def test_checkpoint_file_lineage_scans_only_missing_files(spark, tmp_path):
     # the resume run's scan planned exactly the two missing files
     assert sorted(manifest["runs"][-1]["scanned"]) == all_files[2:]
     assert set(manifest["files"]) == set(all_files)
-    # per-(partition, group) states appear exactly once (no double-count)
-    per_pid = resumed.groupBy("partition_id", "role").count().collect()
+    # per-(run, partition, group) states appear exactly once (no double-count)
+    per_pid = resumed.groupBy("sketch_run", "partition_id", "role").count().collect()
     assert all(r["count"] == 1 for r in per_pid)
     # resumed == uninterrupted, bucket-for-bucket
     full = partial_sketches(full_df, "text_len", ["role"], _factory)
@@ -469,13 +471,13 @@ def test_checkpoint_rejects_shrunk_input(spark, tmp_path):
 
 
 def test_checkpoint_survives_crash_between_append_and_manifest(spark, tmp_path):
-    """A resume that died AFTER appending its partials but BEFORE rewriting
-    the manifest must not double-count: its orphan rows sit outside every
-    committed partition-id range, the next resume re-runs the files under a
-    fresh range, and the merged result equals the uninterrupted run."""
+    """A resume that died AFTER writing its run directory but BEFORE
+    rewriting the manifest must not double-count: the orphan run is outside
+    the committed runs every read is pruned to, the next resume reuses its
+    index and overwrites it, and the merged result equals the uninterrupted
+    run."""
     import json
-
-    from pyspark.sql import functions as F
+    import os
 
     src = str(tmp_path / "src5")
     t = transcripts(spark, n_conv=300, avg_turns=5, seed=19)
@@ -484,31 +486,35 @@ def test_checkpoint_survives_crash_between_append_and_manifest(spark, tmp_path):
     files = sorted(full_df.inputFiles())
     ckpt = str(tmp_path / "ckpt_crash")
     part_df = spark.read.schema(full_df.schema).parquet(*files[:2])
-    resume_partials(spark, part_df, "text_len", ["role"], ckpt, _factory)
+    committed = resume_partials(spark, part_df, "text_len", ["role"], ckpt, _factory)
+    n_committed = committed.count()
 
-    # emulate the crashed resume: append the third file's partials with the
-    # pid offset a real resume would use, but leave the manifest untouched
-    with open(f"{ckpt}/_sketch_manifest.json") as f:
-        manifest = json.load(f)
-    base = manifest["next_pid_base"]
+    # emulate the crashed resume: write the third file's partials as run 1,
+    # leave the manifest untouched
     crashed_df = spark.read.schema(full_df.schema).parquet(files[2])
-    orphans = partial_sketches(crashed_df, "text_len", ["role"], _factory).withColumn(
-        "partition_id", (F.col("partition_id") + F.lit(base)).cast("int")
-    )
-    orphans.write.mode("append").parquet(ckpt)
+    partial_sketches(crashed_df, "text_len", ["role"], _factory).write.parquet(
+        f"{ckpt}/sketch_run=1")
+    orphan_files = _parquet_files(f"{ckpt}/sketch_run=1")
+    # the orphan is excluded: a no-op read over the committed files
+    again = resume_partials(spark, part_df, "text_len", ["role"], ckpt, _factory)
+    assert again.count() == n_committed
+    assert {r.sketch_run for r in again.select("sketch_run").collect()} == {0}
 
     resumed = resume_partials(spark, full_df, "text_len", ["role"], ckpt, _factory)
     full = partial_sketches(full_df, "text_len", ["role"], _factory)
     a, b = _merge_all(resumed), _merge_all(full)
-    assert a.count == b.count  # no double count despite the orphan rows
+    assert a.count == b.count  # no double count despite the orphan run
     c = max(a.num_collapses, b.num_collapses)
     a.collapse(c - a.num_collapses)
     b.collapse(c - b.num_collapses)
     assert a.same_buckets(b)
-    # the recovery run re-used a FRESH id range above the orphans
+    # the recovery run reused index 1 and overwrote the orphan's files
     with open(f"{ckpt}/_sketch_manifest.json") as f:
         m2 = json.load(f)
-    assert m2["committed_ranges"][-1][0] > base
+    assert [r["scanned"] for r in m2["runs"]] == [files[:2], files[2:]]
+    assert not orphan_files & _parquet_files(f"{ckpt}/sketch_run=1")
+    assert sorted(os.listdir(ckpt)) == [
+        "_sketch_manifest.json", "sketch_run=0", "sketch_run=1"]
 
 
 def test_checkpoint_default_rebuild_rejects_hive_partitions(spark, tmp_path):
@@ -527,6 +533,147 @@ def test_checkpoint_default_rebuild_rejects_hive_partitions(spark, tmp_path):
     resume_partials(spark, part, "text_len", [], ckpt, _factory)
     with pytest.raises(ValueError, match="hive-partitioned"):
         resume_partials(spark, full, "text_len", [], ckpt, _factory)
+
+
+def _parquet_files(d):
+    import os
+
+    return {f for f in os.listdir(d) if f.endswith(".parquet")}
+
+
+def _jobs(spark, group, fn):
+    """fn()'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _hold_back_last_file(spark, src, tmp_path):
+    """Move the last data file of ``src`` aside; returns the function that
+    appends it again (rename keeps its fingerprint)."""
+    import os
+    from urllib.parse import urlparse
+
+    last = urlparse(sorted(spark.read.parquet(src).inputFiles())[-1]).path
+    aside = str(tmp_path / "held_back.parquet")
+    os.rename(last, aside)
+    return lambda: os.rename(aside, last)
+
+
+def test_checkpoint_resume_job_counts(spark, tmp_path):
+    """A resume over one appended file runs at most 2 Spark jobs (the
+    missing files' schema and the new run's write); a no-op resume over
+    file-backed input runs none: every checkpoint read has an explicit
+    schema and the manifest, not a job, says which runs are committed."""
+    src = str(tmp_path / "src7")
+    t = transcripts(spark, n_conv=200, avg_turns=4, seed=29)
+    with_text_len(t).select("role", "text_len").repartition(4).write.parquet(src)
+    append = _hold_back_last_file(spark, src, tmp_path)
+    ckpt = str(tmp_path / "ckpt_jobs")
+    resume_partials(spark, spark.read.parquet(src), "text_len", ["role"], ckpt, _factory)
+    append()
+    full = spark.read.parquet(src)
+    resumed, n_append = _jobs(spark, "ckpt-append", lambda: resume_partials(
+        spark, full, "text_len", ["role"], ckpt, _factory))
+    again, n_noop = _jobs(spark, "ckpt-noop", lambda: resume_partials(
+        spark, full, "text_len", ["role"], ckpt, _factory))
+    assert n_append <= 2 and n_noop == 0, (n_append, n_noop)
+    assert sorted(again.collect()) == sorted(resumed.collect())
+    a, b = _merge_all(resumed), sketch_global(full, "text_len", _factory)
+    assert a.count == b.count
+
+
+def test_checkpoint_refuses_v3_manifest(spark, tdf, tmp_path):
+    """A manifest of the earlier flat layout (version 3: partition-id
+    ranges, no run directories) is refused, asking for a delete."""
+    import json
+
+    ckpt = tmp_path / "ckpt_v3"
+    ckpt.mkdir()
+    (ckpt / "_sketch_manifest.json").write_text(json.dumps({
+        "version": 3, "num_input_partitions": 8, "completed": [], "files": {},
+        "runs": [{"scanned": []}], "next_pid_base": 8, "committed_ranges": [[0, 8]]}))
+    with pytest.raises(ValueError, match="version 3.*delete the checkpoint"):
+        resume_partials(spark, tdf, "text_len", ["role"], str(ckpt), _factory)
+
+
+def test_checkpoint_default_rebuild_refuses_derived_columns(spark, tmp_path):
+    """The default rebuild reads the missing files with the input's schema,
+    so a column derived after the read (with_text_len's text_len) would be
+    NULL for their rows. It is refused, naming the column, before the new
+    run is written. A salted input passes: salted_repartition drops its
+    _salt column, so its columns are the files' own."""
+    import json
+    import os
+
+    src = str(tmp_path / "src8")
+    t = transcripts(spark, n_conv=200, avg_turns=4, seed=31)
+    t.select("role", "text").repartition(4).write.parquet(src)
+    append = _hold_back_last_file(spark, src, tmp_path)
+    ckpt = str(tmp_path / "ckpt_derived_default")
+    resume_partials(spark, with_text_len(spark.read.parquet(src)), "text_len", ["role"],
+                    ckpt, _factory)
+    append()
+    with pytest.raises(ValueError, match=r"\['text_len'\] are not in the missing files"):
+        resume_partials(spark, with_text_len(spark.read.parquet(src)), "text_len",
+                        ["role"], ckpt, _factory)
+    assert sorted(os.listdir(ckpt)) == ["_sketch_manifest.json", "sketch_run=0"]
+    with open(f"{ckpt}/_sketch_manifest.json") as f:
+        assert len(json.load(f)["runs"]) == 1
+
+    salted_src = str(tmp_path / "src8_salted")
+    (with_text_len(t).select("conv_id", "turn_idx", "ts", "role", "text_len")
+     .repartition(4).write.parquet(salted_src))
+    append = _hold_back_last_file(spark, salted_src, tmp_path)
+
+    def salted():
+        return salted_repartition(spark.read.parquet(salted_src), ["conv_id"],
+                                  ["turn_idx", "ts"], 4, 4)
+
+    ckpt = str(tmp_path / "ckpt_salted")
+    resume_partials(spark, salted(), "text_len", ["role"], ckpt, _factory)
+    append()
+    resumed = resume_partials(spark, salted(), "text_len", ["role"], ckpt, _factory)
+    a = _merge_all(resumed)
+    b = sketch_global(spark.read.parquet(salted_src), "text_len", _factory)
+    c = max(a.num_collapses, b.num_collapses)
+    a.collapse(c - a.num_collapses)
+    b.collapse(c - b.num_collapses)
+    assert a.count == b.count and a.same_buckets(b)
+
+
+def test_checkpoint_path_must_be_local(spark, tdf, tmp_path):
+    """The manifest is written with local file I/O, so a checkpoint path
+    with another scheme is refused before any job runs or any directory is
+    made; a file: URI names the local path. A group column named like the
+    run directories' partition column is refused before any job too."""
+    import os
+
+    ckpt = tmp_path / "ckpt_local"
+    for bad in ("s3://bucket/ckpt", f"hdfs://namenode{ckpt}"):
+        with pytest.raises(ValueError, match="is not local"):
+            _jobs(spark, f"ckpt-bad-{bad[:2]}", lambda: resume_partials(
+                spark, tdf, "text_len", ["role"], bad, _factory))
+        assert not spark.sparkContext.statusTracker().getJobIdsForGroup(
+            f"ckpt-bad-{bad[:2]}")
+        with pytest.raises(ValueError, match="is not local"):
+            write_partials(partial_sketches(tdf, "text_len", ["role"], _factory), bad, 1)
+    assert not ckpt.exists()
+    with pytest.raises(ValueError, match="reserved"):
+        _jobs(spark, "ckpt-bad-group", lambda: resume_partials(
+            spark, tdf.withColumnRenamed("role", "sketch_run"), "text_len",
+            ["sketch_run"], str(ckpt), _factory))
+    assert not spark.sparkContext.statusTracker().getJobIdsForGroup("ckpt-bad-group")
+    assert not ckpt.exists()
+
+    first = resume_partials(spark, tdf, "text_len", ["role"], f"file://{ckpt}", _factory)
+    assert os.path.exists(ckpt / "_sketch_manifest.json")
+    again = resume_partials(spark, tdf, "text_len", ["role"], str(ckpt), _factory)
+    assert sorted(again.collect()) == sorted(first.collect())
 
 
 def test_salted_join_equals_plain_join(spark):
